@@ -31,9 +31,13 @@ Complete_ReduceTask, Finish_Job.
 Physically this is Spark end-to-end: the shuffle replaces the
 append-mode text files (O6/O7), executor task slots replace the pthread
 pools (O13), and the per-reducer output files come from a dynamic
-partition-by-value text write after a JVM-side (spillable) sort — the
-default path runs no Python worker at all; RDDs appear only under the
-user-supplied ``map_fn``/``custom_reduce`` hooks.
+partition-by-value text write after a JVM-side (spillable) sort. With
+the default hooks no row reaches a Python worker, from the text scan
+(``sources.text.chunked_lines`` reads with ``spark.read.text``) to the
+file write; the only Python-side work is the driver's plan building,
+including one bounded collect of one row per scan block for the line
+index. RDDs and Python workers appear only under the user-supplied
+``map_fn``/``custom_reduce`` hooks.
 """
 
 from __future__ import annotations

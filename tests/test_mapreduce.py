@@ -7,14 +7,17 @@ sort, ``"word count"`` formatting.
 """
 
 import os
+import random
 from collections import Counter
 
 import pytest
+from pyspark.errors import PySparkException
 
 from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.operators.mapreduce import (
     JobConfig,
     run_job,
 )
+from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.sources.text import chunked_lines
 
 LINES = [
     "apple banana apple cherry ",
@@ -227,3 +230,80 @@ def test_event_log_per_task_timings(spark, tmp_path, input_file, locality_file):
     ]
     assert logged_map == [map_ms[i % len(map_ms)] for i in range(len(logged_map))]
     assert logged_red == red_ms
+
+
+def test_empty_input_writes_empty_reducer_files(spark, tmp_path, locality_file):
+    """An empty input file gives an empty chunk frame, R empty reducer
+    files and a well-formed event log."""
+    p = tmp_path / "empty.txt"
+    p.write_text("")
+    cfg = JobConfig(
+        "empty", 3, 0, str(p), 2, locality_file, str(tmp_path / "oe"),
+        drop_trailing_token=True, fuse_chunk_lines=True, partition_fn="first_char",
+    )
+    assert chunked_lines(spark, str(p), 2).collect() == []
+    outputs = run_job(spark, cfg)
+    for r in range(3):
+        with open(outputs[f"reducer_{r + 1}"]) as f:
+            assert f.read() == ""
+    kinds = [l.split(",")[1] for l in open(outputs["log"]).read().splitlines()]
+    assert kinds[0] == "Start_Job" and kinds[-1] == "Finish_Job"
+    assert kinds.count("Complete_MapTask") == 2
+    assert kinds.count("Complete_ReduceTask") == 3
+
+
+def test_chunks_follow_file_order_across_scan_blocks(spark, tmp_path, locality_file):
+    """Chunk ids and line order inside a chunk are the file's order even
+    when the scan is split into many blocks: CRLF line ends, a non-ASCII
+    first character (Q3's ascii must equal Python's ord) and a last line
+    with no trailing newline."""
+    rng = random.Random(7)
+    lines = ["épée un deux"] + [
+        " ".join(rng.choice(["a", "bb", "ccc", "dddd", "été"]) for _ in range(rng.randint(0, 8)))
+        + rng.choice(["", " "])
+        for _ in range(199)
+    ]
+    p = tmp_path / "crlf.txt"
+    with open(p, "w", encoding="utf-8", newline="") as f:
+        f.write("\r\n".join(lines))
+    chunk_size = 7
+    key = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "300")
+    try:
+        blocks = spark.read.text(str(p)).select("_metadata.file_block_start").distinct()
+        assert blocks.count() > 10
+        for fuse in (False, True):
+            sep = "" if fuse else " "
+            want = [
+                (i // chunk_size + 1, sep.join(lines[i : i + chunk_size]))
+                for i in range(0, len(lines), chunk_size)
+            ]
+            got = chunked_lines(spark, str(p), chunk_size, fuse)
+            assert sorted(tuple(r) for r in got.collect()) == want
+        cfg = JobConfig(
+            "crlf", 3, 0, str(p), chunk_size, locality_file, str(tmp_path / "oc"),
+            drop_trailing_token=True, fuse_chunk_lines=True, partition_fn="first_char",
+        )
+        run_job(spark, cfg)
+    finally:
+        spark.conf.set(key, prior)
+    expected = reference_sim(lines, chunk_size, 3, drop_trailing=True, fuse=True)
+    for r in range(3):
+        assert read_out(os.path.join(cfg.output_dir, f"crlf-{r + 1}.out")) == expected[r]
+
+
+def test_chunks_fail_when_scan_blocks_change(spark, tmp_path):
+    """The line index is built for one set of scan blocks; running the
+    frame on other blocks fails rather than misnumbering lines."""
+    p = tmp_path / "lines.txt"
+    p.write_text("".join(f"line {i}\n" for i in range(200)))
+    chunks = chunked_lines(spark, str(p), 5)
+    key = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "300")
+    try:
+        with pytest.raises(PySparkException, match="scan blocks"):
+            chunks.collect()
+    finally:
+        spark.conf.set(key, prior)

@@ -57,7 +57,9 @@ def o11_section(spark) -> str:
         "files on pid and, because pid leads the sort key, inserts no\n"
         "second sort. A hot first-char reducer partition (quirk Q3's\n"
         "skew) spills in the JVM instead of buffering in a Python worker\n"
-        "(round-2 VERDICT fix).\n\n"
+        "(round-2 VERDICT fix). The plan starts at the JVM text scan (O1):\n"
+        "each line's file-ordered index is its monotonically_increasing_id\n"
+        "plus a literal per-block offset map, so no row reaches Python.\n\n"
         f"```\n{buf.getvalue().strip()}\n```\n"
     )
 
