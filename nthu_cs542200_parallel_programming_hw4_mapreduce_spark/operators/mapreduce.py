@@ -34,10 +34,14 @@ pools (O13), and the per-reducer output files come from a dynamic
 partition-by-value text write after a JVM-side (spillable) sort. With
 the default hooks no row reaches a Python worker, from the text scan
 (``sources.text.chunked_lines`` reads with ``spark.read.text``) to the
-file write; the only Python-side work is the driver's plan building,
-including one bounded collect of one row per scan block for the line
-index. RDDs and Python workers appear only under the user-supplied
-``map_fn``/``custom_reduce`` hooks.
+file write; the only Python-side work is the driver's plan building.
+For an input of one scan block (any file up to 4 MB at default
+settings) that building runs no job, and the map side (chunking,
+tokenizing, counting) runs in the scan task, so the pid exchange is
+the job's only shuffle, as in the reference's O1-O7; an input of
+several blocks adds one bounded collect of one row per scan block for
+the line index. RDDs and Python workers appear only under the
+user-supplied ``map_fn``/``custom_reduce`` hooks.
 """
 
 from __future__ import annotations
@@ -52,6 +56,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.text import chunked_lines, read_locality_table
+
+# The thread-local properties ``SparkContext.setJobGroup`` sets.
+_JOB_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
 
 
 @dataclass
@@ -238,38 +245,41 @@ def run_job(spark: SparkSession, cfg: JobConfig) -> dict[str, object]:
 
     t_map = time.time()
     group = f"mr-{cfg.job_name}-{id(cfg)}-{int(t_map * 1000)}"
-    spark.sparkContext.setJobGroup(group, f"faithful mapreduce {cfg.job_name}")
-    result = wordcount_df(spark, cfg)
-    # O8 per-reducer sort + O11 exact file contract — fully JVM-side
-    # (round-2 VERDICT "What's wrong" #1: the old path buffered each
-    # reducer partition through a Python `sorted()`, so a hot first-char
-    # partition — the whole point of Q3 — sat in one Python worker's
-    # memory at 100 TB). Now: one exchange on pid, then Tungsten's
-    # SPILLABLE UnsafeExternalSorter orders (pid, word, cnt) within each
-    # partition, and the dynamic-partitioned text write splits files by
-    # pid VALUE (pid=r/part-*). File↔reducer mapping is by value, not
-    # partition index, so no identity partitioner — and no Python worker
-    # — is needed anywhere on this path. The leading pid sort key also
-    # satisfies the writer's required partition-column ordering, so no
-    # second (order-destroying) sort is inserted; PLANS.md records the
-    # plan shape.
-    order = (
-        [F.col("word").asc(), F.col("cnt").asc()]
-        if cfg.sort_ascending
-        else [F.col("word").desc(), F.col("cnt").desc()]
-    )
-    staged = (
-        result.repartition(cfg.num_reducer, "pid")
-        .sortWithinPartitions(F.col("pid").asc(), *order)
-        .select("pid", F.concat_ws(" ", "word", "cnt").alias("value"))
-    )
-    out_tmp = os.path.join(cfg.output_dir, f"_{cfg.job_name}_parts")
-    if os.path.exists(out_tmp):  # leftover from an interrupted run
-        shutil.rmtree(out_tmp)
+    sc = spark.sparkContext
+    prior = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
+    sc.setJobGroup(group, f"faithful mapreduce {cfg.job_name}")
     try:
+        result = wordcount_df(spark, cfg)
+        # O8 per-reducer sort + O11 exact file contract — fully JVM-side
+        # (round-2 VERDICT "What's wrong" #1: the old path buffered each
+        # reducer partition through a Python `sorted()`, so a hot first-char
+        # partition — the whole point of Q3 — sat in one Python worker's
+        # memory at 100 TB). Now: one exchange on pid, then Tungsten's
+        # SPILLABLE UnsafeExternalSorter orders (pid, word, cnt) within each
+        # partition, and the dynamic-partitioned text write splits files by
+        # pid VALUE (pid=r/part-*). File↔reducer mapping is by value, not
+        # partition index, so no identity partitioner — and no Python worker
+        # — is needed anywhere on this path. The leading pid sort key also
+        # satisfies the writer's required partition-column ordering, so no
+        # second (order-destroying) sort is inserted; PLANS.md records the
+        # plan shape.
+        order = (
+            [F.col("word").asc(), F.col("cnt").asc()]
+            if cfg.sort_ascending
+            else [F.col("word").desc(), F.col("cnt").desc()]
+        )
+        staged = (
+            result.repartition(cfg.num_reducer, "pid")
+            .sortWithinPartitions(F.col("pid").asc(), *order)
+            .select("pid", F.concat_ws(" ", "word", "cnt").alias("value"))
+        )
+        out_tmp = os.path.join(cfg.output_dir, f"_{cfg.job_name}_parts")
+        if os.path.exists(out_tmp):  # leftover from an interrupted run
+            shutil.rmtree(out_tmp)
         staged.write.partitionBy("pid").text(out_tmp)
-    finally:
-        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    finally:  # a build that raises must not leave its group on the thread
+        for k, v in prior.items():
+            sc.setLocalProperty(k, v)
 
     # Per-task ms from the scheduler's own records: last stage = the
     # R-task write (reduce), earlier stages = map work (chunking,

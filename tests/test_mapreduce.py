@@ -6,12 +6,17 @@ tokenizer quirks Q1/Q2, first-char partitioner Q3, ascending/descending
 sort, ``"word count"`` formatting.
 """
 
+import gzip
+import io
 import os
 import random
+import re
 from collections import Counter
+from contextlib import redirect_stdout
 
 import pytest
-from pyspark.errors import PySparkException
+from pyspark.errors import AnalysisException, PySparkException
+from pyspark.sql.readwriter import DataFrameWriter
 
 from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.operators.mapreduce import (
     JobConfig,
@@ -307,3 +312,148 @@ def test_chunks_fail_when_scan_blocks_change(spark, tmp_path):
             chunks.collect()
     finally:
         spark.conf.set(key, prior)
+
+
+def job_ids(spark):
+    """Ids of the ungrouped jobs the status tracker has seen, read once
+    the listener bus has delivered every event posted so far."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(None))
+
+
+def build_jobs(spark, path, chunk_size):
+    """Ids of the jobs that building ``chunked_lines`` over ``path`` starts."""
+    before = job_ids(spark)
+    chunked_lines(spark, path, chunk_size)
+    return job_ids(spark) - before
+
+
+def run_job_plan(spark, cfg, monkeypatch):
+    """Run ``cfg`` and return the formatted physical plan of the frame
+    ``run_job`` writes."""
+    plans = []
+    write = DataFrameWriter.text
+
+    def text(self, *a, **kw):
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            self._df.explain("formatted")
+        plans.append(buf.getvalue())
+        return write(self, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "text", text)
+    run_job(spark, cfg)
+    return plans[0]
+
+
+def exchanges(plan):
+    """The argument line of every Exchange node in a formatted plan."""
+    return re.findall(r"^\(\d+\) Exchange\n(?:Input \[.*\n)?Arguments: (.*)$", plan, re.M)
+
+
+def assert_faithful_output(cfg, lines):
+    expected = reference_sim(lines, cfg.chunk_size, cfg.num_reducer, drop_trailing=True, fuse=True)
+    for r in range(cfg.num_reducer):
+        got = read_out(os.path.join(cfg.output_dir, f"{cfg.job_name}-{r + 1}.out"))
+        assert got == expected[r], f"reducer {r}"
+
+
+def faithful(name, path, chunk_size, locality_file, tmp_path):
+    return JobConfig(
+        name, 3, 0, str(path), chunk_size, locality_file, str(tmp_path / f"o-{name}"),
+        drop_trailing_token=True, fuse_chunk_lines=True, partition_fn="first_char",
+    )
+
+
+def test_failed_build_restores_job_group(spark, tmp_path, locality_file):
+    """A job whose build raises (here a missing input) leaves the
+    thread's job group as it found it, so later jobs are not
+    attributed to the failed one."""
+    sc = spark.sparkContext
+    sc.setJobGroup("outer", "outer work")
+    try:
+        cfg = faithful("missing", tmp_path / "no-such-file.txt", 2, locality_file, tmp_path)
+        with pytest.raises(AnalysisException):
+            run_job(spark, cfg)
+        assert sc.getLocalProperty("spark.jobGroup.id") == "outer"
+        assert sc.getLocalProperty("spark.job.description") == "outer work"
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+
+
+def test_one_block_input_builds_without_jobs(spark, input_file):
+    """The line index of a one-block input needs no count: building the
+    chunk frame starts no Spark job."""
+    assert build_jobs(spark, input_file, 2) == set()
+
+
+def test_one_block_input_shuffles_only_on_pid(spark, tmp_path, input_file, locality_file, monkeypatch):
+    """A one-block input runs its map side (chunking, tokenizing,
+    counting) in the scan task: the pid repartition is the written
+    plan's only exchange, as the reference's map task shuffles once."""
+    cfg = faithful("one", input_file, 2, locality_file, tmp_path)
+    plan = run_job_plan(spark, cfg, monkeypatch)
+    found = exchanges(plan)
+    assert len(found) == 1 and "REPARTITION_BY_NUM" in found[0], found
+    assert "ENSURE_REQUIREMENTS" not in plan
+    assert_faithful_output(cfg, LINES)
+
+
+def test_multi_block_input_keeps_count_job_and_exchanges(spark, tmp_path, locality_file, monkeypatch):
+    """An input of several scan blocks still counts each block's lines
+    in a build-time job and keeps the chunk and word exchanges."""
+    lines = [f"w{i % 13} x{i % 7} " for i in range(200)]
+    p = tmp_path / "many.txt"
+    p.write_text("\n".join(lines) + "\n")
+    cfg = faithful("many", p, 7, locality_file, tmp_path)
+    key = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "300")
+    try:
+        assert build_jobs(spark, str(p), 7)
+        plan = run_job_plan(spark, cfg, monkeypatch)
+    finally:
+        spark.conf.set(key, prior)
+    found = exchanges(plan)
+    assert sum("ENSURE_REQUIREMENTS" in e for e in found) == 2, found
+    assert sum("REPARTITION_BY_NUM" in e for e in found) == 1, found
+    assert_faithful_output(cfg, lines)
+
+
+def test_large_gzip_input_keeps_exchanges(spark, tmp_path, locality_file, monkeypatch):
+    """A gzip file is one block however large, so it needs no count
+    job; but one larger than ``spark.sql.files.maxPartitionBytes`` is
+    not squeezed into one task and keeps its chunk and word exchanges."""
+    rng = random.Random(11)
+    lines = [
+        " ".join(rng.choice(["ab", "cd", "ef", "gh", "ij", "été"]) + str(rng.randint(0, 99)) for _ in range(6)) + " "
+        for _ in range(300)
+    ]
+    p = tmp_path / "big.txt.gz"
+    with gzip.open(p, "wt", encoding="utf-8") as f:
+        f.write("\n".join(lines) + "\n")
+    assert os.path.getsize(p) > 300
+    cfg = faithful("gz", p, 9, locality_file, tmp_path)
+    key = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "300")
+    try:
+        assert build_jobs(spark, str(p), 9) == set()
+        plan = run_job_plan(spark, cfg, monkeypatch)
+    finally:
+        spark.conf.set(key, prior)
+    assert sum("ENSURE_REQUIREMENTS" in e for e in exchanges(plan)) == 2
+    assert_faithful_output(cfg, lines)
+
+
+def test_chunks_of_path_with_space_and_percent(spark, tmp_path):
+    """The one-block index key is the scan's URL-encoded
+    ``_metadata.file_path``; a path that needs encoding still chunks."""
+    lines = [f"l{i} a b" for i in range(10)]
+    p = tmp_path / "in put%25 x.txt"
+    p.write_text("\n".join(lines) + "\n")
+    got = chunked_lines(spark, str(p), 3)
+    want = [(i // 3 + 1, " ".join(lines[i : i + 3])) for i in range(0, 10, 3)]
+    assert sorted(tuple(r) for r in got.collect()) == want
