@@ -59,10 +59,12 @@ def _app_id(spark: SparkSession) -> str:
     return cached
 
 
-#: spread() decisions, memoized per (applicationId, id(df)). The value
-#: keeps a STRONG reference to the key DataFrame so its id() can never
-#: be recycled by the allocator while the entry lives.
-_SPREAD_MEMO: dict[tuple[str, int], tuple[DataFrame, DataFrame]] = {}
+#: spread() decisions, memoized per (applicationId, id(df), parts). The
+#: value keeps a STRONG reference to the key DataFrame so its id() can
+#: never be recycled by the allocator while the entry lives.
+_SPREAD_MEMO: dict[
+    tuple[str, int, int | None], tuple[DataFrame, DataFrame]
+] = {}
 
 
 def spread(df: DataFrame, parts: int | None = None) -> DataFrame:
@@ -85,7 +87,7 @@ def spread(df: DataFrame, parts: int | None = None) -> DataFrame:
     Non-file sources (or remote storage, where the source provides
     splits) pass through untouched."""
     spark = df.sparkSession
-    key = (_app_id(spark), id(df))
+    key = (_app_id(spark), id(df), parts)
     hit = _SPREAD_MEMO.get(key)
     if hit is not None and hit[0] is df:
         return hit[1]

@@ -2824,8 +2824,9 @@ def python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # drain-cost knobs (round-13): the complete-mode agg over 3
     # micro-batches commits one state store per shuffle partition per
-    # batch — 4 partitions instead of the session's 32 cuts that fixed
-    # cost 8×; no event-time watermark, so no-data batches are inert.
+    # batch — the harness's min(4, task slots) instead of the session's
+    # 32 cuts that fixed cost 8× or more; no event-time watermark, so
+    # no-data batches are inert.
     with stream_start_conf(spark, no_data_batches=False):
         q = (
             agg.writeStream.outputMode("complete")

@@ -3255,8 +3255,9 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # append mode: closed sessions emit in the watermark-advancing
     # no-data batch, so it stays ON; the state-partition knob (session
-    # default 32 → 4, see harness_state_partitions) carries the whole
-    # measured win here (18.3 s → 3.6 s same-contention).
+    # default 32 → min(4, task slots), see harness_state_partitions)
+    # carries the whole measured win here (18.3 s → 3.6 s at 32 → 4,
+    # same-contention).
     return run_drained(spark, agg, "append", name)
 
 

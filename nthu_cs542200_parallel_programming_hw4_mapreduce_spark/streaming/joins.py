@@ -79,7 +79,7 @@ def run_clicks_purchases_join(
     spark: SparkSession,
     path: str,
     horizon_minutes: int = 30,
-    state_partitions: int | None = 4,
+    state_partitions: int | None = None,
 ) -> DataFrame:
     """Run the topology to completion through an append-mode memory sink
     (append is the only stream-stream-join output mode; matches emit as
@@ -90,10 +90,13 @@ def run_clicks_purchases_join(
     their per-batch open/commit cost is fixed overhead independent of
     data volume — at fixture scale (100k events) 32 partitions spend
     4× longer committing empty stores than joining (measured 11 s → 3.3 s
-    at 8, ~2.1 s at 4 — flat below that). The knob is the generic shuffle-partition count read at
-    query START, so it is set around ``start()`` and restored; a
-    production run sizes it UP with event volume instead (state
-    partitioning is fixed for the life of a streaming checkpoint).
+    at 8, ~2.1 s at 4 — flat below that). ``None`` takes the drain
+    harness's one-wave rule, ``min(4, defaultParallelism)`` (see
+    ``windows.harness_state_partitions``). The knob is the generic
+    shuffle-partition count read at query START, so it is set around
+    ``start()`` and restored; a production run sizes it UP with event
+    volume instead (state partitioning is fixed for the life of a
+    streaming checkpoint).
     """
     joined = clicks_purchases_join_stream(spark, path, horizon_minutes)
     name = f"stream_join_{next(_sink_counter)}"
@@ -117,7 +120,7 @@ def run_clicks_purchases_left_join(
     spark: SparkSession,
     path: str,
     horizon_minutes: int = 30,
-    state_partitions: int | None = 4,
+    state_partitions: int | None = None,
 ) -> DataFrame:
     """LEFT OUTER variant of the clicks→purchases stream-stream join:
     matched pairs emit as soon as both sides arrive (inner semantics),
@@ -130,7 +133,11 @@ def run_clicks_purchases_left_join(
     purchase_ts) − delay, and the clicks still inside their horizon at
     that point stay buffered, unemitted — the deterministic tail the
     declared query's oracle replays (the streaming_session_window
-    cutoff pattern, two-sided)."""
+    cutoff pattern, two-sided).
+
+    ``state_partitions`` sizes both sides' state stores exactly as in
+    ``run_clicks_purchases_join``: ``None`` takes the harness's
+    ``min(4, defaultParallelism)``."""
     clicks = (
         events_stream(spark, path)
         .filter(F.col("event_type") == "click")

@@ -16,7 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .windows import events_stream
+from .windows import events_stream, run_drained
 
 _sink_counter = __import__("itertools").count()
 
@@ -51,21 +51,9 @@ def running_counts(spark: SparkSession, path: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     name = f"stream_stateful_{next(_sink_counter)}"
-    from .windows import stream_start_conf
-
-    # drain-cost knobs (round-13): per-key Python state rides one state
-    # store per shuffle partition — the 4-partition harness default
-    # (see windows.harness_state_partitions) replaces the session's 32
-    # near-empty store commits; no watermark → no-data batches inert.
-    with stream_start_conf(spark, no_data_batches=False):
-        q = (
-            counts.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).orderBy("event_type")
+    # per-key Python state rides one state store per shuffle partition
+    # (see windows.harness_state_partitions); no watermark → the
+    # trailing no-data batch is inert.
+    return run_drained(
+        spark, counts, "update", name, no_data_batches=False
+    ).orderBy("event_type")

@@ -55,6 +55,18 @@ def test_spread_parallelizes_unsplittable_scan(spark, sf_dir):
     assert a == b
 
 
+def test_spread_memo_honours_parts(spark, sf_dir):
+    """A memo hit must not answer a call with a different ``parts``:
+    the explicit size is part of the memo key."""
+    docs = table(spark, sf_dir, "documents")
+    default = spread(docs)
+    three = spread(docs, parts=3)
+    assert three.rdd.getNumPartitions() == 3
+    # each size keeps its own memo entry
+    assert spread(docs) is default
+    assert spread(docs, parts=3) is three
+
+
 def test_spread_noops_on_wide_frames(spark, sf_dir):
     """A frame that already has enough partitions passes through
     untouched (the production no-op guard: splittable scans arrive

@@ -5,12 +5,18 @@ must never change what a drained topology RETURNS — only what it costs.
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 from pyspark.sql import functions as F
 
+from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.streaming.stateful import (
+    running_counts,
+)
 from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.streaming.windows import (
     events_stream,
     harness_state_partitions,
     run_drained,
+    run_windowed_count,
     stream_start_conf,
 )
 
@@ -43,11 +49,56 @@ def test_stream_start_conf_restores_on_error(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before_parts
 
 
-def test_default_state_partitions_env_override(monkeypatch):
+def test_default_state_partitions_env_override(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "12")
-    assert harness_state_partitions() == 12
+    assert harness_state_partitions(spark) == 12
     monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    assert harness_state_partitions() == 4
+    assert harness_state_partitions(spark) == 4
+
+
+def _slots(n: int) -> SimpleNamespace:
+    """A stand-in session exposing only ``defaultParallelism``."""
+    return SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=n))
+
+
+def test_state_partitions_fit_one_wave_of_task_slots(monkeypatch):
+    """min(4, slots): fewer than 4 slots get one partition per slot (no
+    second wave of state-store tasks); wider sessions keep 4; the env
+    value wins over the rule either way."""
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
+    assert harness_state_partitions(_slots(1)) == 1
+    assert harness_state_partitions(_slots(2)) == 2
+    assert harness_state_partitions(_slots(4)) == 4
+    assert harness_state_partitions(_slots(32)) == 4
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "12")
+    assert harness_state_partitions(_slots(2)) == 12
+    assert harness_state_partitions(_slots(32)) == 12
+
+
+def test_stream_start_conf_default_on_wide_session(spark, monkeypatch):
+    """The suite's session has 8 task slots, so the drain plans keep the
+    4 state partitions they had before the one-wave rule."""
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
+    assert spark.sparkContext.defaultParallelism >= 4
+    with stream_start_conf(spark):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+
+
+def test_results_do_not_depend_on_state_partitions(spark, sf_dir, monkeypatch):
+    """The state-partition count may change only what a drain costs:
+    the applyInPandasWithState running count and the windowed count
+    give the same rows at 1 and at 4 state partitions."""
+    path = f"{sf_dir}/events.parquet"
+
+    def drain(parts: int):
+        monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", str(parts))
+        counts = {tuple(r) for r in running_counts(spark, path).collect()}
+        windows = {tuple(r) for r in run_windowed_count(spark, path).collect()}
+        return counts, windows
+
+    one, four = drain(1), drain(4)
+    assert one == four
+    assert one[0] and one[1]  # non-vacuous
 
 
 def test_no_data_batch_skip_is_result_invariant_for_complete_agg(
