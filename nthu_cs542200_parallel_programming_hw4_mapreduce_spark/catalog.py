@@ -59,9 +59,12 @@ def _app_id(spark: SparkSession) -> str:
     return cached
 
 
-#: spread() decisions, memoized per (applicationId, id(df), parts). The
-#: value keeps a STRONG reference to the key DataFrame so its id() can
-#: never be recycled by the allocator while the entry lives.
+#: spread() decisions, memoized per (applicationId, id(df), parts) for
+#: the frames ``table()`` returned only: no other frame is passed twice
+#: (the incremental dedup path passes a new one per micro-batch), so
+#: memoizing those would only grow the memo. The value keeps a STRONG
+#: reference to the key DataFrame so its id() is never recycled while
+#: the entry lives.
 _SPREAD_MEMO: dict[
     tuple[str, int, int | None], tuple[DataFrame, DataFrame]
 ] = {}
@@ -100,7 +103,8 @@ def spread(df: DataFrame, parts: int | None = None) -> DataFrame:
         target = parts or max(2, min(cores, (nbytes + 65_535) // 65_536))
         if df.rdd.getNumPartitions() < target:
             out = df.repartition(target)
-    _SPREAD_MEMO[key] = (df, out)
+    if any(df is t for t in _READ_MEMO.values()):
+        _SPREAD_MEMO[key] = (df, out)
     return out
 
 

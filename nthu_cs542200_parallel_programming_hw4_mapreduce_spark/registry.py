@@ -38,670 +38,25 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
 
 # The driver's correctness gate checks only the FIRST 50 entries of
-# ``queries()`` (dict iteration order).  Registration order alone would
-# spend the whole window on core/TPC-H (round-1 lesson), so the window
-# is curated — and ROTATED each round so every declared query
-# eventually earns a driver CORRECTNESS row:
-#
-#   * an always-on regression core keeps its slot every round
-#     (§2.1 O1-O11 coverage + ``tpch_q12``, the round-1 hash-mismatch
-#     proof);
-#   * queries never driver-checked in ANY prior round get priority
-#     for the remaining slots (round 3: the 31 queries listed in
-#     VERDICT r2 "What's missing" §1, plus the new ``kmeans_assign``);
-#   * leftover slots go to queries checked only once, preferring
-#     family diversity (join/window/set/scalar/TPC-H).
-#
-# Queries rotated out keep their local oracle-parity test
-# (tests/test_oracle_parity.py) — the identical check the driver runs —
-# and their green rows in CORRECTNESS_r{1..4}.json stand as proof.
-# Round-4 window (all 50 green in CORRECTNESS_r04.json) retained for
-# the audit trail; the live window is DRIVER_WINDOW below.
-ROUND4_WINDOW: tuple[str, ...] = (
-    "wordcount_e2e", "scan_count", "tokenize_wordcount", "project_lit",
-    "partition_expr", "sort_asc", "sort_desc", "agg_count", "tpch_q12",
-    "snapshot_diff", "merge_upsert", "scd2_history", "incremental_rollup",
-    "compaction_bins", "data_expectations", "k_anonymity_suppress",
-    "table_profile", "delta_scan", "delta_time_travel",
-    "pagerank_events", "triangle_count", "reachability_bfs",
-    "streaming_stream_join", "streaming_static_join", "streaming_topk",
-    "streaming_dedup_watermarked", "sliding_distinct_users",
-    "variant_shred", "python_datasource_scan", "collated_distinct",
-    "xml_ingest",
-    "lsh_quality_eval", "url_canonicalize", "heavy_hitters",
-    "anomaly_zscore",
-    "window_range_frame", "multimodal_dedup", "paragraph_dedup",
-    "dup_cluster_histogram",
-    "dictionary_encode", "bpe_first_merge", "embedding_covariance",
-    "ndcg_at_10",
-    "retention_cohorts", "funnel_conversion", "attribution_last_touch",
-    "markov_transitions",
-    "json_quarantine", "sql_udf_scoring", "lateral_join_topn",
-)
-
-
-# Round-5 rotation pool: every declared query that STILL has no driver
-# CORRECTNESS row after rounds 1-4 (not in CORRECTNESS_r01/r02/r03 and
-# not holding a round-4 window slot) — the 29 never-checked leftovers
-# plus the 12 batch-33/34 queries NEW in round 4 (the round-4 window
-# was fully allocated to the never-checked backlog, so new arrivals
-# wait one round). Round 5 swapped all 41 in, clearing the never-checked
-# set entirely (9 core + 41 pool = exactly 50 slots; all 50 green in
-# CORRECTNESS_r05.json). History-pinned by
-# tests/test_registry.py::test_round5_rotation_cleared_the_backlog.
-ROUND5_ROTATION_POOL: tuple[str, ...] = (
-    "ab_test_ztest",
-    "abc_analysis",
-    "anomaly_mad",
-    "arrow_map_batches",
-    "arrow_udf_reverse",
-    "bounce_rate_daily",
-    "bpe_merges",
-    "burst_detection",
-    "chi2_independence",
-    "drift_ks_test",
-    "entropy_profile",
-    "l_diversity_check",
-    "session_paths_topk",
-    "tfidf_cosine_pairs",
-    "time_weighted_avg",
-    "value_histogram",
-    "decayed_engagement",
-    "encode_corpus",
-    "funnel_weekly_trend",
-    "fuzzy_name_match",
-    "gini_label_balance",
-    "hll_user_reach",
-    "join_nullsafe_keys",
-    "latency_percentile_bands",
-    "linreg_by_key",
-    "null_semantics",
-    "pca_project",
-    "pit_state_at_event",
-    "pmi_collocations",
-    "python_stream_source",
-    "quantile_normalize",
-    "readability_flesch",
-    "revenue_yoy_growth",
-    "schema_evolution_scan",
-    "skew_report",
-    "sql_parameterized",
-    "udtf_analyze_split",
-    "user_overlap_jaccard",
-    "vocab_growth_curve",
-    "winsorized_stats",
-    "zorder_layout",
-)
-
-
-# The always-on regression core (every round's first 9 slots).
+# ``queries()`` (dict iteration order). Registration order alone would
+# spend the whole window on core/TPC-H, so the window is curated: an
+# always-on regression core (O1-O11 coverage plus ``tpch_q12``, the
+# hash-mismatch proof) and 41 further names, all oracle-backed. Every
+# query outside the window keeps its local oracle-parity test
+# (tests/test_oracle_parity.py, the same check the driver runs); the
+# CORRECTNESS_rNN.json files record which names each earlier window held.
 CORE_WINDOW: tuple[str, ...] = (
     "wordcount_e2e", "scan_count", "tokenize_wordcount", "project_lit",
     "partition_expr", "sort_asc", "sort_desc", "agg_count", "tpch_q12",
 )
 
-# Round-5 window (all 50 green in CORRECTNESS_r05.json — that rotation
-# cleared the never-checked backlog; retained for the audit trail).
-ROUND5_WINDOW_PLAN: tuple[str, ...] = CORE_WINDOW + ROUND5_ROTATION_POOL
-
-# Round-6 rotation pool. The never-checked backlog is EMPTY after r5
-# (CORRECTNESS_r01..r05 cover all 213 pre-round-6 queries), so per
-# VERDICT r5 "Next round" #3 the 41 rotating slots are spent on:
-#   * the 2 queries NEW in round 6 (never driver-checked, priority):
-#     quality_deciles_approx (VERDICT #2) and session_paths_topk_salted
-#     (VERDICT #6);
-#   * 39 of the 40 queries whose ONLY driver proof is CORRECTNESS_r01 —
-#     the oldest green rows, re-proven so no green claim exceeds ~3
-#     rounds of age. `limit_offset` is the one r1-era leftover (40 − 39);
-#     it rolls to round 7's re-proof set.
-# Pinned by tests/test_registry.py::test_round6_pool_composition.
-ROUND6_ROTATION_POOL: tuple[str, ...] = (
-    # new in round 6 (never checked)
-    "quality_deciles_approx",
-    "session_paths_topk_salted",
-    # r1-era re-proofs (latest driver row = CORRECTNESS_r01)
-    "agg_string_list", "approx_agg", "cube_agg", "distinct_dedup",
-    "filter_pred", "grouping_sets_explicit", "histogram_value",
-    "join_equi", "join_multiway", "join_outer", "join_semi_anti",
-    "pivot_status", "quantile_price", "rollup_agg",
-    "rollup_grouping_id", "scalar_array", "scalar_date", "scalar_text",
-    "set_intersect_except", "set_ops_all", "set_union",
-    "sql_api_subquery", "topk", "tpch_q10", "tpch_q13", "tpch_q14",
-    "tpch_q17", "tpch_q18", "tpch_q19", "tpch_q3", "tpch_q4", "tpch_q5",
-    "tpch_q6", "tpch_q7", "tpch_q8", "unpivot_stack", "window_lag_lead",
-    "window_rank", "window_running",
-)
-
-# Round-6 window (all 49 oracle rows + 1 declared rows-only green in
-# CORRECTNESS_r06.json; retained for the audit trail).
-ROUND6_WINDOW_PLAN: tuple[str, ...] = CORE_WINDOW + ROUND6_ROTATION_POOL
-
-# Round-7 rotation pool, ACTIVE (flipped with the pins in
-# tests/test_registry.py in the same commit — the round-5 lesson).
-# Recipe continues the freshness rotation:
-#   * `limit_offset` — the one r1-era re-proof round 6 couldn't fit;
-#   * 40 of the 41 queries whose latest driver row is CORRECTNESS_r02
-#     (the then-oldest green rows); `chunk_overlap` is the documented
-#     leftover (it keeps its local parity + property tests).
-# Queries ADDED during round 7 take priority over re-proof slots —
-# bump re-proofs from the end of this tuple to make room. Every name
-# below is registered today (no phantoms — ADVICE r5; existence is
-# pinned by tests/test_registry.py::
-# test_round7_pool_is_registered_and_freshness_ordered);
-# the rows-only members (ANN/multimodal/streaming extension proofs)
-# re-prove under the driver's weaker rows-only check, as declared.
-# Round-7 additions (each bumps one re-proof from the tuple's end to
-# round 8, per the recipe): bounce_rate_daily_salted (bumped
-# udtf_tokenize), ann_lsh_bands (bumped train_split_hash),
-# ann_ivf_cell_assign (bumped tpch_q1), time_weighted_avg_salted
-# (bumped token_count_est), event_session_salted (bumped
-# tfidf_top_terms).
-ROUND7_ROTATION_POOL: tuple[str, ...] = (
-    "ann_ivf_cell_assign",
-    "ann_lsh_bands",
-    "bounce_rate_daily_salted",
-    "event_session_salted",
-    "time_weighted_avg_salted",
-    "limit_offset",
-    "ann_ivf_topk", "ann_lsh_topk", "asof_last_signup",
-    "cosine_knn_exact", "decontaminate_ngram", "dedup_clusters",
-    "dedup_cross_snapshot", "dedup_embedding_cosine",
-    "dedup_embedding_cosine_bucketed", "dedup_exact",
-    "dedup_fuzzy_production", "dedup_lsh_jaccard_verified",
-    "dedup_minhash_lsh", "dedup_minhash_sig", "dedup_ngram_jaccard",
-    "dedup_simhash", "doc_fingerprint", "event_session", "event_window",
-    "label_centroids", "lang_id", "multimodal_embed_ann",
-    "multimodal_features", "multimodal_meta", "pack_context_windows",
-    "pipeline_filter_quality", "range_join_follow", "resample_ffill",
-    "sample_per_lang_topk", "session_window_native",
-    "streaming_stateful", "streaming_window", "text_quality",
-    "text_repetition", "text_scrub_pii",
-)
-
-# Round-7 window (all 44 oracle rows + 6 declared rows-only green in
-# CORRECTNESS_r07.json; retained for the audit trail).
-ROUND7_WINDOW_PLAN: tuple[str, ...] = CORE_WINDOW + ROUND7_ROTATION_POOL
-
-# Round-8 rotation pool, ACTIVE (flipped with the pins in
-# tests/test_registry.py in the same commit — the round-5 lesson).
-# Freshness recipe:
-#   * the 2 queries NEW in round 8 (never driver-checked, priority):
-#     `dedup_embedding_band_keys` (VERDICT r7 #5 — the oracle-backed
-#     candidate-stage foothold for the bucketed 100-TB embedding
-#     dedup) and `drift_ks_binned` (VERDICT r7 #6 — the quantized-
-#     support KS degrade promoted to a real query); each bumps one
-#     re-proof from the tuple's end (`tpch_q11`, `tpch_q15` — both
-#     keep local parity tests; they roll to round 9);
-#   * the six documented round-7 leftovers, the oldest green rows
-#     (`chunk_overlap` deferred since r6; `udtf_tokenize`,
-#     `train_split_hash`, `tpch_q1`, `token_count_est`,
-#     `tfidf_top_terms` bumped by the r7 additions);
-#   * 33 of the 41 queries whose latest driver row is CORRECTNESS_r03
-#     (the then-oldest era once round 7 re-proved the r2-era rows);
-#     the six deferred r3-era rows are `tpch_q2`, `tpch_q9`,
-#     `tpch_q16`, `tpch_q20`, `tpch_q21`, `tpch_q22` —
-#     family-redundant (two other TPC-H re-proofs remain in the pool)
-#     and each keeps its local parity test; they roll to round 9
-#     (pre-staged below, per VERDICT r7 #3).
-# Existence + recipe pinned by tests/test_registry.
-# py::test_round8_pool_is_registered_and_freshness_ordered.
-# Pre-verified at round-7 close (2026-08-15): all r3-era oracle-backed
-# members parity-green at sf0.01 via tools/parity.py; the 8 rows-only
-# members execute with stable row counts — the flip carries no rot.
-# The two round-8 additions were parity-verified the day they landed.
-ROUND8_ROTATION_POOL: tuple[str, ...] = (
-    # new in round 8 (never checked)
-    "dedup_embedding_band_keys",
-    "drift_ks_binned",
-    # round-7 leftovers — the oldest green rows in the repo
-    "chunk_overlap", "udtf_tokenize", "train_split_hash", "tpch_q1",
-    "token_count_est", "tfidf_top_terms",
-    # r3-era re-proofs (latest driver row = CORRECTNESS_r03)
-    "asof_cogroup_pandas", "bm25_topk", "contamination_overlap",
-    "corpus_report", "decontaminate_bloom", "dedup_containment",
-    "dedup_keep_best", "dedup_minhash_mllib", "dedup_semdedup",
-    "dedup_simhash_pairs", "dsir_importance", "embedding_stats",
-    "event_hopping_window", "exact_distinct_agg", "join_skew_salted",
-    "kmeans_assign", "kmeans_lloyd", "mixture_sample_temperature",
-    "multimodal_framesample", "ngram_freq", "pandas_udaf_mean",
-    "perplexity_unigram", "pq_encode", "quality_deciles",
-    "quality_gopher", "scalar_json", "shingle_fingerprints",
-    "stats_agg", "streaming_dedup", "streaming_hopping",
-    "streaming_incremental_dedup", "substring_dup_rate",
-    "text_normalize",
-)
-
-# Round-8 window, ACTIVE: 9 core + 41-slot pool = exactly 50.
-# Round-8 close verification (2026-08-15): full test suite 489 passed /
-# 0 failed; the 50-row window parity-green at sf0.01 (46 oracle-backed
-# + 4 declared rows-only); AND the WHOLE-REPO sweep re-run under the
-# round-8 oracles (which upgraded 9 queries from rows-only to full
-# DuckDB replay mid-round): 213/213 oracle-backed parity-green + 9/9
-# rows-only executing, 0 failures. Every ROUND9_ROTATION_POOL member
-# was in that sweep, so the round-9 flip is pre-verified rot-free.
-# The sweep was then repeated at sf0.001 AND sf0.1 (first-ever full
-# tri-SF pass): 213/213 green at every scale, 0 failures — the oracles
-# hold across a 100× fixture range, not just the driver's sf0.01
-# check point (retires the ADVICE r7 "fixture-luck-fragile" class:
-# the CAST-AS-DOUBLE LSH literals survive all three corpora).
-# After the post-review NULL/zero-norm oracle hardening (dd_cosine
-# GREATEST floor, KS null filters, asof tie contract) the full sf0.01
-# sweep was re-run: 213/213 green again under the CHANGED oracles, and
-# the 16 directly-affected queries re-passed at all three SFs plus a
-# vanilla-session driver mimic.
-ROUND8_WINDOW_PLAN: tuple[str, ...] = CORE_WINDOW + ROUND8_ROTATION_POOL
-
-# Round-9 rotation pool, ACTIVE (flipped with the pins in
-# tests/test_registry.py in the same commit — the round-5 lesson).
-# Pre-staged at round-8 close; round 9 added the two streaming-dedup
-# ORACLE GRADUATIONS (VERDICT r8 #4: streaming_dedup /
-# streaming_incremental_dedup upgraded from rows-only to full DuckDB
-# oracles this round — drained-static replay, see plans/streaming.py)
-# so the new oracles earn hash-checked driver rows immediately; per
-# the standing recipe each bumps one re-proof from the tuple's end
-# (`window_range_frame`, `xml_ingest` — both keep local parity tests;
-# they lead the round-10 pool below). Freshness recipe
-# (VERDICT r7 #3 — pre-staged so the deferred rows cannot silently
-# age):
-#   * the six r3-era TPC-H rows deferred from round 8
-#     (`tpch_q2/q9/q16/q20/q21/q22`) plus the two re-proofs the
-#     round-8 additions bumped (`tpch_q11`, `tpch_q15`);
-#   * the five queries whose oracles were UPGRADED mid-round-8 from
-#     rows-only to full DuckDB replay but which sit outside the
-#     round-8 window (`ann_lsh_topk`, `ann_ivf_topk`,
-#     `dedup_embedding_cosine_bucketed`, `multimodal_features`,
-#     `multimodal_embed_ann`) — their r7 driver rows are rows-only
-#     proofs, so the new oracles deserve a driver row before they age
-#     (the other four round-8 upgrades sit IN the round-8 window and
-#     get their oracle rows in CORRECTNESS_r08);
-#   * 28 of the 41 queries whose latest driver row is CORRECTNESS_r04
-#     (the oldest era once round 8 re-proves the r3-era rows); the
-#     thirteen deferred r4-era rows roll to round 10, each family-
-#     redundant with a fresher-proven member: `delta_scan` +
-#     `delta_time_travel` (jar-free Delta file-contract tests;
-#     `schema_evolution_scan` re-proved r5), `streaming_dedup_
-#     watermarked`/`streaming_static_join`/`streaming_stream_join`/
-#     `streaming_topk` (streaming_dedup/hopping/incremental_dedup
-#     re-proved r8), `multimodal_dedup` (multimodal_meta r7,
-#     framesample r8 with the new oracle), `dup_cluster_histogram`
-#     (rides dedup_clusters, re-proved r7), `anomaly_zscore`
-#     (stats_agg re-proved r8), `url_canonicalize` (text_normalize
-#     r8), `sql_udf_scoring` (udtf_tokenize r8), `json_quarantine`
-#     (scalar_json r8), `collated_distinct` (exact_distinct_agg r8).
-# Queries ADDED during round 9 take priority — bump re-proofs from the
-# end of this tuple. Existence pinned by tests/test_registry.py::
-# test_round9_pool_is_registered.
-ROUND9_ROTATION_POOL: tuple[str, ...] = (
-    # round-9 oracle graduations (VERDICT r8 #4) — first driver rows
-    # under the NEW oracles (r1-r8 rows were the weaker rows-only check)
-    "streaming_dedup", "streaming_incremental_dedup",
-    "tpch_q2", "tpch_q9", "tpch_q16", "tpch_q20", "tpch_q21",
-    "tpch_q22", "tpch_q11", "tpch_q15",
-    # round-8 oracle upgrades outside the round-8 window — re-prove
-    # under the NEW oracles
-    "ann_lsh_topk", "ann_ivf_topk", "dedup_embedding_cosine_bucketed",
-    "multimodal_features", "multimodal_embed_ann",
-    # r4-era re-proofs (latest driver row = CORRECTNESS_r04)
-    "attribution_last_touch", "bpe_first_merge",
-    "compaction_bins", "data_expectations",
-    "dictionary_encode", "embedding_covariance", "funnel_conversion",
-    "heavy_hitters", "incremental_rollup",
-    "k_anonymity_suppress", "lateral_join_topn", "lsh_quality_eval",
-    "markov_transitions", "merge_upsert", "ndcg_at_10",
-    "pagerank_events", "paragraph_dedup", "python_datasource_scan",
-    "reachability_bfs", "retention_cohorts", "scd2_history",
-    "sliding_distinct_users", "snapshot_diff",
-    "table_profile", "triangle_count",
-    "variant_shred",
-)
-
-# Round-9 window, ACTIVE: 9 core + 41-slot pool = exactly 50. All 50
-# slots are oracle-backed — the first all-oracle window (the two
-# streaming members graduated this round; every prior window carried
-# declared rows-only slots). Round-9 verification (2026-08-15, after
-# the graduations, the ADVICE-r8 null-element gate, AND the
-# hostile-fixture hardening pass all landed): the whole-repo sweep
-# re-ran under the final round-9 oracles at all three SFs — 215/215
-# oracle-backed parity-green at sf0.001 AND sf0.01 AND sf0.1, 0
-# failures (tools/parity.py, the identical driver check) — and, new
-# this round, 215/215 green on the ADVERSARIAL fixture too
-# (tools/hostile_fixture.py: nulls, ties, vertical-tab/unicode text,
-# malformed JSON, out-of-decimal-domain values, failed-encode
-# embeddings, and a real-user timestampless event). The full 50-slot
-# window additionally passed a vanilla-session driver mimic from a
-# cwd outside the repo; pytest 558 passed / 0 failed.
-ROUND9_WINDOW_PLAN: tuple[str, ...] = CORE_WINDOW + ROUND9_ROTATION_POOL
-
-# Round-10 rotation pool, ACTIVE (flipped with the pins in
-# tests/test_registry.py in the same commit — the round-5 lesson;
-# VERDICT r9 "Next round" #1). Freshness recipe:
-#   * the two re-proofs the round-9 graduations bumped
-#     (`window_range_frame`, `xml_ingest`);
-#   * the thirteen r4-era rows deferred from the round-9 pool (named
-#     in the round-9 comment above);
-#   * 26 of the 41 queries whose latest driver row is CORRECTNESS_r05
-#     (the oldest era once round 9 re-proves the r4-era rows); the
-#     fifteen deferred r5-era rows roll to round 11, each family-
-#     redundant with a fresher-proven member: `arrow_map_batches`
-#     (arrow_udf_reverse in this pool), `bounce_rate_daily`/
-#     `session_paths_topk`/`time_weighted_avg` (salted twins r7, the
-#     documented production defaults), `bpe_merges` (bpe_first_merge
-#     r9), `decayed_engagement` (event_session r7), `drift_ks_test`
-#     (drift_ks_binned r8), `funnel_weekly_trend` (funnel_conversion
-#     r9), `fuzzy_name_match` (dedup_fuzzy_production r7),
-#     `hll_user_reach` (approx_agg r6 + error-bound test),
-#     `pca_project` (embedding_covariance r9), `python_stream_source`
-#     (streaming dedup pair r9 under full oracles),
-#     `revenue_yoy_growth` (retention_cohorts r9),
-#     `schema_evolution_scan` (delta twins in this pool),
-#     `udtf_analyze_split` (udtf_tokenize r8).
-# Queries ADDED during round 10 take priority — bump re-proofs from
-# the end of this tuple. Existence pinned by tests/test_registry.py::
-# test_round10_pool_is_registered.
-# Pre-verified at round-9 close (2026-08-15): every member is
-# oracle-backed and was parity-green in this round's tri-SF
-# whole-repo sweeps (215/215 at sf0.001/sf0.01/sf0.1) AND the
-# hostile-fixture sweep — the round-10 flip carries no rot.
-# Round-10 additions (each bumps one re-proof from the tuple's end to
-# round 11, per the recipe): pca_project_2d (VERDICT r9 #4 — the
-# closed-form end-to-end PCA foothold; bumped zorder_layout),
-# kmeans_two_rounds (VERDICT r9 #5 — the fully-replayed two-round
-# Lloyd bridge; bumped winsorized_stats), dedup_cross_snapshot_fuzzy
-# (VERDICT r9 #6 — MinHash bands joined across snapshot versions;
-# bumped vocab_growth_curve), context_window_lineage (VERDICT r9 #6 —
-# the doc→training-bin provenance table; bumped value_histogram), and
-# embedding_drift_by_label (the cross-snapshot encoder-drift check;
-# bumped user_overlap_jaccard). All five parity-verified at all three
-# SFs + the hostile fixture the day they landed.
-# Round-10 additions, second wave (the evalmetrics module — AUC,
-# calibration, kappa, Benford, Kaplan-Meier): same recipe, each bumps
-# one more r5-era re-proof from the tuple's end to round 11
-# (tfidf_cosine_pairs, sql_parameterized, skew_report,
-# readability_flesch, quantile_normalize — each family-redundant with
-# a fresher-proven member: tfidf_top_terms r8 / sql_api_subquery r6 /
-# table_profile r9-core-era / quality_gopher r8 / winsorized_stats'
-# quantile family). Parity-verified at all three SFs + the hostile
-# fixture the day they landed.
-# Round-10 additions, third wave (copurchase_pairs — market-basket
-# pair mining; embedding_mahalanobis_outliers — per-label diagonal-Σ
-# outlier audit; streaming_session_window — append-mode watermarked
-# sessionization under a drained-static oracle): same recipe, bumping
-# pmi_collocations / pit_state_at_event / null_semantics (each
-# family-redundant with a fresher member: tfidf_top_terms r8 /
-# asof_last_signup+scd2 family r9-era / join_nullsafe_keys in this
-# pool). Parity-verified at all three SFs + the hostile fixture the
-# day they landed.
-# Round-10 additions, fourth wave (weighted_sample_topk — A-ES
-# hash-deterministic weighted sampling; attribution_position_based —
-# U-shaped multi-touch credit via the linear click→next-purchase
-# sweep; pq_reconstruction_error — per-subspace quantization-quality
-# audit): same recipe, bumping linreg_by_key /
-# latency_percentile_bands / l_diversity_check (family-redundant with
-# ab_test_ztest+chi2 in this pool / quantile_price r6 /
-# k_anonymity_suppress). Parity-verified at all three SFs + the
-# hostile fixture the day they landed.
-# Round-10 additions, fifth wave (json_schema_profile — per-key JSON
-# type histogram over the variant surface; rfm_segmentation —
-# tie-sharing quantile-bucket RFM cells; sql_pipe_syntax — the
-# Spark-4 |> dialect against its ANSI rewrite; ann_mmr_rerank — MMR
-# diversity re-ranking over the exact-kNN shortlist): same recipe,
-# bumping join_nullsafe_keys / gini_label_balance / entropy_profile /
-# encode_corpus (family-redundant with null_semantics' r6-era proof +
-# join family r8 / the evalmetrics label stats in this pool /
-# drift_ks_binned r8 / dictionary_encode r4 + bpe_first_merge r9).
-# Parity-verified at all three SFs + the hostile fixture the day they
-# landed.
-# Round-10 additions, sixth wave (orc_scan — the second columnar
-# format's round-trip fidelity + pushdown check; decontaminate_substring
-# — the GPT-3/PaLM exact-substring protocol; streaming_stream_left_join
-# — watermark-evicted NULL emission under a two-sided drained-static
-# cutoff): same recipe, bumping chi2_independence / burst_detection /
-# arrow_udf_reverse (family-redundant with drift_ks_binned r8 +
-# ab_test in this pool / anomaly_mad in this pool / udtf_tokenize r8 +
-# arrow_map_batches' deferral note). Parity-verified at all three SFs
-# + the hostile fixture the day they landed.
-# Round-10 additions, seventh wave (referential_integrity_audit — the
-# multi-table FK-orphan sibling of data_expectations;
-# seasonality_dow — day-of-week seasonal decomposition of the daily
-# metric): same recipe, bumping abc_analysis / anomaly_mad
-# (family-redundant with revenue/rollup members r9-era /
-# anomaly_zscore in this pool). Parity-verified at all three SFs +
-# the hostile fixture the day they landed.
-ROUND10_ROTATION_POOL: tuple[str, ...] = (
-    # new in round 10 (never checked)
-    "pca_project_2d",
-    "kmeans_two_rounds",
-    "dedup_cross_snapshot_fuzzy",
-    "context_window_lineage",
-    "embedding_drift_by_label",
-    "quality_score_auc",
-    "score_calibration_bins",
-    "label_agreement_kappa",
-    "benford_first_digit",
-    "kaplan_meier_conversion",
-    "copurchase_pairs",
-    "embedding_mahalanobis_outliers",
-    "streaming_session_window",
-    "weighted_sample_topk",
-    "attribution_position_based",
-    "pq_reconstruction_error",
-    "json_schema_profile",
-    "rfm_segmentation",
-    "sql_pipe_syntax",
-    "ann_mmr_rerank",
-    "orc_scan",
-    "decontaminate_substring",
-    "streaming_stream_left_join",
-    "referential_integrity_audit",
-    "seasonality_dow",
-    # bumped by the round-9 graduations
-    "window_range_frame", "xml_ingest",
-    # r4-era rows deferred from round 9
-    "anomaly_zscore", "collated_distinct", "delta_scan",
-    "delta_time_travel", "dup_cluster_histogram", "json_quarantine",
-    "multimodal_dedup", "sql_udf_scoring", "streaming_dedup_watermarked",
-    "streaming_static_join", "streaming_stream_join", "streaming_topk",
-    "url_canonicalize",
-    # r5-era re-proofs (latest driver row = CORRECTNESS_r05)
-    "ab_test_ztest",
-)
-
-# Round-10 window, ACTIVE: 9 core + 41-slot pool = exactly 50, all
-# oracle-backed (the second consecutive all-oracle window). Once
-# CORRECTNESS_r10 lands green, no oracle-backed query's newest driver
-# row is older than r6.
-ROUND10_WINDOW_PLAN: tuple[str, ...] = CORE_WINDOW + ROUND10_ROTATION_POOL
-
-# Round-11 rotation pool, PRE-STAGED at round-10 close (the a9da324
-# receipt pattern): after CORRECTNESS_r10 lands, the stalest era is
-# the 40 r5-era rows not in the round-10 window — 37 of them
-# oracle-backed (the 25 re-proofs the round-10 additions bumped plus
-# the 15 deferred, minus the 3 rows-only members bpe_merges /
-# hll_user_reach / pca_project; ab_test_ztest kept its round-10
-# slot) —
-# and the remaining 4 slots take the oldest r6-era rows preferring
-# family diversity (filter: filter_pred; top-k: topk; set ops:
-# set_union; grouping sets: cube_agg), keeping the THIRD consecutive
-# all-oracle window. The 3 rows-only r5-era members stay on their
-# foothold/error-bound proofs (tests/test_entry.py) rather than
-# burning hash-window slots on rows-only checks.
-# Pre-verified at round-10 close (2026-08-16): every member below was
-# parity-green in this round's whole-registry sweeps at sf0.001,
-# sf0.01, sf0.1 AND the extended hostile fixture (240/240, 0 failures
-# each) — the round-11 flip carries no rot. Queries ADDED during
-# round 11 take priority — bump re-proofs from this tuple's end, per
-# the standing recipe.
-# Round-11 additions (each bumped one row from the tuple's end — the
-# 4 r6-era family-diverse picks roll to round 12, so this window
-# clears the ENTIRE r5-era oracle-backed debt): snapshot_novelty +
-# split_cluster_safe + pii_scrub_counts (the VERDICT r10 #7 LLM-
-# pipeline batch) and hll_user_reach (VERDICT r10 #5 — graduated from
-# rows-only: the hand-rolled md5-register HLL replays bit-exactly in
-# DuckDB, so the sketch itself is now hash-checked). All four
-# parity-verified at sf0.001/sf0.01 + the re-extended hostile fixture
-# the day they landed.
-# Round-11 additions, second wave (tokenizer_fertility — bytes/chars
-# per token per language, the compute-budget lens; and
-# effective_token_budget — per-source raw vs post-exact-dedup token
-# accounting): same recipe, bumping time_weighted_avg /
-# udtf_analyze_split from the tuple's end (each family-redundant with
-# a member already re-proving: time_weighted_avg_salted is the
-# production default of the same pair, and udtf_analyze_split's UDTF
-# family has udtf_tokenize r8). Being r5-era rows, the two bumps are
-# STALER than the pre-staged round-12 pool's r6-era members — so they
-# take round-12 slots immediately (see ROUND12_ROTATION_POOL's
-# amendment below), keeping the oldest-first invariant.
-ROUND11_ROTATION_POOL: tuple[str, ...] = (
-    # new in round 11 (never driver-checked under an oracle)
-    "snapshot_novelty", "split_cluster_safe", "pii_scrub_counts",
-    "hll_user_reach", "tokenizer_fertility", "effective_token_budget",
-    # r5-era re-proofs bumped out of round 10 by its 25 additions
-    "winsorized_stats", "zorder_layout", "value_histogram",
-    "vocab_growth_curve", "user_overlap_jaccard", "tfidf_cosine_pairs",
-    "sql_parameterized", "skew_report", "readability_flesch",
-    "quantile_normalize", "pmi_collocations", "pit_state_at_event",
-    "null_semantics", "linreg_by_key", "latency_percentile_bands",
-    "l_diversity_check", "join_nullsafe_keys", "gini_label_balance",
-    "entropy_profile", "encode_corpus", "chi2_independence",
-    "burst_detection", "arrow_udf_reverse", "abc_analysis", "anomaly_mad",
-    # r5-era re-proofs deferred from the round-10 pool (oracle-backed)
-    "arrow_map_batches", "bounce_rate_daily", "decayed_engagement",
-    "drift_ks_test", "funnel_weekly_trend", "fuzzy_name_match",
-    "python_stream_source", "revenue_yoy_growth",
-    "schema_evolution_scan", "session_paths_topk",
-)
-
-# The rows the round-11 additions bumped from the pool's end (the
-# standing one-bump-per-addition recipe): the 4 r6-era family-diverse
-# picks lead the round-12 re-proof queue; the 2 r5-era second-wave
-# bumps are staler still and take round-12 slots directly.
-ROUND11_BUMPED: tuple[str, ...] = (
-    "filter_pred", "topk", "set_union", "cube_agg",
-    "time_weighted_avg", "udtf_analyze_split",
-)
-
-# Round-11 window, RETIRED (was active for the round-11 driver run;
-# CORRECTNESS_r11 landed 50/50 green): 9 core + the 41-slot pool
-# above, all oracle-backed — the third consecutive all-oracle window.
-# Kept for the audit trail; the live window is DRIVER_WINDOW below.
-ROUND11_WINDOW_PLAN: tuple[str, ...] = CORE_WINDOW + ROUND11_ROTATION_POOL
-
-# Round-12 rotation pool, PRE-STAGED at round-11 close (the standing
-# receipt pattern): once CORRECTNESS_r11 lands green on the round-11
-# window, the r5-era oracle debt is CLEARED and the stalest era is
-# r6 — exactly 40 oracle-backed rows whose newest driver row is
-# CORRECTNESS_r06 (including the 4 ROUND11_BUMPED picks), computed
-# from the recorded CORRECTNESS files in
-# tests/test_registry.py::test_round12_pool_is_prestaged so the pin
-# cannot rot. The 41st slot takes the oldest r7-era row preferring
-# the documented leftover: ``limit_offset`` (the single round-6
-# window leftover, driver-checked once in r07). Queries ADDED during
-# round 12 take priority — bump re-proofs from this tuple's end, per
-# the standing recipe.
-# Pre-verified at round-11 close (2026-08-16): every member was
-# parity-green in the round-11 whole-registry sweeps at sf0.001,
-# sf0.01, sf0.1 AND the re-extended hostile fixture (0 failures
-# each) — the round-12 flip carries no rot.
-# AMENDED by the round-11 second-wave bumps: time_weighted_avg and
-# udtf_analyze_split are r5-era (strictly staler than this pool's
-# r6-era base), so they take slots immediately; tpch_q5 and tpch_q7
-# defer to round 13 (join-family redundant — q3/q8/q10/q18/q19 all
-# re-prove from this pool, and the core re-proves q12 every round).
-# AMENDED AGAIN at round-12 build time: the 4 round-12 additions took
-# priority slots and bumped the 4 rows named in ROUND12_BUMPED from
-# the tuple's end (window-family picks + limit_offset — family-
-# redundant this window: window_range_frame re-proves nothing here,
-# but window_running/lag_lead/rank overlap the retained
-# window-family coverage via quantile_normalize/pit_state_at_event
-# history and all four re-seat FIRST in round 13).
-ROUND12_ROTATION_POOL: tuple[str, ...] = (
-    # round-12 additions (priority slots, per the standing recipe):
-    # the VERDICT r11 #3 LLM-pipeline batch (mixture rebalancing to a
-    # temperature target, punctuation-folded decontamination, the
-    # char-weighted repetition gate) + the #4 graduation
-    # (dedup_minhash_mllib's first ORACLE-backed driver row; rows-only
-    # history rows exist from the round-8 window)
-    "mixture_rebalance", "decontaminate_normalized", "repetition_gate",
-    "dedup_minhash_mllib",
-    # round-12 second wave (the attrition dashboard, the reverse-
-    # direction contamination report, the upsample-capped mixture)
-    "quality_filter_funnel", "eval_contamination_report",
-    "mixture_epochs",
-    # round-12 third wave (the label-noise confusion matrix, the
-    # dedup threshold-selection curve)
-    "lang_metadata_mismatch", "dedup_threshold_sweep",
-    # r5-era rows bumped by the round-11 second-wave additions —
-    # the stalest oracle-backed rows anywhere, so they go first
-    "time_weighted_avg", "udtf_analyze_split",
-    # the r6-era rows (newest driver row = CORRECTNESS_r06), minus
-    # the two named tpch deferrals
-    "agg_string_list", "cube_agg", "distinct_dedup", "filter_pred",
-    "grouping_sets_explicit", "histogram_value", "join_equi",
-    "join_multiway", "join_outer", "join_semi_anti", "pivot_status",
-    "quality_deciles_approx", "quantile_price", "rollup_agg",
-    "rollup_grouping_id", "scalar_array", "scalar_date", "scalar_text",
-    "session_paths_topk_salted", "set_intersect_except", "set_ops_all",
-    "set_union", "sql_api_subquery", "topk", "tpch_q10", "tpch_q13",
-    "tpch_q14", "tpch_q17", "tpch_q18", "tpch_q19",
-)
-
-# The two r6-era rows the amendment deferred to round 13 (named, not
-# silently dropped — the standing deferral discipline).
-ROUND12_DEFERRED: tuple[str, ...] = ("tpch_q5", "tpch_q7")
-
-# The rows the round-12 additions bumped from the pool's end (one
-# bump per addition, per the standing recipe): the 4 window-family
-# r6/r7-era picks that closed the tuple. They lead the round-13
-# re-proof queue together with the two named tpch deferrals, in
-# stalest-era-first order: the three r6-era window picks first, then
-# limit_offset (r7-era — bumped before earning its r12 row, so its
-# newest driver row stays CORRECTNESS_r07).
-ROUND12_BUMPED: tuple[str, ...] = (
-    "window_lag_lead", "window_rank", "window_running", "limit_offset",
-    # bumped by the round-12 second wave (r6-era; tpch_q6/q8 are
-    # join/agg-family redundant this window — q3/q4/q10/q12-q14/
-    # q17-q19 all re-prove here)
-    "unpivot_stack", "tpch_q8", "tpch_q6",
-    # bumped by the round-12 third wave (r6-era; join-family still
-    # re-proves via q10/q12-q14/q17-q19 in this window)
-    "tpch_q4", "tpch_q3",
-)
-
-# Round-13 rotation pool, PRE-STAGED at round-12 build time (the
-# standing receipt pattern): once CORRECTNESS_r12 lands green on the
-# round-12 window, the stalest rows are (a) the 4 re-proofs the
-# round-12 additions bumped (ROUND12_BUMPED — three r6-era
-# window-family picks plus limit_offset, whose newest row stays r07),
-# (b) the two NAMED r6-era tpch deferrals (ROUND12_DEFERRED), and
-# (c) the r7-era oracle-backed rows (newest driver row =
-# CORRECTNESS_r07). That yields 40; the 41st slot takes the oldest
-# r8-era row preferring family diversity: ``asof_cogroup_pandas``
-# (the cogrouped-pandas as-of join — a surface no other slot
-# re-proves). Composition computed from the recorded CORRECTNESS
-# files in tests/test_registry.py::test_round13_pool_is_prestaged so
-# the pin cannot rot. Queries ADDED during round 13 take priority —
-# bump re-proofs from this tuple's end, per the standing recipe.
-# AMENDED by the round-12 second wave: its 3 bumps (r6-era) take
-# slots; to hold the pool at 41 the r8-era filler pick
-# (asof_cogroup_pandas) is dropped and two r7-era SALTED twins defer
-# to round 14 by name (family-redundant next window: their unsalted
-# siblings time_weighted_avg / bounce_rate_daily re-prove in the
-# round-11/12 windows, and the salted-window mechanics re-prove via
-# event_session_salted / session_paths_topk_salted history).
-ROUND13_ROTATION_POOL: tuple[str, ...] = (
-    # round-13 additions (priority slots, per the standing recipe)
+DRIVER_WINDOW: tuple[str, ...] = CORE_WINDOW + (
     "dedup_threshold_sweep_sampled", "decontaminate_fuzzy",
     "snapshot_divergence_js", "multimodal_dhash_neardup",
     "multimodal_dhash_unique", "decontaminate_fuzzy_unique",
-    # the round-12 bumps (stalest-first: eight r6-era + the r7-era
-    # leftover limit_offset)
     "window_lag_lead", "window_rank", "window_running",
     "unpivot_stack", "tpch_q8", "tpch_q6", "tpch_q4", "tpch_q3",
-    "limit_offset",
-    # the named r6-era deferrals (VERDICT r11 #1)
-    "tpch_q5", "tpch_q7",
-    # the r7-era rows (newest driver row = CORRECTNESS_r07) minus the
-    # two named round-14 deferrals
+    "limit_offset", "tpch_q5", "tpch_q7",
     "ann_ivf_cell_assign", "ann_lsh_bands", "asof_last_signup",
     "decontaminate_ngram", "dedup_clusters", "dedup_cross_snapshot",
     "dedup_embedding_cosine", "dedup_exact", "dedup_fuzzy_production",
@@ -713,132 +68,11 @@ ROUND13_ROTATION_POOL: tuple[str, ...] = (
     "range_join_follow", "resample_ffill",
 )
 
-# The rows the round-13 additions bumped from the pool tuple's END
-# (one bump per addition, per the standing recipe — named, never
-# silently dropped). They lead the round-14 re-proof queue together
-# with the four ROUND13_DEFERRED names.
-ROUND13_BUMPED: tuple[str, ...] = (
-    # bumped by dedup_threshold_sweep_sampled (r7-era; the PII-scrub
-    # family still re-proves via pii_scrub_counts' r11 row and
-    # text_scrub_pii's local tri-SF sweeps)
-    "text_scrub_pii",
-    # bumped by decontaminate_fuzzy (r7-era; the intra-doc repetition
-    # family still re-proves via repetition_gate's r12 row and
-    # text_quality's quality-family siblings)
-    "text_repetition",
-    # bumped by snapshot_divergence_js (r7-era; the quality family
-    # re-proves via pipeline_filter_quality's seat in this window and
-    # quality_filter_funnel's r12 row)
-    "text_quality",
-    # bumped by multimodal_dhash_neardup (r7-era; the streaming-window
-    # family re-proves via session_window_native's seat in this
-    # window and the r10/r11 streaming rows)
-    "streaming_window",
-    # bumped by multimodal_dhash_unique (r7-era; the session-window
-    # family re-proves via event_session's seat in this window and
-    # streaming_session_window's r10 row)
-    "session_window_native",
-    # bumped by decontaminate_fuzzy_unique (r7-era; the stratified-
-    # sampling family re-proves via weighted_sample_topk's r10 row
-    # and mixture_sample_temperature's seat in the round-14 pool)
-    "sample_per_lang_topk",
-)
-
-# The four r7-era rows the second- and third-wave amendments deferred
-# to round 14 (named, not silently dropped — the standing deferral
-# discipline). The salted twins' unsalted siblings re-prove in the
-# round-11/12 windows (and event_session itself stays in this pool);
-# cosine_knn_exact is the documented all-pairs ANN diagnostic whose
-# family re-proves via ann_lsh_bands / ann_ivf_cell_assign here.
-ROUND13_DEFERRED: tuple[str, ...] = (
-    "time_weighted_avg_salted", "bounce_rate_daily_salted",
-    "event_session_salted", "cosine_knn_exact",
-)
-
-# Round-14 rotation pool, PRE-STAGED at round-13 build time (the
-# standing receipt pattern): once CORRECTNESS_r13 lands green on the
-# round-13 window, the stalest rows are (a) the 4 re-proofs the
-# round-13 additions bumped (ROUND13_BUMPED, r7-era), (b) the 4 named
-# r7-era ROUND13_DEFERRED rows, and (c) the r8-era oracle-backed rows
-# (newest driver row = CORRECTNESS_r08) — 37 of them, so 4 defer to
-# round 15 by name (ROUND14_DEFERRED below) preferring family
-# redundancy: dedup_simhash_pairs (simhash family re-proves via
-# dedup_simhash r13 + the dhash sibling), dedup_embedding_band_keys
-# (embedding-band family re-proves via ann_lsh_bands /
-# dedup_embedding_cosine r13), tpch_q1 (the TPC-H agg family re-proved
-# across r12/r13 windows; q1 also runs every round as a bench-core
-# query), contamination_overlap (contamination family re-proves via
-# decontaminate_ngram + decontaminate_fuzzy r13). Composition computed
-# from the recorded CORRECTNESS files in
-# tests/test_registry.py::test_round14_pool_is_prestaged so the pin
-# cannot rot. Queries ADDED during round 14 take priority — bump
-# re-proofs from this tuple's end, per the standing recipe.
-ROUND14_ROTATION_POOL: tuple[str, ...] = (
-    # the round-13 bumps (r7-era, stalest-first)
-    "text_scrub_pii", "text_repetition", "text_quality",
-    "streaming_window", "session_window_native", "sample_per_lang_topk",
-    # the named r7-era round-13 deferrals
-    "time_weighted_avg_salted", "bounce_rate_daily_salted",
-    "event_session_salted", "cosine_knn_exact",
-    # the r8-era rows (newest driver row = CORRECTNESS_r08) minus the
-    # six named round-15 deferrals
-    "asof_cogroup_pandas", "bm25_topk", "chunk_overlap",
-    "corpus_report", "decontaminate_bloom", "dedup_containment",
-    "dedup_keep_best", "dedup_semdedup", "drift_ks_binned",
-    "dsir_importance", "embedding_stats", "event_hopping_window",
-    "exact_distinct_agg", "join_skew_salted", "kmeans_assign",
-    "mixture_sample_temperature", "multimodal_framesample", "ngram_freq",
-    "pandas_udaf_mean", "perplexity_unigram", "pq_encode",
-    "quality_gopher", "scalar_json",
-    "shingle_fingerprints", "stats_agg", "streaming_hopping",
-    "substring_dup_rate", "text_normalize",
-    "token_count_est", "train_split_hash", "udtf_tokenize",
-)
-
-# The five r8-era rows the 41-slot cap defers to round 15 (named, not
-# silently dropped — the standing deferral discipline; family
-# rationale in the pool comment above; quality_deciles joined the
-# list when the wave-3 addition's bump re-seated
-# session_window_native here — its family re-proves via
-# quality_deciles_approx's r12 row and text_quality's seat in this
-# pool).
-ROUND14_DEFERRED: tuple[str, ...] = (
-    "dedup_simhash_pairs", "dedup_embedding_band_keys", "tpch_q1",
-    "contamination_overlap", "quality_deciles",
-    # joined when the decontaminate_fuzzy_unique bump re-seated
-    # sample_per_lang_topk here (tf-idf ranking family re-proves via
-    # bm25_topk's seat in this same pool)
-    "tfidf_top_terms",
-)
-
-# Round-12 window, RETIRED (was active during round 12; flipped at
-# round-12 open in the same commit as the test-pin rewrite, per the
-# codified round-5 lesson and VERDICT r11 "Next round" #1): 9 core +
-# the 41-slot pool above = exactly 50, all oracle-backed — the FOURTH
-# consecutive all-oracle window. CORRECTNESS_r12 landed 50/50 green
-# (zero errs), clearing the r6-era re-proof debt except the two NAMED
-# round-13 deferrals (tpch_q5/tpch_q7).
-ROUND12_WINDOW_PLAN: tuple[str, ...] = CORE_WINDOW + ROUND12_ROTATION_POOL
-
-# Round-13 window, ACTIVE (flipped at round-13 open in the same commit
-# as the test-pin rewrite, per the codified recipe and VERDICT r12
-# "Next round" #1): 9 core + the pre-staged 41-slot pool above =
-# exactly 50, all oracle-backed — the FIFTH consecutive all-oracle
-# window. Every pool member was pre-verified parity-green in the
-# round-12 whole-registry sweeps (tri-SF + hostile), and the full
-# 50-query window was re-swept at sf0.01 immediately before this flip
-# (round-13 open, 2026-08-16). Once CORRECTNESS_r13 lands green, the
-# entire r6-era tail (the 9 round-12 bumps + tpch_q5/q7) is cleared
-# and the r7-era cohort shrinks to the four NAMED round-14 deferrals
-# (ROUND13_DEFERRED above).
-ROUND13_WINDOW_PLAN: tuple[str, ...] = CORE_WINDOW + ROUND13_ROTATION_POOL
-
-DRIVER_WINDOW: tuple[str, ...] = ROUND13_WINDOW_PLAN
-
 
 def _ordered(names: dict[str, object]) -> list[str]:
+    window = set(DRIVER_WINDOW)
     front = [n for n in DRIVER_WINDOW if n in names]
-    rest = [n for n in names if n not in set(DRIVER_WINDOW)]
+    rest = [n for n in names if n not in window]
     return front + rest
 
 

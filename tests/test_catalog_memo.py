@@ -9,8 +9,11 @@ memo hits too.
 
 from __future__ import annotations
 
+import shutil
+
 from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.catalog import (
     _READ_MEMO,
+    _SPREAD_MEMO,
     spread,
     table,
 )
@@ -22,9 +25,10 @@ def test_table_memo_hits_within_session(spark, sf_dir):
     assert a is b
 
 
-def test_table_memo_keyed_by_sf_dir(spark, sf_dir):
+def test_table_memo_keyed_by_sf_dir(spark, sf_dir, tmp_path):
+    shutil.copy(f"{sf_dir}/documents.parquet", tmp_path / "documents.parquet")
     a = table(spark, sf_dir, "documents")
-    b = table(spark, "/root/testdata/sf0.01", "documents")
+    b = table(spark, str(tmp_path), "documents")
     assert a is not b
     # and the memoized plans really point at different fixture files
     assert set(a.inputFiles()) != set(b.inputFiles())
@@ -73,6 +77,18 @@ def test_spread_noops_on_wide_frames(spark, sf_dir):
     pre-partitioned)."""
     wide = spread(table(spark, sf_dir, "documents"))
     assert spread(wide) is wide
+
+
+def test_spread_memo_skips_derived_frames(spark, sf_dir):
+    """Only the frames ``table()`` returns are memoized: a fresh derived
+    frame per call (one per micro-batch on the incremental dedup path)
+    adds no entry, so the memo stays bounded."""
+    docs = table(spark, sf_dir, "documents")
+    spread(docs)
+    before = len(_SPREAD_MEMO)
+    for i in range(50):
+        spread(docs.filter(docs.doc_id != i))
+    assert len(_SPREAD_MEMO) == before
 
 
 def test_memo_is_lazy_only(spark, sf_dir):

@@ -7,22 +7,20 @@ sort, ``"word count"`` formatting.
 """
 
 import gzip
-import io
 import os
 import random
 import re
 from collections import Counter
-from contextlib import redirect_stdout
 
 import pytest
 from pyspark.errors import AnalysisException, PySparkException
-from pyspark.sql.readwriter import DataFrameWriter
 
 from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.operators.mapreduce import (
     JobConfig,
     run_job,
 )
 from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.sources.text import chunked_lines
+from tools.explain_dump import written_plan
 
 LINES = [
     "apple banana apple cherry ",
@@ -329,24 +327,6 @@ def build_jobs(spark, path, chunk_size):
     return job_ids(spark) - before
 
 
-def run_job_plan(spark, cfg, monkeypatch):
-    """Run ``cfg`` and return the formatted physical plan of the frame
-    ``run_job`` writes."""
-    plans = []
-    write = DataFrameWriter.text
-
-    def text(self, *a, **kw):
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            self._df.explain("formatted")
-        plans.append(buf.getvalue())
-        return write(self, *a, **kw)
-
-    monkeypatch.setattr(DataFrameWriter, "text", text)
-    run_job(spark, cfg)
-    return plans[0]
-
-
 def exchanges(plan):
     """The argument line of every Exchange node in a formatted plan."""
     return re.findall(r"^\(\d+\) Exchange\n(?:Input \[.*\n)?Arguments: (.*)$", plan, re.M)
@@ -389,19 +369,19 @@ def test_one_block_input_builds_without_jobs(spark, input_file):
     assert build_jobs(spark, input_file, 2) == set()
 
 
-def test_one_block_input_shuffles_only_on_pid(spark, tmp_path, input_file, locality_file, monkeypatch):
+def test_one_block_input_shuffles_only_on_pid(spark, tmp_path, input_file, locality_file):
     """A one-block input runs its map side (chunking, tokenizing,
     counting) in the scan task: the pid repartition is the written
     plan's only exchange, as the reference's map task shuffles once."""
     cfg = faithful("one", input_file, 2, locality_file, tmp_path)
-    plan = run_job_plan(spark, cfg, monkeypatch)
+    plan = written_plan(spark, cfg)
     found = exchanges(plan)
     assert len(found) == 1 and "REPARTITION_BY_NUM" in found[0], found
     assert "ENSURE_REQUIREMENTS" not in plan
     assert_faithful_output(cfg, LINES)
 
 
-def test_multi_block_input_keeps_count_job_and_exchanges(spark, tmp_path, locality_file, monkeypatch):
+def test_multi_block_input_keeps_count_job_and_exchanges(spark, tmp_path, locality_file):
     """An input of several scan blocks still counts each block's lines
     in a build-time job and keeps the chunk and word exchanges."""
     lines = [f"w{i % 13} x{i % 7} " for i in range(200)]
@@ -413,7 +393,7 @@ def test_multi_block_input_keeps_count_job_and_exchanges(spark, tmp_path, locali
     spark.conf.set(key, "300")
     try:
         assert build_jobs(spark, str(p), 7)
-        plan = run_job_plan(spark, cfg, monkeypatch)
+        plan = written_plan(spark, cfg)
     finally:
         spark.conf.set(key, prior)
     found = exchanges(plan)
@@ -422,7 +402,7 @@ def test_multi_block_input_keeps_count_job_and_exchanges(spark, tmp_path, locali
     assert_faithful_output(cfg, lines)
 
 
-def test_large_gzip_input_keeps_exchanges(spark, tmp_path, locality_file, monkeypatch):
+def test_large_gzip_input_keeps_exchanges(spark, tmp_path, locality_file):
     """A gzip file is one block however large, so it needs no count
     job; but one larger than ``spark.sql.files.maxPartitionBytes`` is
     not squeezed into one task and keeps its chunk and word exchanges."""
@@ -441,7 +421,7 @@ def test_large_gzip_input_keeps_exchanges(spark, tmp_path, locality_file, monkey
     spark.conf.set(key, "300")
     try:
         assert build_jobs(spark, str(p), 9) == set()
-        plan = run_job_plan(spark, cfg, monkeypatch)
+        plan = written_plan(spark, cfg)
     finally:
         spark.conf.set(key, prior)
     assert sum("ENSURE_REQUIREMENTS" in e for e in exchanges(plan)) == 2
@@ -457,3 +437,42 @@ def test_chunks_of_path_with_space_and_percent(spark, tmp_path):
     got = chunked_lines(spark, str(p), 3)
     want = [(i // 3 + 1, " ".join(lines[i : i + 3])) for i in range(0, 10, 3)]
     assert sorted(tuple(r) for r in got.collect()) == want
+
+
+def test_reduce_task_r_writes_reducer_r_plus_1(spark, tmp_path, locality_file, monkeypatch):
+    """Reducer r+1's file is written by write task r alone. On an input
+    whose first characters cover every residue mod 8, each write task's
+    recordsWritten equals the line count of its own reducer file, so
+    Complete_ReduceTask row r+1 logs the time of the task that wrote it."""
+    letters = [chr(c) for c in range(ord("a"), ord("a") + 16)]
+    assert {ord(c) % 8 for c in letters} == set(range(8))
+    lines = [" ".join(f"{c}{(i * 7 + j) % 5}" for j, c in enumerate(letters)) + " " for i in range(40)]
+    p = tmp_path / "residues.txt"
+    p.write_text("\n".join(lines) + "\n")
+    cfg = JobConfig(
+        "res", 8, 0, str(p), 3, locality_file, str(tmp_path / "or"),
+        drop_trailing_token=True, fuse_chunk_lines=True, partition_fn="first_char",
+    )
+    sc = spark.sparkContext
+    groups = []
+    set_group = sc.setJobGroup
+
+    def capture(group, *a, **kw):
+        groups.append(group)
+        return set_group(group, *a, **kw)
+
+    monkeypatch.setattr(sc, "setJobGroup", capture)
+    outputs = run_job(spark, cfg)
+    assert_faithful_output(cfg, lines)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    stage_ids = {s for j in tracker.getJobIdsForGroup(groups[0]) for s in tracker.getJobInfo(j).stageIds}
+    tasks = sc._jsc.sc().statusStore().taskList(max(stage_ids), 0, 1 << 20)
+    written = {}
+    for i in range(tasks.size()):
+        task = tasks.apply(i)
+        if task.status() == "SUCCESS":
+            written[task.index()] = task.taskMetrics().get().outputMetrics().recordsWritten()
+    file_lines = {r: len(read_out(outputs[f"reducer_{r + 1}"])) for r in range(8)}
+    assert all(file_lines.values())
+    assert written == file_lines

@@ -438,19 +438,13 @@ def test_q20_decorrelates_to_single_aggregate(spark, sf_dir):
 
 
 def test_o11_output_path_is_jvm_sorted(spark, tmp_path):
-    """The faithful O11 write (round-2 VERDICT "What's wrong" #1): the
-    per-reducer sort must be Tungsten's spillable in-partition Sort after
-    one exchange on pid — no Python evaluation (the old path buffered a
-    whole reducer partition through a Python sorted()) and no RDD source
-    anywhere from the text scan on — and the leading pid sort key means
-    the partition-by-value writer inserts no second, order-destroying
-    sort."""
-    from pyspark.sql import functions as F
-
-    from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.operators.mapreduce import (
-        JobConfig,
-        wordcount_df,
-    )
+    """The faithful O11 write, as ``run_job`` plans it (captured at
+    ``DataFrameWriter.text``): the per-reducer sort is Tungsten's
+    spillable in-partition Sort on (word, cnt) after one exchange that
+    routes each row to partition pid, with no Python evaluation and no
+    RDD source anywhere from the text scan on."""
+    from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.operators.mapreduce import JobConfig
+    from tools.explain_dump import written_plan
 
     p = tmp_path / "in.txt"
     p.write_text("a b c \nd e f \n")
@@ -458,26 +452,20 @@ def test_o11_output_path_is_jvm_sorted(spark, tmp_path):
         "wc", 3, 0, str(p), 1, None, str(tmp_path / "out"),
         partition_fn="first_char",
     )
-    staged = (
-        wordcount_df(spark, cfg)
-        .repartition(cfg.num_reducer, "pid")
-        .sortWithinPartitions(F.col("pid").asc(), F.col("word").asc(), F.col("cnt").asc())
-        .select("pid", F.concat_ws(" ", "word", "cnt").alias("value"))
-    )
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        staged.explain("formatted")
-    plan = buf.getvalue()
+    plan = written_plan(spark, cfg)
     # the whole path, O1 text read included, stays in the JVM: it starts
     # at the text scan and has no RDD source or Python evaluation
     assert "(1) Scan text" in plan
     for marker in ("ExistingRDD", "BatchEvalPython", "ArrowEvalPython"):
         assert marker not in plan
-    # the reducer sort is a JVM in-partition Sort keyed (pid, word, cnt)
+    # the reducer sort is a JVM in-partition Sort keyed (word, cnt) only:
+    # the partition already is the reducer
     sort_args = plan.split("Sort\n")[1].splitlines()[1]
-    assert "pid" in sort_args and "word" in sort_args and "cnt" in sort_args
-    # exactly one pid exchange, whatever other shuffles the input's size plans
+    assert "word" in sort_args and "cnt" in sort_args and "pid" not in sort_args
+    # exactly one pid exchange, whatever other shuffles the input's size
+    # plans, and it passes pid through as the partition id
     assert plan.count("REPARTITION_BY_NUM") == 1
+    assert "shufflepartitionidpassthrough" in plan
 
 
 def test_bloom_bits_ride_broadcast_not_plan(spark, sf_dir):

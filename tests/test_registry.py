@@ -1,10 +1,11 @@
 """Pins the driver-facing query ordering contract.
 
 The driver's correctness gate checks only the first 50 entries of
-``__spark_entry__.queries()``; round 1 lost every LLM-pipeline query to
-the core/TPC-H long tail.  These tests pin (a) the curated window is
-exactly the first 50 names, (b) every north-star family has rows inside
-it, and (c) docs' declared query counts match reality.
+``__spark_entry__.queries()``, so registration order alone would spend
+it on the core/TPC-H long tail.  These tests pin (a) the curated window
+is exactly the first 50 names, all registered, (b) every window slot is
+oracle-backed, (c) docs' declared query counts match reality, and
+(d) bench.py's fixed core and its full-map path.
 """
 
 from __future__ import annotations
@@ -25,138 +26,10 @@ def test_window_is_first_50():
     assert set(registry.DRIVER_WINDOW) <= set(names)
 
 
-def _checked(*rounds: str) -> set[str]:
-    import json
-
-    out: set[str] = set()
-    for rnd in rounds:
-        out |= set(json.load(open(REPO / f"CORRECTNESS_{rnd}.json")))
-    return out
-
-
-ALL_ROUNDS = ("r01", "r02", "r03", "r04", "r05")
-ROUND6_NEW = {"quality_deciles_approx", "session_paths_topk_salted"}
-
-# Rows-only slots that held round-8 window seats (historical — the
-# round-8 window carried these four under the driver's weaker check;
-# streaming_dedup / streaming_incremental_dedup graduated to full
-# oracles in round 9 and re-prove under them in the round-9 window).
-ROUND8_ROWS_ONLY = [
-    "dedup_minhash_mllib", "kmeans_lloyd",
-    "streaming_dedup", "streaming_incremental_dedup",
-]
-
-# The two r4-era re-proofs the round-9 oracle graduations bumped from
-# the round-9 pool (per the standing one-bump-per-addition recipe);
-# they lead the round-10 pool.
-ROUND9_BUMPED = {"window_range_frame", "xml_ingest"}
-
-# The round-9 oracle graduations (VERDICT r8 #4): driver-checked
-# rows-only in r1-r8, oracle-backed since round 9.
-ROUND9_GRADUATIONS = {"streaming_dedup", "streaming_incremental_dedup"}
-
-
-ROUND11_ADDITIONS = {
-    "snapshot_novelty", "split_cluster_safe", "pii_scrub_counts",
-    # graduated from rows-only in round 11 (hand-rolled md5 HLL —
-    # first ORACLE-backed driver row, though r1-era rows-only rows
-    # exist in the history files)
-    "hll_user_reach",
-    # second wave: token accounting
-    "tokenizer_fertility", "effective_token_budget",
-}
-
-
-# Queries added during round 12 (no ORACLE-backed driver row before
-# CORRECTNESS_r12; each took a priority window slot and bumped one
-# re-proof from the pool tuple's END, named in
-# registry.ROUND12_BUMPED). dedup_minhash_mllib is the round-12
-# graduation — rows-only history rows exist from the round-8 window.
-ROUND12_ADDITIONS: set[str] = {
-    "mixture_rebalance", "decontaminate_normalized", "repetition_gate",
-    "dedup_minhash_mllib",
-    # second wave
-    "quality_filter_funnel", "eval_contamination_report",
-    "mixture_epochs",
-    # third wave
-    "lang_metadata_mismatch", "dedup_threshold_sweep",
-}
-
-
-# Queries added during round 13 (no driver row before
-# CORRECTNESS_r13; each takes a priority window slot and bumps one
-# re-proof from the pool tuple's END, named in
-# registry.ROUND13_BUMPED).
-ROUND13_ADDITIONS: set[str] = {
-    # the scale-safe production twin of dedup_threshold_sweep
-    # (VERDICT r12 "What's wrong" #2)
-    "dedup_threshold_sweep_sampled",
-    # the paraphrase eval-contamination protocol (VERDICT r12 #4c)
-    "decontaminate_fuzzy",
-    # per-source snapshot drift in bits (VERDICT r12 #4b)
-    "snapshot_divergence_js",
-    # image near-dup via banded dHash (VERDICT r12 #4a)
-    "multimodal_dhash_neardup",
-    # its exact-collapse-first production ordering (O(1) in the
-    # replication factor — the measured 1000× quadratic-wall fix)
-    "multimodal_dhash_unique",
-    # the same production ordering for fuzzy eval contamination (the
-    # full form OOMs at 48 g on the 1000× dup-heavy probe)
-    "decontaminate_fuzzy_unique",
-}
-
-
-def test_window_covers_rotation_targets():
-    """Round-13 rotation (VERDICT r12 "Next round" #1): the 41
-    rotating slots are ALL stale re-proofs — the 9 round-12 bumps
-    (eight r6-era + limit_offset), the 2 named r6-era tpch deferrals,
-    and the r7-era cohort minus the 4 named round-14 deferrals. Every
-    slot's latest oracle-backed driver row predates r08. Additions
-    made during round 13 take priority slots and bump named rows from
-    the pool tuple's end, per the standing recipe (this test is
-    amended alongside each wave)."""
-    window = set(registry.DRIVER_WINDOW)
-    core = set(registry.CORE_WINDOW)
-    assert core <= window
-    rotation = window - core
-    assert len(rotation) == 41
-    assert rotation == set(registry.ROUND13_ROTATION_POOL)
-    reproof = rotation - ROUND13_ADDITIONS
-    # every re-proof slot is a stale row: nothing re-checked since r07
-    assert reproof <= _checked(
-        "r01", "r02", "r03", "r04", "r05", "r06", "r07"
-    )
-    assert not (reproof & _checked("r08", "r09", "r10", "r11", "r12"))
-    # the additions have no driver row anywhere yet
-    assert not (ROUND13_ADDITIONS & _checked(
-        "r01", "r02", "r03", "r04", "r05", "r06", "r07", "r08", "r09",
-        "r10", "r11", "r12",
-    ))
-    # the bumps are named, not silent drops
-    assert len(registry.ROUND13_BUMPED) == len(ROUND13_ADDITIONS)
-    assert not (set(registry.ROUND13_BUMPED) & rotation)
-    # the round-12 bumps all re-seat here (the whole point of the
-    # bump bookkeeping: bumped, then seated stalest-first next round)
-    assert set(registry.ROUND12_BUMPED) <= rotation
-
-
-def _new_in_round7() -> set[str]:
-    """Queries added during round 7 (first driver row =
-    CORRECTNESS_r07)."""
-    return _checked("r07") - _checked(*ALL_ROUNDS, "r06")
-
-
-def _new_in_round8() -> set[str]:
-    """Queries added during round 8 (first driver row =
-    CORRECTNESS_r08)."""
-    return _checked("r08") - _checked(*ALL_ROUNDS, "r06", "r07")
-
-
 def test_window_mostly_oracle_backed():
     oracles = registry.all_oracles()
     rows_only = [n for n in registry.DRIVER_WINDOW if n not in oracles]
-    # round 10: the second consecutive ALL-ORACLE window — every slot
-    # hash-checked
+    # every slot is hash-checked, none rows-only
     assert rows_only == [], f"unexpected rows-only in window: {rows_only}"
 
 
@@ -171,268 +44,6 @@ def test_doc_counts_match_registry():
         assert (int(m.group(1)), int(m.group(2))) == (n_q, n_o), (
             f"{doc} claims {m.group(0)!r}; registry has {n_q}/{n_o}"
         )
-
-
-def test_round5_rotation_cleared_the_backlog():
-    """History pin (round 5): the round-5 window was exactly the 9-core
-    + the 41 then-never-checked queries, and the driver checked all 50
-    — so CORRECTNESS_r05 must equal core ∪ pool, and the pool must be
-    disjoint from everything checked in r01–r04. Expressed against the
-    recorded CORRECTNESS files, not the live window, so it stays true
-    as later rounds rotate."""
-    pool = set(registry.ROUND5_ROTATION_POOL)
-    assert _checked("r05") == set(registry.CORE_WINDOW) | pool
-    assert not (pool & _checked("r01", "r02", "r03", "r04"))
-
-
-def test_round6_window_history():
-    """History pin (round 6): the driver checked exactly the round-6
-    window — core + the 2 round-6 additions + 39 r1-era re-proofs, with
-    `limit_offset` the single documented leftover. Expressed against the
-    recorded CORRECTNESS files so it stays true as later rounds
-    rotate."""
-    pool = set(registry.ROUND6_ROTATION_POOL)
-    assert _checked("r06") == set(registry.CORE_WINDOW) | pool
-    assert not (ROUND6_NEW & _checked(*ALL_ROUNDS))
-    r1_era = _checked("r01") - _checked("r02", "r03", "r04", "r05") - set(registry.CORE_WINDOW)
-    assert pool == ROUND6_NEW | (r1_era - {"limit_offset"})
-    assert "limit_offset" in r1_era  # the one deferred re-proof
-
-
-def test_round7_window_history():
-    """History pin (round 7): the driver checked exactly the round-7
-    window — core + the 5 round-7 additions + `limit_offset` + 35
-    r2-era re-proofs, 44 oracle rows + 6 declared rows-only, zero
-    failures. Expressed against the recorded CORRECTNESS files so it
-    stays true as later rounds rotate."""
-    pool = set(registry.ROUND7_ROTATION_POOL)
-    assert _checked("r07") == set(registry.CORE_WINDOW) | pool
-    new7 = _new_in_round7()
-    assert not (new7 & _checked(*ALL_ROUNDS, "r06"))
-    assert new7 <= pool
-    # re-proof slots were r1/r2-era: limit_offset + r2-era rows
-    assert (pool - new7) <= {"limit_offset"} | (
-        _checked("r02") - _checked("r03", "r04", "r05", "r06")
-    )
-
-
-ROUND8_DEFERRED = {"tpch_q2", "tpch_q9", "tpch_q16", "tpch_q20", "tpch_q21", "tpch_q22"}
-ROUND8_BUMPED = {"tpch_q11", "tpch_q15"}  # bumped by the 2 round-8 additions
-
-
-def test_round8_pool_is_registered_and_freshness_ordered():
-    """The ACTIVE round-8 pool must contain only names that exist
-    (anti-phantom) and follow its documented recipe: the round-8
-    additions (priority slots) + the six round-7 leftovers (the oldest
-    green rows) + the r3-era rows minus the six named family-redundant
-    TPC-H deferrals minus the re-proofs the additions bumped. The
-    r3-era set is computed from the recorded CORRECTNESS files minus
-    the round-7 window plan (whose rows CORRECTNESS_r07 re-proved), so
-    the pin cannot rot."""
-    pool = set(registry.ROUND8_ROTATION_POOL)
-    assert len(registry.ROUND8_ROTATION_POOL) == 41
-    assert pool <= set(registry.all_queries()), pool - set(registry.all_queries())
-    new8 = _new_in_round8()
-    assert new8 <= pool, new8 - pool  # additions never wait
-    r7_left = {
-        "chunk_overlap", "udtf_tokenize", "train_split_hash", "tpch_q1",
-        "token_count_est", "tfidf_top_terms",
-    }
-    r3_era = (
-        _checked("r03")
-        - _checked("r04", "r05", "r06")
-        - set(registry.CORE_WINDOW)
-        - set(registry.ROUND7_WINDOW_PLAN)
-    )
-    assert ROUND8_DEFERRED <= r3_era
-    assert ROUND8_BUMPED <= r3_era
-    assert pool == new8 | r7_left | (r3_era - ROUND8_DEFERRED - ROUND8_BUMPED)
-    # one bumped re-proof per addition — the bumps are not silent drops
-    assert len(ROUND8_BUMPED) == len(new8)
-
-
-def test_round8_window_history():
-    """History pin (round 8): the driver checked exactly the round-8
-    window — 46 oracle rows + the 4 declared rows-only slots, zero
-    failures. Expressed against the recorded CORRECTNESS files so it
-    stays true as later rounds rotate."""
-    import json
-
-    assert _checked("r08") == set(registry.ROUND8_WINDOW_PLAN)
-    rows = json.load(open(REPO / "CORRECTNESS_r08.json"))
-    hash_checked = {n for n, r in rows.items() if r.get("hash_match")}
-    assert set(registry.ROUND8_WINDOW_PLAN) - hash_checked == set(ROUND8_ROWS_ONLY)
-
-
-# The thirteen r4-era rows deferred from the round-9 pool, each family-
-# redundant with a fresher-proven member (see registry.py's pool
-# comment); they roll to round 10.
-ROUND9_DEFERRED = {
-    "delta_scan", "delta_time_travel", "streaming_dedup_watermarked",
-    "streaming_static_join", "streaming_stream_join", "streaming_topk",
-    "multimodal_dedup", "dup_cluster_histogram", "anomaly_zscore",
-    "url_canonicalize", "sql_udf_scoring", "json_quarantine",
-    "collated_distinct",
-}
-
-# Queries whose oracles were upgraded mid-round-8 from rows-only to
-# full DuckDB replay while sitting OUTSIDE the round-8 window — they
-# take round-9 slots so the new oracles earn a driver row.
-ROUND8_ORACLE_UPGRADES_OUTSIDE_WINDOW = {
-    "ann_lsh_topk", "ann_ivf_topk", "dedup_embedding_cosine_bucketed",
-    "multimodal_features", "multimodal_embed_ann",
-}
-
-
-def test_round9_pool_is_registered():
-    """The ACTIVE round-9 pool (VERDICT r8 "Next round" #1 + #4) must
-    contain only names that exist (anti-phantom) and follow its
-    documented recipe: the two round-9 streaming oracle graduations +
-    the six r8-deferred TPC-H rows + the two re-proofs the round-8
-    additions bumped + the five round-8 oracle upgrades outside the
-    round-8 window + the r4-era rows minus the thirteen named family-
-    redundant deferrals minus the two re-proofs the graduations bumped.
-    The r4-era set is computed from the recorded CORRECTNESS files
-    minus the round-8 window plan, so the pin cannot rot."""
-    pool = set(registry.ROUND9_ROTATION_POOL)
-    assert len(registry.ROUND9_ROTATION_POOL) == 41
-    assert pool <= set(registry.all_queries()), pool - set(registry.all_queries())
-    # the upgrades/graduations really are oracle-backed; the upgrades
-    # really sat outside the round-8 window
-    oracles = set(registry.all_oracles())
-    assert ROUND8_ORACLE_UPGRADES_OUTSIDE_WINDOW <= oracles
-    assert ROUND9_GRADUATIONS <= oracles
-    assert not (ROUND8_ORACLE_UPGRADES_OUTSIDE_WINDOW
-                & set(registry.ROUND8_WINDOW_PLAN))
-    r4_era = (
-        _checked("r04")
-        - _checked("r05", "r06", "r07")
-        - set(registry.CORE_WINDOW)
-        - set(registry.ROUND8_WINDOW_PLAN)
-    )
-    assert ROUND9_DEFERRED <= r4_era
-    assert ROUND9_BUMPED <= r4_era
-    assert pool == (
-        ROUND9_GRADUATIONS
-        | ROUND8_DEFERRED | ROUND8_BUMPED
-        | ROUND8_ORACLE_UPGRADES_OUTSIDE_WINDOW
-        | (r4_era - ROUND9_DEFERRED - ROUND9_BUMPED)
-    )
-    # one bumped re-proof per graduation — the bumps are not silent drops
-    assert len(ROUND9_BUMPED) == len(ROUND9_GRADUATIONS)
-
-
-def test_round9_window_history():
-    """History pin (round 9): the driver checked exactly the round-9
-    window — the first all-oracle window, 50/50 hash-checked, zero
-    failures. Expressed against the recorded CORRECTNESS files so it
-    stays true as later rounds rotate."""
-    import json
-
-    assert _checked("r09") == set(registry.ROUND9_WINDOW_PLAN)
-    rows = json.load(open(REPO / "CORRECTNESS_r09.json"))
-    assert all(
-        r["rows_match"] and r["schema_match"] and r["hash_match"]
-        and r["err"] is None
-        for r in rows.values()
-    )
-
-
-# Round-10 additions (VERDICT r9 #4/#5/#6): the closed-form PCA
-# foothold, the fully-replayed two-round Lloyd bridge, the cross-
-# snapshot fuzzy dedup, and the context-window lineage table — all
-# oracle-backed.
-ROUND10_ADDITIONS = {
-    "pca_project_2d", "kmeans_two_rounds",
-    "dedup_cross_snapshot_fuzzy", "context_window_lineage",
-    "embedding_drift_by_label",
-    # second wave: the evalmetrics module
-    "quality_score_auc", "score_calibration_bins",
-    "label_agreement_kappa", "benford_first_digit",
-    "kaplan_meier_conversion",
-    # third wave: basket mining, embedding outliers, streaming sessions
-    "copurchase_pairs", "embedding_mahalanobis_outliers",
-    "streaming_session_window",
-    # fourth wave: weighted sampling, multi-touch attribution, PQ audit
-    "weighted_sample_topk", "attribution_position_based",
-    "pq_reconstruction_error",
-    # fifth wave: JSON profiling, RFM, pipe syntax, MMR re-rank
-    "json_schema_profile", "rfm_segmentation", "sql_pipe_syntax",
-    "ann_mmr_rerank",
-    # sixth wave: ORC round trip, exact-substring decontamination,
-    # left-outer stream-stream join
-    "orc_scan", "decontaminate_substring", "streaming_stream_left_join",
-    # seventh wave: FK-orphan audit, day-of-week seasonality
-    "referential_integrity_audit", "seasonality_dow",
-}
-
-# The re-proofs the round-10 additions bumped from the pool's end
-# (per the standing one-bump-per-addition recipe); they roll to
-# round 11.
-ROUND10_BUMPED = {
-    "winsorized_stats", "zorder_layout",
-    "value_histogram", "vocab_growth_curve", "user_overlap_jaccard",
-    # bumped by the evalmetrics wave
-    "tfidf_cosine_pairs", "sql_parameterized", "skew_report",
-    "readability_flesch", "quantile_normalize",
-    # bumped by the third wave
-    "pmi_collocations", "pit_state_at_event", "null_semantics",
-    # bumped by the fourth wave
-    "linreg_by_key", "latency_percentile_bands", "l_diversity_check",
-    # bumped by the fifth wave
-    "join_nullsafe_keys", "gini_label_balance", "entropy_profile",
-    "encode_corpus",
-    # bumped by the sixth wave
-    "chi2_independence", "burst_detection", "arrow_udf_reverse",
-    # bumped by the seventh wave
-    "abc_analysis", "anomaly_mad",
-}
-
-# The fifteen r5-era rows deferred from the round-10 pool, each family-
-# redundant with a fresher-proven member (see registry.py's pool
-# comment); they roll to round 11.
-ROUND10_DEFERRED = {
-    "arrow_map_batches", "bounce_rate_daily", "bpe_merges",
-    "decayed_engagement", "drift_ks_test", "funnel_weekly_trend",
-    "fuzzy_name_match", "hll_user_reach", "pca_project",
-    "python_stream_source", "revenue_yoy_growth",
-    "schema_evolution_scan", "session_paths_topk", "time_weighted_avg",
-    "udtf_analyze_split",
-}
-
-
-def test_round10_pool_is_registered():
-    """The ACTIVE round-10 pool (VERDICT r9 "Next round" #1 + #4 + #5)
-    must contain only names that exist (anti-phantom) and follow its
-    documented recipe: the two round-10 additions (priority slots) +
-    the two re-proofs the round-9 graduations bumped + the thirteen
-    r4-era rows deferred from round 9 + the r5-era rows minus the
-    fifteen named family-redundant deferrals minus the re-proofs the
-    additions bumped. The r5-era set is computed from the recorded
-    CORRECTNESS files minus the round-9 window plan, so the pin cannot
-    rot."""
-    pool = set(registry.ROUND10_ROTATION_POOL)
-    assert len(registry.ROUND10_ROTATION_POOL) == 41
-    assert pool <= set(registry.all_queries()), pool - set(registry.all_queries())
-    # the additions really are oracle-backed
-    assert ROUND10_ADDITIONS <= set(registry.all_oracles())
-    r5_era = (
-        _checked("r05")
-        - _checked("r06", "r07", "r08")
-        - set(registry.CORE_WINDOW)
-        - set(registry.ROUND9_WINDOW_PLAN)
-    )
-    assert ROUND10_DEFERRED <= r5_era
-    assert ROUND10_BUMPED <= r5_era
-    assert pool == (
-        ROUND10_ADDITIONS | ROUND9_BUMPED | ROUND9_DEFERRED
-        | (r5_era - ROUND10_DEFERRED - ROUND10_BUMPED)
-    )
-    # one bumped re-proof per addition — the bumps are not silent drops
-    assert len(ROUND10_BUMPED) == len(ROUND10_ADDITIONS)
-    # history pin: the round-10 driver checked exactly that window,
-    # all green (CORRECTNESS_r10 = the recorded receipt)
-    assert _checked("r10") == set(registry.ROUND10_WINDOW_PLAN)
 
 
 def test_bench_core_is_pinned():
@@ -495,165 +106,3 @@ def test_bench_full_map_defaults_to_temp_path():
         REPO / "bench_full.json"
     )
     assert bench._full_map_path(["--out", "/tmp/x.json"]) == "/tmp/x.json"
-
-
-def test_round11_pool_is_active():
-    """The round-11 pool (pre-staged at round-10 close, flipped ACTIVE
-    at round-11 open, then amended in the same commits as the round-11
-    additions landed — VERDICT r10 "Next round" #1 + #5 + #7): 41
-    unique names, all registered, all oracle-backed (the third
-    consecutive all-oracle window), disjoint from the round-10 window,
-    and composed of exactly the 6 round-11 additions plus 35 of the
-    37 r5-era oracle-backed leftovers; the pre-staged 4 r6-era picks
-    and the 2 second-wave r5-era bumps were displaced by the additions
-    and take round-12 slots (ROUND11_BUMPED / the amended
-    ROUND12_ROTATION_POOL)."""
-    pool = registry.ROUND11_ROTATION_POOL
-    assert len(pool) == 41 and len(set(pool)) == 41
-    assert set(pool) <= set(registry.all_queries())
-    assert set(pool) <= set(registry.all_oracles())
-    assert not (set(pool) & set(registry.ROUND10_WINDOW_PLAN))
-    r5_era = (
-        _checked("r05")
-        - _checked("r06", "r07", "r08", "r09")
-        - set(registry.ROUND10_WINDOW_PLAN)
-        - set(registry.CORE_WINDOW)
-    )
-    r5_oracle = r5_era & set(registry.all_oracles()) - ROUND11_ADDITIONS
-    second_wave_bumps = {"time_weighted_avg", "udtf_analyze_split"}
-    assert second_wave_bumps <= r5_oracle
-    assert r5_oracle - second_wave_bumps <= set(pool)
-    assert set(pool) - r5_oracle == ROUND11_ADDITIONS
-    # retired: the round-11 plan is no longer the live window
-    assert registry.ROUND11_WINDOW_PLAN != registry.DRIVER_WINDOW
-
-
-def test_round12_pool_is_active():
-    """The RETIRED round-12 pool (active during round 12, 50/50 green
-    in CORRECTNESS_r12): 41 unique names, all registered, all
-    oracle-backed (the fourth consecutive all-oracle window),
-    disjoint from the round-11 window, and composed of the two r5-era
-    second-wave bumps (the stalest rows anywhere) + the r6-era
-    oracle-backed rows (newest driver row = CORRECTNESS_r06) minus
-    the two named tpch deferrals + limit_offset, the oldest r7-era
-    row (the documented round-6 window leftover). Computed from the
-    recorded CORRECTNESS files so the pin cannot rot."""
-    pool = registry.ROUND12_ROTATION_POOL
-    assert len(pool) == 41 and len(set(pool)) == 41
-    assert set(pool) <= set(registry.all_queries())
-    assert set(pool) <= set(registry.all_oracles())
-    assert not (set(pool) & set(registry.ROUND11_WINDOW_PLAN))
-    r6_era = (
-        _checked("r06")
-        - _checked("r07", "r08", "r09", "r10")
-        - set(registry.ROUND11_WINDOW_PLAN)
-    ) & set(registry.all_oracles())
-    r5_bumps = {"time_weighted_avg", "udtf_analyze_split"}
-    assert set(registry.ROUND11_BUMPED) - r5_bumps <= r6_era
-    assert r5_bumps <= _checked("r05")
-    assert not (r5_bumps & _checked("r06", "r07", "r08", "r09", "r10"))
-    assert set(registry.ROUND12_DEFERRED) == {"tpch_q5", "tpch_q7"}
-    assert set(registry.ROUND12_DEFERRED) <= r6_era
-    # pre-staged composition, amended by the round-12 additions: each
-    # addition took a slot and bumped one named row from the tuple's
-    # end (the standing one-bump-per-addition recipe)
-    prestaged = (
-        r5_bumps
-        | (r6_era - set(registry.ROUND12_DEFERRED))
-        | {"limit_offset"}
-    )
-    assert set(registry.ROUND12_BUMPED) <= prestaged
-    assert len(registry.ROUND12_BUMPED) == len(ROUND12_ADDITIONS)
-    assert set(pool) == ROUND12_ADDITIONS | (
-        prestaged - set(registry.ROUND12_BUMPED)
-    )
-    # limit_offset really is r7-era (bumped, so it re-seats in the
-    # round-13 pool behind the three staler r6-era window picks)
-    assert "limit_offset" in _checked("r07")
-    assert "limit_offset" not in _checked("r08", "r09", "r10")
-    # retired: the round-12 plan is no longer the live window
-    assert registry.ROUND12_WINDOW_PLAN == (
-        registry.CORE_WINDOW + registry.ROUND12_ROTATION_POOL
-    )
-    assert registry.ROUND12_WINDOW_PLAN != registry.DRIVER_WINDOW
-
-
-def test_round13_pool_is_active():
-    """The ACTIVE round-13 pool (pre-staged at round-12 build time,
-    amended by the round-12 waves, flipped ACTIVE at round-13 open in
-    the same commit as this pin rewrite — VERDICT r12 "Next round"
-    #1): 41 unique names, all registered, all oracle-backed (the
-    fifth consecutive all-oracle window), disjoint from the retired
-    round-12 window, and composed of the round-13 additions (priority
-    slots) + the 9 round-12 bumps + the 2 named tpch deferrals + the
-    r7-era oracle-backed rows (newest driver row = CORRECTNESS_r07)
-    minus the 4 named round-14 deferrals minus the named round-13
-    bumps. Computed from the recorded CORRECTNESS files so the pin
-    cannot rot."""
-    pool = registry.ROUND13_ROTATION_POOL
-    assert len(pool) == 41 and len(set(pool)) == 41
-    assert set(pool) <= set(registry.all_queries())
-    assert set(pool) <= set(registry.all_oracles())
-    assert not (set(pool) & set(registry.ROUND12_WINDOW_PLAN))
-    r7_era = (
-        _checked("r07")
-        - _checked("r08", "r09", "r10", "r11")
-        - set(registry.ROUND12_WINDOW_PLAN)
-    ) & set(registry.all_oracles())
-    # the second-wave amendment: the 3 extra bumps displaced the
-    # r8-era filler pick and two NAMED r7-era salted twins (their
-    # unsalted siblings re-prove in the round-11/12 windows)
-    assert set(registry.ROUND13_DEFERRED) == {
-        "time_weighted_avg_salted", "bounce_rate_daily_salted",
-        "event_session_salted", "cosine_knn_exact",
-    }
-    assert set(registry.ROUND13_DEFERRED) <= r7_era
-    # pre-staged composition, amended by the round-13 additions: each
-    # addition took a priority slot and bumped one named row from the
-    # tuple's end (the standing one-bump-per-addition recipe)
-    prestaged = (
-        set(registry.ROUND12_BUMPED)
-        | set(registry.ROUND12_DEFERRED)
-        | (r7_era - set(registry.ROUND13_DEFERRED))
-    )
-    assert set(registry.ROUND13_BUMPED) <= prestaged
-    assert set(pool) == ROUND13_ADDITIONS | (
-        prestaged - set(registry.ROUND13_BUMPED)
-    )
-    # the live window IS the round-13 plan
-    assert registry.ROUND13_WINDOW_PLAN == (
-        registry.CORE_WINDOW + registry.ROUND13_ROTATION_POOL
-    )
-    assert registry.DRIVER_WINDOW == registry.ROUND13_WINDOW_PLAN
-
-
-def test_round14_pool_is_prestaged():
-    """The INACTIVE round-14 pool (pre-staged at round-13 build time):
-    41 unique names, all registered, all oracle-backed, disjoint from
-    the active round-13 window, and composed of the 4 round-13 bumps
-    + the 4 named r7-era round-13 deferrals + the r8-era
-    oracle-backed rows (newest driver row = CORRECTNESS_r08) minus
-    the 6 named round-15 deferrals. Computed from the recorded
-    CORRECTNESS files so the pin cannot rot."""
-    pool = registry.ROUND14_ROTATION_POOL
-    assert len(pool) == 41 and len(set(pool)) == 41
-    assert set(pool) <= set(registry.all_queries())
-    assert set(pool) <= set(registry.all_oracles())
-    assert not (set(pool) & set(registry.ROUND13_WINDOW_PLAN))
-    r8_era = (
-        _checked("r08")
-        - _checked("r09", "r10", "r11", "r12")
-        - set(registry.ROUND13_WINDOW_PLAN)
-    ) & set(registry.all_oracles())
-    assert set(registry.ROUND14_DEFERRED) == {
-        "dedup_simhash_pairs", "dedup_embedding_band_keys", "tpch_q1",
-        "contamination_overlap", "quality_deciles", "tfidf_top_terms",
-    }
-    assert set(registry.ROUND14_DEFERRED) <= r8_era
-    assert set(pool) == (
-        set(registry.ROUND13_BUMPED)
-        | set(registry.ROUND13_DEFERRED)
-        | (r8_era - set(registry.ROUND14_DEFERRED))
-    )
-    # the live window stays round 13 until the next round flips it
-    assert registry.DRIVER_WINDOW == registry.ROUND13_WINDOW_PLAN

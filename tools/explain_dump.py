@@ -21,52 +21,64 @@ from nthu_cs542200_parallel_programming_hw4_mapreduce_spark import registry
 from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.session import get_spark
 
 
+def written_plan(spark, cfg) -> str:
+    """Run ``cfg`` through ``run_job`` and return the formatted physical
+    plan of the frame it writes, captured at ``DataFrameWriter.text``."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.operators.mapreduce import run_job
+
+    plans = []
+    write = DataFrameWriter.text
+
+    def text(self, *a, **kw):
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            self._df.explain("formatted")
+        plans.append(buf.getvalue())
+        return write(self, *a, **kw)
+
+    DataFrameWriter.text = text
+    try:
+        run_job(spark, cfg)
+    finally:
+        DataFrameWriter.text = write
+    return plans[0]
+
+
 def o11_section(spark) -> str:
-    """Plan of the faithful O11 output path (not a registry query):
-    the shuffle-sorted write that replaced the round-2 Python
-    per-partition sort (VERDICT r2 "What's wrong" #1)."""
+    """Plan of the faithful O11 output path (not a registry query): the
+    frame ``run_job`` writes, a JVM shuffle-sorted write with no Python
+    per-partition sort."""
     import tempfile
 
-    from pyspark.sql import functions as F
+    from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.operators.mapreduce import JobConfig
 
-    from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.operators.mapreduce import (
-        JobConfig,
-        wordcount_df,
-    )
-
-    d = tempfile.mkdtemp()
-    p = os.path.join(d, "in.txt")
-    with open(p, "w") as f:
-        f.write("a b c \nd e f \n")
-    cfg = JobConfig("wc", 3, 0, p, 1, None, os.path.join(d, "out"),
-                    partition_fn="first_char")
-    staged = (
-        wordcount_df(spark, cfg)
-        .repartition(cfg.num_reducer, "pid")
-        .sortWithinPartitions(F.col("pid").asc(), F.col("word").asc(),
-                              F.col("cnt").asc())
-        .select("pid", F.concat_ws(" ", "word", "cnt").alias("value"))
-    )
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        staged.explain("formatted")
+    with tempfile.TemporaryDirectory() as d:
+        p = os.path.join(d, "in.txt")
+        with open(p, "w") as f:
+            f.write("a b c \nd e f \n")
+        cfg = JobConfig("wc", 3, 0, p, 1, None, os.path.join(d, "out"),
+                        partition_fn="first_char")
+        plan = written_plan(spark, cfg)
     return (
         "## O11 faithful output path (run_job write stage)\n\n"
-        "One exchange on pid, then Tungsten's spillable in-partition Sort\n"
-        "on (pid, word, cnt); the partition-by-value text writer splits\n"
-        "files on pid and, because pid leads the sort key, inserts no\n"
-        "second sort. A hot first-char reducer partition (quirk Q3's\n"
-        "skew) spills in the JVM instead of buffering in a Python worker\n"
-        "(round-2 VERDICT fix). The plan starts at the JVM text scan (O1):\n"
-        "each line's file-ordered index is its monotonically_increasing_id\n"
-        "plus a literal per-block offset map, so no row reaches Python. This\n"
-        "input is one scan block, so its offset is 0 with no count job and\n"
-        "the scan is coalesced to one partition: chunking, tokenizing and\n"
-        "the word count run in the scan task, and the pid exchange is the\n"
-        "only shuffle, as after the reference's map task (O1-O7). An input\n"
-        "of several blocks counts each block's lines in one build-time job\n"
-        "and plans hash exchanges on chunk_id and word before this one.\n\n"
-        f"```\n{buf.getvalue().strip()}\n```\n"
+        "One exchange passes pid through as the partition id, so shuffle\n"
+        "partition r holds reducer r+1's words and nothing else; Tungsten's\n"
+        "spillable in-partition Sort then orders them on (word, cnt), and\n"
+        "write task r's part file becomes reducer r+1's output file. A hot\n"
+        "first-char reducer partition (quirk Q3's skew) spills in the JVM\n"
+        "instead of buffering in a Python worker. The plan starts at the JVM\n"
+        "text scan (O1): each line's file-ordered index is its\n"
+        "monotonically_increasing_id plus a literal per-block offset map, so\n"
+        "no row reaches Python. This input is one scan block, so its offset\n"
+        "is 0 with no count job and the scan is coalesced to one partition:\n"
+        "chunking, tokenizing and the word count run in the scan task, and\n"
+        "the pid exchange is the only shuffle, as after the reference's map\n"
+        "task (O1-O7). An input of several blocks counts each block's lines\n"
+        "in one build-time job and plans hash exchanges on chunk_id and word\n"
+        "before this one.\n\n"
+        f"```\n{plan.strip()}\n```\n"
     )
 
 
