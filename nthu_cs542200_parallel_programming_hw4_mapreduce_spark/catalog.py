@@ -31,7 +31,8 @@ BROADCAST_TABLES = ("region", "nation")
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: Per-SESSION memo of the lazy source DataFrames (round-14, guide §6 /
+#: Per-SESSION memo of the lazy source DataFrames, ``session_memo(spark)
+#: ["read"]`` keyed by (sf_dir, name) (round-14, guide §6 /
 #: VERDICT r13 "Next round" #1 — "register the parquet relations once
 #: per bench session"). A DataFrame here is an UNEXECUTED logical plan:
 #: no rows, no results, nothing persisted — every action still scans
@@ -39,12 +40,10 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: driver spends PER `spark.read.parquet` CALL on file listing + footer
 #: schema inference, paid 1-3× by every one of the 180 bench queries in
 #: one session (measured tools/floor_probe.py: fresh agg_count 379 ms →
-#: 280 ms with the read memoized). Keyed by applicationId so a stopped/
-#: recreated session never sees a stale JVM reference, and by exact
-#: (sf_dir, name) so distinct fixtures never alias. Fixture files are
-#: immutable per path (tests stage into fresh tempdirs), which is the
-#: one assumption a memoized file listing adds.
-_READ_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+#: 280 ms with the read memoized). Keyed by exact (sf_dir, name) so
+#: distinct fixtures never alias. Fixture files are immutable per path
+#: (tests stage into fresh tempdirs), which is the one assumption a
+#: memoized file listing adds.
 
 
 def _app_id(spark: SparkSession) -> str:
@@ -59,15 +58,22 @@ def _app_id(spark: SparkSession) -> str:
     return cached
 
 
-#: spread() decisions, memoized per (applicationId, id(df), parts) for
-#: the frames ``table()`` returned only: no other frame is passed twice
-#: (the incremental dedup path passes a new one per micro-batch), so
-#: memoizing those would only grow the memo. The value keeps a STRONG
-#: reference to the key DataFrame so its id() is never recycled while
-#: the entry lives.
-_SPREAD_MEMO: dict[
-    tuple[str, int, int | None], tuple[DataFrame, DataFrame]
-] = {}
+_SESSION_MEMO: tuple[str | None, dict] = (None, {})
+
+
+def session_memo(spark: SparkSession) -> dict:
+    """The live session's memo: one dict, keyed by memo name
+    (``"read"``, ``"spread"``, ``"schema"``), that every per-session
+    memo in the package lives under. A new applicationId replaces it
+    and empties the old one, so no entry (or its py4j objects) outlives
+    its session; a process has one SparkContext at a time, so one
+    owner is enough."""
+    global _SESSION_MEMO
+    app = _app_id(spark)
+    if _SESSION_MEMO[0] != app:
+        _SESSION_MEMO[1].clear()
+        _SESSION_MEMO = (app, {})
+    return _SESSION_MEMO[1]
 
 
 def spread(df: DataFrame, parts: int | None = None) -> DataFrame:
@@ -88,10 +94,19 @@ def spread(df: DataFrame, parts: int | None = None) -> DataFrame:
     ≥ target partitions, so this is a structural NO-OP there — the
     guard compares the actual scan partition count, not a constant.
     Non-file sources (or remote storage, where the source provides
-    splits) pass through untouched."""
+    splits) pass through untouched.
+
+    Decisions are memoized in ``session_memo(spark)["spread"]`` per
+    (id(df), parts), for the frames ``table()`` returned only: no other
+    frame is passed twice (the incremental dedup path passes a new one
+    per micro-batch), so memoizing those would only grow the memo. The
+    value keeps a STRONG reference to the key DataFrame so its id() is
+    never recycled while the entry lives."""
     spark = df.sparkSession
-    key = (_app_id(spark), id(df), parts)
-    hit = _SPREAD_MEMO.get(key)
+    memo = session_memo(spark)
+    spreads = memo.setdefault("spread", {})
+    key = (id(df), parts)
+    hit = spreads.get(key)
     if hit is not None and hit[0] is df:
         return hit[1]
     out = df
@@ -103,8 +118,8 @@ def spread(df: DataFrame, parts: int | None = None) -> DataFrame:
         target = parts or max(2, min(cores, (nbytes + 65_535) // 65_536))
         if df.rdd.getNumPartitions() < target:
             out = df.repartition(target)
-    if any(df is t for t in _READ_MEMO.values()):
-        _SPREAD_MEMO[key] = (df, out)
+    if any(df is t for t in memo.get("read", {}).values()):
+        spreads[key] = (df, out)
     return out
 
 
@@ -121,8 +136,8 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; have {TABLES}")
-    key = (_app_id(spark), sf_dir, name)
-    got = _READ_MEMO.get(key)
+    reads = session_memo(spark).setdefault("read", {})
+    got = reads.get((sf_dir, name))
     if name == "events":
         # set on every call (memo hit included): the flag also guards
         # the vectorized reader's execution-time nanos handling, and
@@ -138,7 +153,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     else:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    _READ_MEMO[key] = df
+    reads[(sf_dir, name)] = df
     return df
 
 

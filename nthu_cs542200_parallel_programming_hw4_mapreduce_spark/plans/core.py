@@ -2754,7 +2754,6 @@ def xml_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PYSTREAM_ROWS = 5000
 _PYSTREAM_BATCH = 2000
-_PYSTREAM_SINKS = __import__("itertools").count()
 
 
 @query(
@@ -2769,10 +2768,11 @@ def python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom STREAMING connector through Spark 4's Python Data Source
     API (``SimpleDataSourceStreamReader``): a pure-Python source emits
     offset-tracked micro-batches (2000 rows each) until exhausted; the
-    streaming aggregate over it, run to completion through a
-    complete-mode memory sink, must equal the closed-form oracle — the
-    connector twin of ``python_datasource_scan``, proving offsets
-    advance without loss or replay across micro-batches.
+    streaming aggregate over it, drained by ``windows.run_drained`` (one
+    ``processAllAvailable``) into a complete-mode memory sink, must
+    equal the closed-form oracle — the connector twin of
+    ``python_datasource_scan``, proving offsets advance without loss or
+    replay across micro-batches.
 
     This is the extension point for streaming systems Spark has no JVM
     connector for (internal queues, vendor APIs): offsets are the
@@ -2819,34 +2819,12 @@ def python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("value").cast("long").alias("sv"),
         )
     )
-    name = f"pystream_{next(_PYSTREAM_SINKS)}"
-    from ..streaming.windows import stream_start_conf
+    from ..streaming.windows import run_drained
 
-    # drain-cost knobs (round-13): the complete-mode agg over 3
-    # micro-batches commits one state store per shuffle partition per
-    # batch — the harness's min(4, task slots) instead of the session's
-    # 32 cuts that fixed cost 8× or more; no event-time watermark, so
-    # no-data batches are inert.
-    with stream_start_conf(spark, no_data_batches=False):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-    try:
-        # drain until the source is exhausted (offset stops advancing)
-        import time as _time
-
-        for _ in range(60):
-            q.processAllAvailable()
-            row = spark.table(name).collect()
-            if row and row[0]["n"] == total:
-                break
-            _time.sleep(0.2)
-    finally:
-        q.stop()
-    return spark.table(name)
+    # one processAllAvailable drains the source: the query triggers until
+    # latestOffset stops advancing (3 data batches here); no event-time
+    # watermark, so the trailing no-data batch is inert.
+    return run_drained(spark, agg, "complete", "pystream", no_data_batches=False)
 
 
 

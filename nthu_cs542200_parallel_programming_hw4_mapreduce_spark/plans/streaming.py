@@ -466,17 +466,13 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     deduped = src.dropDuplicates(["user_id", "event_type"])
     counts = deduped.groupBy("event_type").count()
-    # collision-free sink name (round-8 review): abs(hash(sf_dir)) is
-    # per-process randomized and can collide mod 10k; the module
-    # counter is what the sibling sinks already use
-    name = f"stream_dedup_{next(_STREAM_STATIC_SINKS)}"
     from ..streaming.windows import run_drained
 
     # complete-mode sink: the final counts table is emitted with the
     # last data batch; the trailing no-data batch only evicts state —
     # skipped (round-13 drain-cost optimization, see run_drained).
     return run_drained(
-        spark, counts, "complete", name, no_data_batches=False
+        spark, counts, "complete", "stream_dedup", no_data_batches=False
     ).orderBy("event_type")
 
 
@@ -1643,15 +1639,11 @@ def streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").try_cast("decimal(18,6)")).cast("double").alias("sv"),
         )
     )
-    name = f"stream_static_{next(_STREAM_STATIC_SINKS)}"
     from ..streaming.windows import run_drained
 
     return run_drained(
-        spark, agg, "complete", name, no_data_batches=False
+        spark, agg, "complete", "stream_static", no_data_batches=False
     ).orderBy("cohort")
-
-
-_STREAM_STATIC_SINKS = __import__("itertools").count()
 
 
 @query(
@@ -1686,14 +1678,15 @@ def streaming_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["event_id"]
     )
     agg = deduped.agg(F.count("*").alias("n_unique"))
-    name = f"stream_dedup_wm_{next(_STREAM_STATIC_SINKS)}"
     from ..streaming.windows import run_drained
 
     # dedup emits each surviving key downstream in the batch where it is
     # FIRST seen; the complete-mode count therefore finalizes with the
     # last data batch, and the trailing no-data batch only evicts
     # expired keys from state — skipped (round-13, see run_drained).
-    result = run_drained(spark, agg, "complete", name, no_data_batches=False)
+    result = run_drained(
+        spark, agg, "complete", "stream_dedup_wm", no_data_batches=False
+    )
     total = table(spark, sf_dir, "events").count()
     return result.select(
         F.col("n_unique").cast("long"),
@@ -3250,7 +3243,6 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    name = f"stream_session_{next(_STREAM_STATIC_SINKS)}"
     from ..streaming.windows import run_drained
 
     # append mode: closed sessions emit in the watermark-advancing
@@ -3258,7 +3250,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # default 32 → min(4, task slots), see harness_state_partitions)
     # carries the whole measured win here (18.3 s → 3.6 s at 32 → 4,
     # same-contention).
-    return run_drained(spark, agg, "append", name)
+    return run_drained(spark, agg, "append", "stream_session")
 
 
 @query(

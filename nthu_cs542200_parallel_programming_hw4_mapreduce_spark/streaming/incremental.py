@@ -17,6 +17,7 @@ second member arrives.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -113,6 +114,10 @@ def incremental_minhash_dedup(
         q.processAllAvailable()
     finally:
         q.stop()
+        # the returned frame reads only matches_dir: the staged corpus
+        # and the band index are dead once the stream has stopped
+        shutil.rmtree(src_dir, ignore_errors=True)
+        shutil.rmtree(index_dir, ignore_errors=True)
 
     if not os.path.exists(matches_dir):
         return spark.createDataFrame([], "a_id long, b_id long")

@@ -13,14 +13,10 @@ checks).
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .windows import events_stream, run_drained
-
-_sink_counter = itertools.count()
 
 
 def clicks_purchases_join_stream(
@@ -76,30 +72,25 @@ def clicks_purchases_join_stream(
 
 
 def run_clicks_purchases_join(
-    spark: SparkSession,
-    path: str,
-    horizon_minutes: int = 30,
-    state_partitions: int | None = None,
+    spark: SparkSession, path: str, horizon_minutes: int = 30
 ) -> DataFrame:
     """Run the topology to completion through an append-mode memory sink
     (append is the only stream-stream-join output mode; matches emit as
     soon as both sides arrive).
 
-    ``state_partitions`` sizes the join's state stores: a stream-stream
-    join instantiates per-partition state stores on BOTH sides, and
-    their per-batch open/commit cost is fixed overhead independent of
-    data volume — at fixture scale (100k events) 32 partitions spend
-    4× longer committing empty stores than joining (measured 11 s → 3.3 s
-    at 8, ~2.1 s at 4 — flat below that). ``None`` takes the drain
-    harness's one-wave rule, ``min(4, defaultParallelism)`` (see
-    ``windows.harness_state_partitions``). The knob is the generic
-    shuffle-partition count read at query START, so it is set around
-    ``start()`` and restored; a production run sizes it UP with event
-    volume instead (state partitioning is fixed for the life of a
-    streaming checkpoint).
+    The join's state stores are sized by the drain harness: a
+    stream-stream join instantiates per-partition state stores on BOTH
+    sides, and their per-batch open/commit cost is fixed overhead
+    independent of data volume — at fixture scale (100k events) 32
+    partitions spend 4× longer committing empty stores than joining
+    (measured 11 s → 3.3 s at 8, ~2.1 s at 4 — flat below that). So the
+    drain takes ``windows.harness_state_partitions``,
+    ``min(4, defaultParallelism)``; a production run sizes it UP with
+    event volume through ``$SPARK_GRAFT_STREAM_STATE_PARTITIONS``
+    instead (state partitioning is fixed for the life of a streaming
+    checkpoint; SCALING.md measures the crossover).
     """
     joined = clicks_purchases_join_stream(spark, path, horizon_minutes)
-    name = f"stream_join_{next(_sink_counter)}"
     # INNER join: matches emit as soon as both sides arrive, so the
     # trailing no-data micro-batch can only evict state, never emit —
     # skipping it (round-13 optimization) drops one full state
@@ -107,20 +98,12 @@ def run_clicks_purchases_join(
     # result (the LEFT variant below must keep it: null-row emission
     # happens exactly there).
     return run_drained(
-        spark,
-        joined,
-        "append",
-        name,
-        state_partitions=state_partitions,
-        no_data_batches=False,
+        spark, joined, "append", "stream_join", no_data_batches=False
     )
 
 
 def run_clicks_purchases_left_join(
-    spark: SparkSession,
-    path: str,
-    horizon_minutes: int = 30,
-    state_partitions: int | None = None,
+    spark: SparkSession, path: str, horizon_minutes: int = 30
 ) -> DataFrame:
     """LEFT OUTER variant of the clicks→purchases stream-stream join:
     matched pairs emit as soon as both sides arrive (inner semantics),
@@ -135,9 +118,8 @@ def run_clicks_purchases_left_join(
     declared query's oracle replays (the streaming_session_window
     cutoff pattern, two-sided).
 
-    ``state_partitions`` sizes both sides' state stores exactly as in
-    ``run_clicks_purchases_join``: ``None`` takes the harness's
-    ``min(4, defaultParallelism)``."""
+    Both sides' state stores are sized by the drain harness exactly as
+    in ``run_clicks_purchases_join``."""
     clicks = (
         events_stream(spark, path)
         .filter(F.col("event_type") == "click")
@@ -168,14 +150,7 @@ def run_clicks_purchases_left_join(
         ],
         "leftOuter",
     ).select(clicks.user_id, "click_id", "purchase_id")
-    name = f"stream_left_join_{next(_sink_counter)}"
     # no_data_batches stays ON: the unmatched-click null rows emit in
     # the watermark-advancing no-data batch — skipping it would lose
     # every unmatched row (the semantics this query exists to show).
-    return run_drained(
-        spark,
-        joined,
-        "append",
-        name,
-        state_partitions=state_partitions,
-    )
+    return run_drained(spark, joined, "append", "stream_left_join")

@@ -18,8 +18,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .windows import events_stream, run_drained
 
-_sink_counter = __import__("itertools").count()
-
 
 def running_counts(spark: SparkSession, path: str) -> DataFrame:
     """Running event count per event_type over the stream; returns the
@@ -50,10 +48,9 @@ def running_counts(spark: SparkSession, path: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"stream_stateful_{next(_sink_counter)}"
     # per-key Python state rides one state store per shuffle partition
     # (see windows.harness_state_partitions); no watermark → the
     # trailing no-data batch is inert.
     return run_drained(
-        spark, counts, "update", name, no_data_batches=False
+        spark, counts, "update", "stream_stateful", no_data_batches=False
     ).orderBy("event_type")

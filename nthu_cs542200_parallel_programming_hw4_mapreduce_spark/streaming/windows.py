@@ -17,9 +17,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_sink_counter = itertools.count()
+_SINKS = itertools.count()
 _stage_dirs: dict[str, str] = {}
-_SCHEMA_MEMO: dict[tuple[str, str], object] = {}
 
 _STATE_PARTITIONS_ENV = "SPARK_GRAFT_STREAM_STATE_PARTITIONS"
 
@@ -50,10 +49,12 @@ def harness_state_partitions(spark: SparkSession) -> int:
     drained ``applyInPandasWithState`` running count took 1.27 s at 4
     partitions and 0.91 s at 2. Sessions with 4 or more slots keep 4.
 
-    A production deployment sizes it UP with event volume via
-    ``$SPARK_GRAFT_STREAM_STATE_PARTITIONS``, which wins whenever it is
-    set (state partitions should hold the per-trigger window of events,
-    not the backfill), exactly as the joins docstring prescribes.
+    ``$SPARK_GRAFT_STREAM_STATE_PARTITIONS`` wins whenever it is set;
+    it is the one override, and the joins and every other drain read
+    it through here. A production deployment sizes it UP with event
+    volume (state partitions should hold the per-trigger window of
+    events, not the backfill): SCALING.md measures 32 as right for the
+    stream-stream join at 10M events.
     """
     env = os.environ.get(_STATE_PARTITIONS_ENV)
     if env is not None:
@@ -62,14 +63,11 @@ def harness_state_partitions(spark: SparkSession) -> int:
 
 
 @contextmanager
-def stream_start_conf(
-    spark: SparkSession,
-    state_partitions: int | None = None,
-    no_data_batches: bool = True,
-):
+def stream_start_conf(spark: SparkSession, no_data_batches: bool = True):
     """Scope the two drain-cost knobs around ``writeStream.start()``.
 
-    * ``state_partitions`` — see ``harness_state_partitions``.
+    * the shuffle (= state-store) partition count — see
+      ``harness_state_partitions``.
     * ``no_data_batches=False`` skips the trailing zero-row micro-batch
       (``spark.sql.streaming.noDataMicroBatches.enabled``) for
       topologies whose OUTPUT it cannot affect: complete-mode sinks
@@ -88,9 +86,9 @@ def stream_start_conf(
     before_nodata = spark.conf.get(
         "spark.sql.streaming.noDataMicroBatches.enabled", "true"
     )
-    if state_partitions is None:
-        state_partitions = harness_state_partitions(spark)
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(harness_state_partitions(spark))
+    )
     spark.conf.set(
         "spark.sql.streaming.noDataMicroBatches.enabled",
         "true" if no_data_batches else "false",
@@ -108,15 +106,21 @@ def run_drained(
     spark: SparkSession,
     df: DataFrame,
     output_mode: str,
-    name: str,
-    state_partitions: int | None = None,
+    prefix: str,
     no_data_batches: bool = True,
 ) -> DataFrame:
-    """start → processAllAvailable → stop through a memory sink — the
-    shared drain harness (round-13 optimization: one place for the
-    state-partition and no-data-batch knobs instead of six inline
-    copies). Returns the sink table, unordered."""
-    with stream_start_conf(spark, state_partitions, no_data_batches):
+    """start → processAllAvailable → stop through a memory sink named
+    ``{prefix}_{n}`` from one module counter — the one drain harness:
+    every memory-sink drain in the package starts here, so the state
+    partitions (``harness_state_partitions``), the no-data-batch knob
+    (see ``stream_start_conf``) and the sink names have one owner.
+
+    One ``processAllAvailable`` reads every offset the sources have: the
+    query keeps triggering until no source's ``latestOffset`` advances
+    (a Python ``SimpleDataSourceStreamReader`` advances one ``read()``
+    step per trigger). Returns the sink table, unordered."""
+    name = f"{prefix}_{next(_SINKS)}"
+    with stream_start_conf(spark, no_data_batches):
         q = (
             df.writeStream.outputMode(output_mode)
             .format("memory")
@@ -145,15 +149,14 @@ def events_stream(
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # schema inference is a full listing + footer read (~80 ms); memoize
-    # per (session, path) like catalog.table's read memo — the schema of
-    # an immutable fixture path cannot change within a session
-    from ..catalog import _app_id
+    # per path in the session memo, like catalog.table's read memo — the
+    # schema of an immutable fixture path cannot change within a session
+    from ..catalog import session_memo
 
-    skey = (_app_id(spark), path)
-    schema = _SCHEMA_MEMO.get(skey)
+    schemas = session_memo(spark).setdefault("schema", {})
+    schema = schemas.get(path)
     if schema is None:
-        schema = spark.read.parquet(path).schema
-        _SCHEMA_MEMO[skey] = schema
+        schema = schemas[path] = spark.read.parquet(path).schema
     if os.path.isfile(path):
         # one staging dir per source file, reused across calls (repeated
         # streaming queries in a session must not accumulate /tmp dirs)
@@ -223,11 +226,10 @@ def run_windowed_count(
     production hops are small multiples, not sliding-by-record).
     """
     agg = windowed_count_stream(spark, path, window, watermark, slide)
-    name = f"stream_windowed_{next(_sink_counter)}"
     mode = "append" if watermark else "complete"
     # append mode emits a window only when the watermark passes its end,
     # so the trailing no-data batch is load-bearing there; complete mode
     # emitted the full table with the last data batch already.
     return run_drained(
-        spark, agg, mode, name, no_data_batches=watermark is not None
+        spark, agg, mode, "stream_windowed", no_data_batches=watermark is not None
     ).orderBy("event_type", "h")

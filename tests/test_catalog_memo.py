@@ -1,19 +1,19 @@
-"""Round-14 per-session read memo (catalog.table / events_stream schema).
+"""Per-session memos (catalog.table reads, spread, events_stream schema).
 
 The memo holds LAZY DataFrames only — every action still scans parquet —
-so the only contract to pin is identity/isolation: same (session,
-sf_dir, name) → same object (the listing+schema cost is paid once);
-different sf_dir → different object; the events nanos flag is set on
-memo hits too.
+so the contract to pin is identity/isolation: same (session, sf_dir,
+name) → same object (the listing+schema cost is paid once); different
+sf_dir → different object; the events nanos flag is set on memo hits
+too; and a new session empties what the old one memoized.
 """
 
 from __future__ import annotations
 
 import shutil
+from types import SimpleNamespace
 
 from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.catalog import (
-    _READ_MEMO,
-    _SPREAD_MEMO,
+    session_memo,
     spread,
     table,
 )
@@ -85,10 +85,10 @@ def test_spread_memo_skips_derived_frames(spark, sf_dir):
     adds no entry, so the memo stays bounded."""
     docs = table(spark, sf_dir, "documents")
     spread(docs)
-    before = len(_SPREAD_MEMO)
+    before = len(session_memo(spark)["spread"])
     for i in range(50):
         spread(docs.filter(docs.doc_id != i))
-    assert len(_SPREAD_MEMO) == before
+    assert len(session_memo(spark)["spread"]) == before
 
 
 def test_memo_is_lazy_only(spark, sf_dir):
@@ -96,4 +96,18 @@ def test_memo_is_lazy_only(spark, sf_dir):
     df = table(spark, sf_dir, "lineitem")
     assert df.storageLevel.useMemory is False
     assert df.storageLevel.useDisk is False
-    assert any(k[1] == sf_dir and k[2] == "lineitem" for k in _READ_MEMO)
+    assert session_memo(spark)["read"][(sf_dir, "lineitem")] is df
+
+
+def test_new_session_empties_the_memo(spark, sf_dir):
+    """A session with another applicationId replaces the memo and empties
+    the old one, so no entry (nor its py4j objects) outlives its session;
+    the live session then starts from an empty memo again."""
+    table(spark, sf_dir, "region")
+    filled = session_memo(spark)
+    assert filled["read"]
+    other = SimpleNamespace(_graft_app_id="app-of-another-session")
+    assert session_memo(other) == {}
+    assert filled == {}
+    assert session_memo(spark) == {}
+    assert table(spark, sf_dir, "region") is table(spark, sf_dir, "region")

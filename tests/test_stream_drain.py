@@ -1,14 +1,18 @@
-"""Round-13 drain-harness internals: the state-partition /
-no-data-micro-batch knobs must be scoped (session conf restored) and
-must never change what a drained topology RETURNS — only what it costs.
+"""Drain-harness internals: the state-partition / no-data-micro-batch
+knobs must be scoped (session conf restored) and must never change what
+a drained topology RETURNS — only what it costs; and ``run_drained`` is
+the one code path that starts a memory-sink drain.
 """
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
 from types import SimpleNamespace
 
 from pyspark.sql import functions as F
 
+import nthu_cs542200_parallel_programming_hw4_mapreduce_spark as pkg
 from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.streaming.stateful import (
     running_counts,
 )
@@ -21,12 +25,13 @@ from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.streaming.windows im
 )
 
 
-def test_stream_start_conf_scopes_and_restores(spark):
+def test_stream_start_conf_scopes_and_restores(spark, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "2")
     before_parts = spark.conf.get("spark.sql.shuffle.partitions")
     before_nodata = spark.conf.get(
         "spark.sql.streaming.noDataMicroBatches.enabled", "true"
     )
-    with stream_start_conf(spark, state_partitions=2, no_data_batches=False):
+    with stream_start_conf(spark, no_data_batches=False):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
         assert (
             spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
@@ -39,10 +44,11 @@ def test_stream_start_conf_scopes_and_restores(spark):
     )
 
 
-def test_stream_start_conf_restores_on_error(spark):
+def test_stream_start_conf_restores_on_error(spark, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "3")
     before_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        with stream_start_conf(spark, state_partitions=3):
+        with stream_start_conf(spark):
             raise RuntimeError("boom")
     except RuntimeError:
         pass
@@ -145,8 +151,7 @@ def test_no_data_batch_skip_is_result_invariant_for_inner_join(spark, sf_dir):
         return {
             tuple(r)
             for r in run_drained(
-                spark, topo, "append", name,
-                state_partitions=4, no_data_batches=nd,
+                spark, topo, "append", name, no_data_batches=nd
             ).collect()
         }
 
@@ -197,3 +202,92 @@ def test_no_data_batch_skip_is_result_invariant_for_watermarked_dedup(
     }
     assert with_nd == without_nd
     assert without_nd  # non-vacuous
+
+
+def test_python_stream_source_drains_fully_on_every_repeat(spark, sf_dir):
+    """One ``processAllAvailable`` reads the Python source to exhaustion:
+    five in-process drains each return the closed form, and each drain
+    names its own sink."""
+    from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.plans.core import (
+        _PYSTREAM_ROWS,
+        python_stream_source,
+    )
+
+    assert _PYSTREAM_ROWS == 5000
+    want = (5000, sum((i * 2654435761) % 1000 for i in range(5000)))
+
+    def sinks():
+        return {
+            t.name
+            for t in spark.catalog.listTables()
+            if t.name.startswith("pystream_")
+        }
+
+    before = sinks()
+    for _ in range(5):
+        [row] = python_stream_source(spark, sf_dir).collect()
+        assert (row["n"], row["sv"]) == want
+    assert len(sinks() - before) == 5
+
+
+_HARNESS = ("streaming/windows.py", "run_drained")
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _package_nodes():
+    """(module path, top-level function name or None, node) for every
+    AST node in the package's non-test sources."""
+    root = Path(pkg.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for top in ast.parse(path.read_text()).body:
+            owner = top.name if isinstance(top, _FUNCS) else None
+            for node in ast.walk(top):
+                yield rel, owner, node
+
+
+def _callee(call: ast.Call) -> str | None:
+    f = call.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def test_run_drained_is_the_one_drain_harness():
+    """Static pins: ``processAllAvailable`` runs only in ``run_drained``
+    and the ``foreachBatch`` driver of ``streaming/incremental.py``; only
+    ``run_drained`` starts a memory sink or calls ``stream_start_conf``;
+    ``streaming/windows.py`` keeps the one sink counter; and no function
+    takes a ``state_partitions`` parameter."""
+    drains, memory, conf, counters, params = set(), set(), set(), set(), set()
+    for rel, owner, node in _package_nodes():
+        if isinstance(node, _FUNCS):
+            args = node.args.posonlyargs + node.args.args + node.args.kwonlyargs
+            if any(a.arg == "state_partitions" for a in args):
+                params.add((rel, node.name))
+        if not isinstance(node, ast.Call):
+            continue
+        name = _callee(node)
+        if name == "processAllAvailable":
+            drains.add((rel, owner))
+        elif name == "stream_start_conf":
+            conf.add((rel, owner))
+        elif (
+            name == "format"
+            and node.args
+            and isinstance(node.args[0], ast.Constant)
+            and node.args[0].value == "memory"
+        ):
+            memory.add((rel, owner))
+        elif name == "count" and isinstance(node.func, ast.Attribute):
+            base = node.func.value
+            if getattr(base, "id", None) == "itertools" or (
+                isinstance(base, ast.Call) and _callee(base) == "__import__"
+            ):
+                counters.add(rel)
+    assert drains == {
+        _HARNESS,
+        ("streaming/incremental.py", "incremental_minhash_dedup"),
+    }
+    assert memory == {_HARNESS}
+    assert conf == {_HARNESS}
+    assert counters == {"streaming/windows.py"}
+    assert params == set()

@@ -1,6 +1,8 @@
 """Streaming/batch unification: the Structured Streaming window agg
 must equal the batch groupBy on the same data."""
 
+import os
+
 from pyspark.sql import functions as F
 
 import __spark_entry__ as E
@@ -183,6 +185,36 @@ def test_incremental_dedup_bucket_cap(spark, monkeypatch):
     # proving the cap (not luck) is what bounded the run above
     uncapped = incremental_minhash_dedup(spark, docs, max_bucket=10_000).count()
     assert uncapped == 16
+
+
+def test_incremental_dedup_leaves_only_matches(spark, monkeypatch):
+    """The staged corpus and the band index are removed once the stream
+    stops: after a call and a collect() its work directory holds only
+    the ``matches`` the returned frame reads."""
+    import tempfile
+
+    from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.streaming.incremental import (
+        incremental_minhash_dedup,
+    )
+
+    made = []
+    mkdtemp = tempfile.mkdtemp
+
+    def recording_mkdtemp(*args, **kwargs):
+        path = mkdtemp(*args, **kwargs)
+        made.append(path)
+        return path
+
+    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta unique pair"),
+         (2, "alpha beta gamma delta unique pair")],
+        "doc_id long, text string",
+    )
+    pairs = incremental_minhash_dedup(spark, docs).collect()
+    assert [(r["a_id"], r["b_id"]) for r in pairs] == [(1, 2)]
+    [work] = [p for p in made if os.path.basename(p).startswith("incr_dedup_")]
+    assert os.listdir(work) == ["matches"]
 
 
 def test_streaming_hopping_equals_batch(spark, sf_dir):
