@@ -123,16 +123,6 @@ def quality_score(col: str | Column) -> Column:
     return F.round((len_score + punct_score + prose_score) / 3, 6)
 
 
-def fingerprint(col: str | Column) -> Column:
-    """Document fingerprint: md5 of whitespace-normalized lowercase text.
-    md5 is identical across Spark/DuckDB, so exact-dup clusters agree with
-    the oracle; a content-defined rolling hash variant is in
-    :func:`shingle_fingerprints`."""
-    c = F.col(col) if isinstance(col, str) else col
-    normalized = F.regexp_replace(F.lower(F.trim(c)), WS, " ")
-    return F.md5(normalized)
-
-
 def word_shingles(col: str | Column, k: int = 3) -> Column:
     """Distinct k-word shingles (the MinHash/Jaccard input unit).
 

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import spread, table
+from ..functions import hashing as H
 from ..functions import text as X
 from ..functions import vectors as V
 from ..registry import query
@@ -43,8 +44,8 @@ from .similarity import vec_table
 
 @query(
     "dedup_exact",
-    oracle=r"""
-    SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp,
+    oracle=f"""
+    SELECT {H.fingerprint("text").duck} AS fp,
            MIN(doc_id) AS keep_id, COUNT(*) AS dup_cnt
     FROM documents GROUP BY 1 ORDER BY fp
     """,
@@ -56,7 +57,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads cross the wire, only (fp, min_id, cnt) triples)."""
     docs = table(spark, sf_dir, "documents")
     return (
-        docs.select("doc_id", X.fingerprint("text").alias("fp"))
+        docs.select("doc_id", H.fingerprint("text").col.alias("fp"))
         .groupBy("fp")
         .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("dup_cnt"))
     )
@@ -158,23 +159,12 @@ _DD_SHINGLES = r"""
 """
 
 
-def _mh_slice(j: int) -> tuple[int, int]:
-    """Hash j = 8-hex-char (32-bit) slice j%4 of md5(shingle ++ ':' ++ j//4).
-    One md5 yields four independent 32-bit hash functions (md5 bits are
-    uniform/independent), so K=8 signatures cost 2 md5 calls per shingle
-    instead of 8 — the dominant cost of signature generation at scale."""
-    return j // 4, 1 + 8 * (j % 4)
-
-
 def _dd_minhash_sig() -> list[str]:
-    """DuckDB expressions for the K minhash values (same md5 slices)."""
-    out = []
-    for j in range(_NUM_HASHES):
-        seed, start = _mh_slice(j)
-        out.append(
-            f"list_min(list_transform(shingles, s -> substr(md5(s || ':{seed}'), {start}, 8)))"
-        )
-    return out
+    """DuckDB expressions for the K minhash values (``H.minhash``)."""
+    return [
+        f"list_min(list_transform(shingles, s -> {H.minhash(j).duck}))"
+        for j in range(_NUM_HASHES)
+    ]
 
 
 # ONE sig + bands CTE pair for every MinHash oracle (round-8 review:
@@ -245,28 +235,18 @@ def minhash_signatures(docs: DataFrame, shingles: DataFrame | None = None) -> Da
                 F.element_at("_ws", F.col("_i") + 2),
             ).alias("s"),
         )
-    # 2 md5 digests per shingle; hashes j are 8-hex-char slices of them.
+    # K/4 md5 digests per shingle; hash j is a slice of digest j // 4,
+    # MIN'd as a long and formatted back to the oracle's hex (H.minhash).
     digests = ex.select(
         "doc_id",
         *[
-            F.md5(F.concat(F.col("s"), F.lit(f":{seed}"))).alias(f"d{seed}")
+            H.minhash_digest(seed).col.alias(f"d{seed}")
             for seed in range(_NUM_HASHES // 4)
         ],
     )
-    # MIN over a LONG, not the hex string: fixed-width hex sorts
-    # identically to its numeric value, and a fixed-size agg buffer lets
-    # Catalyst use partial HashAggregate (string MIN forces SortAggregate
-    # — a per-partition sort of every gram row). Formatted back to the
-    # oracle's lowercase hex on output.
-    aggs = []
-    for j in range(_NUM_HASHES):
-        seed, start = _mh_slice(j)
-        aggs.append(
-            F.min(
-                F.conv(F.substring(f"d{seed}", start, 8), 16, 10).cast("long")
-            ).alias(f"_m{j}")
-        )
-    agged = digests.groupBy("doc_id").agg(*aggs)
+    agged = digests.groupBy("doc_id").agg(
+        *[F.min(H.minhash(j).col).alias(f"_m{j}") for j in range(_NUM_HASHES)]
+    )
     return agged.select(
         "doc_id",
         *[
@@ -406,54 +386,23 @@ _SIMHASH_BITS = 64
 _SIMHASH_BANDS = 4
 
 
-def _bit_contrib(j: int, tok: str = "t", hashed: bool = False) -> str:
-    """±1 contribution of token ``tok`` at bit j = bit j%4 of hex nibble
-    j//4 of md5(tok) — all four bits of each nibble are used, so the 64
-    signature bits cost ONE digest per token (the earlier nibble-PARITY
-    family burned 3/4 of the digest's entropy and needed two). Valid in
-    BOTH Spark SQL and DuckDB (single source of truth for the family).
-    ``hashed`` references a precomputed digest column named ``h0``
-    instead of inlining the md5."""
-    p, b = divmod(j, 4)
-    h = "h0" if hashed else f"md5({tok})"
-    return (
-        f"(CASE WHEN ((instr('0123456789abcdef', substr({h}, {p + 1}, 1)) - 1) >> {b}) & 1 = 1"
-        f" THEN 1 ELSE -1 END)"
-    )
-
-
 def simhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash): 64-bit SimHash. Tokens (with multiplicity) are
     exploded and md5-hashed ONCE (all four bits of each of the first 16
     hex nibbles → 64 bits from a single digest — md5 volume is the
     stage's dominant cost, measured 210 s at the 1000× probe under the
     old two-digest family); the per-bit ±1 sums aggregate with map-side
-    partial aggregation.
-
-    Instead of 64 string-op expressions (instr+substr per bit — the hot
-    loop of the oracle's readable form), the digest converts to four
-    32-bit int chunks once and every bit contribution is a codegen'd
-    shift-and-mask: ±1 = 2·((chunk >> (4·(7−p%8) + b)) & 1) − 1 for
-    nibble p = j//4, bit b = j%4. Same bits as `_bit_contrib`'s SQL —
-    the family is defined once and rendered for both engines."""
+    partial aggregation. The digest packs into four 32-bit chunks once,
+    and each bit's vote is a shift-and-mask of a chunk (``H.simhash_bit``)."""
     toks = spread(docs).select(
         "doc_id", F.explode(X.tokens("text", X.WS)).alias("t")
     ).select("doc_id", F.md5(F.col("t")).alias("h0"))
-    chunks = [
-        F.conv(F.substring("h0", 8 * c + 1, 8), 16, 10)
-        .cast("long")
-        .alias(f"c{c}")
-        for c in range(4)
-    ]
-    packed = toks.select("doc_id", *chunks)
-    sums = []
-    for j in range(_SIMHASH_BITS):
-        p, b = divmod(j, 4)  # nibble index (left to right), bit within nibble
-        k, o = divmod(p, 8)  # chunk index, nibble offset in chunk
-        chunk = F.col(f"c{k}")
-        bit = F.shiftright(chunk, (7 - o) * 4 + b).bitwiseAND(F.lit(1))
-        sums.append(F.sum(bit * 2 - 1).alias(f"s{j}"))
-    agged = packed.groupBy("doc_id").agg(*sums)
+    packed = toks.select(
+        "doc_id", *[F.expr(H.simhash_chunk(c)).alias(f"c{c}") for c in range(4)]
+    )
+    agged = packed.groupBy("doc_id").agg(
+        *[F.sum(H.simhash_bit(j).col).alias(f"s{j}") for j in range(_SIMHASH_BITS)]
+    )
     bit_chars = [
         F.when(F.col(f"s{j}") >= 0, F.lit("1")).otherwise(F.lit("0"))
         for j in range(_SIMHASH_BITS)
@@ -472,7 +421,7 @@ _DD_SIMHASH_SIG_CTES = rf"""
     sig AS (
       SELECT doc_id,
              {" || ".join(
-               f"(CASE WHEN list_sum(list_transform(l, t -> {_bit_contrib(j)})) >= 0 THEN '1' ELSE '0' END)"
+               f"(CASE WHEN list_sum(list_transform(l, t -> {H.simhash_bit(j).duck})) >= 0 THEN '1' ELSE '0' END)"
                for j in range(_SIMHASH_BITS)
              )} AS simhash
       FROM toks WHERE len(l) > 0
@@ -488,7 +437,7 @@ _DD_SIMHASH_SIG_CTES = rf"""
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash signatures (64-bit, single-digest md5 family — see
-    ``_bit_contrib``): per bit j, sum ±1 over all tokens by bit j%4 of
+    ``H.simhash_bit``): per bit j, sum ±1 over all tokens by bit j%4 of
     hex nibble j//4 of ONE md5(token) digest (the seedless family that
     superseded the per-seed md5(token:seed) nibble-parity cut — one
     digest per token instead of 64). GroupBy excludes token-less docs,
@@ -1367,7 +1316,7 @@ def dedup_cross_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrence. The key is a leading-content fingerprint — md5 of the
     first 8 tokens — which also catches re-crawls that differ only in
     tail boilerplate; swap in the full normalized-text fingerprint
-    (``X.fingerprint``, as dedup_exact uses) for strict equality. This
+    (``H.fingerprint``, as dedup_exact uses) for strict equality. This
     is how a recurring crawl dedupes against history without
     re-clustering the whole archive — only fingerprints of the old
     corpus participate, never its text.
@@ -1768,14 +1717,8 @@ def decontaminate_fuzzy_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     sp AS (
       SELECT doc_id, cluster,
-             CASE WHEN substr(md5(CAST(cluster AS VARCHAR)), 1, 1) <= 'b'
-                  THEN 'train'
-                  WHEN substr(md5(CAST(cluster AS VARCHAR)), 1, 1) <= 'd'
-                  THEN 'val' ELSE 'test' END AS split,
-             CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) <= 'b'
-                  THEN 'train'
-                  WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) <= 'd'
-                  THEN 'val' ELSE 'test' END AS naive
+             {H.split_12_2_2(H.md5_id("cluster")).duck} AS split,
+             {H.split_12_2_2(H.md5_id("doc_id")).duck} AS naive
       FROM lab
     )
     SELECT split, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -1818,15 +1761,9 @@ def split_cluster_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = lsh_candidate_pairs(sigs, edges_only=True)
     labels = connected_components(docs.select("doc_id"), edges)
 
-    def split_of(col: str):
-        h = F.substring(F.md5(F.col(col).cast("string")), 1, 1)
-        return (
-            F.when(h <= "b", "train").when(h <= "d", "val").otherwise("test")
-        )
-
     sp = labels.select(
-        split_of("cluster").alias("split"),
-        split_of("doc_id").alias("naive"),
+        H.split_12_2_2(H.md5_id("cluster")).col.alias("split"),
+        H.split_12_2_2(H.md5_id("doc_id")).col.alias("naive"),
         "cluster",
     )
     return (
@@ -1952,12 +1889,12 @@ _DD_REP_SHINGLES = _DD_SHINGLES.replace(
     "FROM documents", "FROM repdocs"
 )
 
-_DD_REPDOCS = r"""
+_DD_REPDOCS = f"""
       SELECT d.doc_id, d.text
       FROM documents d
       JOIN (SELECT MIN(doc_id) AS keep_id
             FROM documents
-            GROUP BY md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))) k
+            GROUP BY {H.fingerprint("text").duck}) k
         ON d.doc_id = k.keep_id
 """
 
@@ -2015,7 +1952,7 @@ def dedup_fuzzy_production(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge-hinted per the corpus-side rule."""
     docs = table(spark, sf_dir, "documents")
     keep = (
-        docs.select(X.fingerprint("text").alias("fp"), "doc_id")
+        docs.select(H.fingerprint("text").col.alias("fp"), "doc_id")
         .groupBy("fp")
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
@@ -2538,14 +2475,9 @@ def _sweep_keep_threshold(n_docs: int) -> int:
     )
 
 
-#: the sampling hash in both dialects (the ≤15-hex-digit md5-prefix
-#: integer parity class: DuckDB '0x'-cast UBIGINT == Spark conv(·,16,
-#: 10) long for 60-bit values; doc_id renders identically via CAST to
-#: string in both engines)
-_DD_SWEEP_HASH = (
-    "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS UBIGINT)"
-    f" % {_SWEEP_HASH_MOD}"
-)
+#: the sampling hash: the widest md5-prefix integer both engines agree on
+_SWEEP_HASH = H.hex_int(H.md5_id("doc_id"), 1, H.MAX_HEX_WIDTH)
+_DD_SWEEP_HASH = f"{_SWEEP_HASH.duck} % {_SWEEP_HASH_MOD}"
 #: the oracle computes the SAME clamped ceil-div threshold from the
 #: corpus count (scalar subquery) — gate mirrored structurally
 _DD_SWEEP_THR = (
@@ -2564,13 +2496,7 @@ assert _DD_SHINGLES.count("FROM documents)") == 1
 def _sweep_sample_pred(thr: int) -> "F.Column":
     """Spark twin of the oracle's hash-threshold predicate (mirrored
     verbatim per the gate-mirroring rule)."""
-    return (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
-        ).cast("long")
-        % _SWEEP_HASH_MOD
-        < thr
-    )
+    return _SWEEP_HASH.col % _SWEEP_HASH_MOD < thr
 
 
 @query(

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..functions import hashing as H
 from ..functions import text as X
 from ..registry import query
 from .text import _DD_TOKS
@@ -142,6 +143,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DSIR_BUCKETS = 64  # hashed-feature dimensionality (paper uses 10k; scaled
 # to the synthetic vocab — changing it touches ONLY this constant)
 _DSIR_TARGET = "src0"  # target-domain proxy: one source bucket
+_DSIR_HASH = H.hex_int(H.md5("g"), 1, 8)  # bigram g's bucket, mod B
 
 
 def _bigrams(docs: DataFrame) -> DataFrame:
@@ -175,8 +177,7 @@ def _bigrams(docs: DataFrame) -> DataFrame:
       FROM d WHERE len(ws) >= 2
     ), gb AS (
       SELECT doc_id, source, g,
-             CAST(('0x' || substr(md5(g), 1, 8))::UBIGINT
-                  % {_DSIR_BUCKETS} AS BIGINT) AS b
+             CAST({_DSIR_HASH.duck} % {_DSIR_BUCKETS} AS BIGINT) AS b
       FROM g
     ), bs AS (
       SELECT b, count(*) AS raw_c,
@@ -201,8 +202,7 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, Laplace-smoothed, summed per document.
 
     Feature hashing uses the repo's cross-engine md5 family: bucket =
-    first-8-hex-chars(md5(bigram)) mod B, bit-identical in DuckDB via
-    ``('0x' || hex)::UBIGINT``.
+    first-8-hex-chars(md5(bigram)) mod B (``H.hex_int``).
 
     Scale shape — the reason DSIR is practical at 100 TB where a real
     LM-perplexity filter is not:
@@ -225,8 +225,7 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = _bigrams(table(spark, sf_dir, "documents"))
     gb = grams.withColumn(
         "b",
-        F.conv(F.substring(F.md5(F.col("g")), 1, 8), 16, 10).cast("long")
-        % _DSIR_BUCKETS,
+        _DSIR_HASH.col % _DSIR_BUCKETS,
     )
     bs = gb.groupBy("b").agg(
         F.count("*").alias("raw_c"),

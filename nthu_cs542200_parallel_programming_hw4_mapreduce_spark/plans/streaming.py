@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..functions import hashing as H
 from ..registry import query
 
 
@@ -832,28 +833,23 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: hand-rolled HLL layout: m = 1024 registers (σ ≈ 1.04/√m ≈ 3.3%),
-#: register index = first 3 md5 hex digits mod 1024, rank field = the
-#: next 13 hex digits (52 bits), ρ = 53 − bitlen(w) (leading zeros + 1;
-#: w = 0 degenerates to ρ = 52 via bin(0) = '0' — identical in both
-#: engines, so the 2⁻⁵² corner stays bit-exact rather than special-
-#: cased). Register terms 2^−M sum EXACTLY as integers scaled by 2⁵²
-#: (each term is a power of two; double summation of a 2⁰..2⁻⁵²
+#: register index and 52-bit rank from md5(user_id) (``H.hll_register``,
+#: ``H.hll_rank``). Register terms 2^−M sum EXACTLY as integers scaled
+#: by 2⁵² (each term is a power of two; double summation of a 2⁰..2⁻⁵²
 #: exponent spread would round order-dependently, so the sum rides
 #: DECIMAL(38,0) of shiftleft longs — order-free and exact).
 _HLL_M = 1024
 _HLL_W_BITS = 52
 _HLL_SCALE = 1 << _HLL_W_BITS  # 4503599627370496
+_HLL_J = H.hll_register(H.md5_id("user_id"), _HLL_M)
+_HLL_RHO = H.hll_rank(H.md5_id("user_id"), _HLL_W_BITS)
 
 
 @query(
     "hll_user_reach",
     oracle=f"""
     WITH x AS (
-      SELECT event_type,
-             CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 3))
-                  AS UBIGINT) % {_HLL_M} AS j,
-             53 - length(bin(CAST(('0x' || substr(md5(CAST(user_id
-                  AS VARCHAR)), 4, 13)) AS UBIGINT))) AS rho
+      SELECT event_type, {_HLL_J.duck} AS j, {_HLL_RHO.duck} AS rho
       FROM events WHERE user_id IS NOT NULL
     ),
     regs AS (
@@ -941,15 +937,7 @@ def hll_user_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle — is exactly what a production deployment would DROP,
     keeping only the sketch path."""
     ev = table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
-    h = F.md5(F.col("user_id").cast("string"))
-    x = ev.select(
-        "event_type",
-        (F.conv(F.substring(h, 1, 3), 16, 10).cast("long") % _HLL_M).alias("j"),
-        (
-            F.lit(53)
-            - F.length(F.bin(F.conv(F.substring(h, 4, 13), 16, 10).cast("long")))
-        ).alias("rho"),
-    )
+    x = ev.select("event_type", _HLL_J.col.alias("j"), _HLL_RHO.col.alias("rho"))
     per = x.groupBy("event_type", "j").agg(F.max("rho").alias("m"))
     merged = per.groupBy("j").agg(F.max("m").alias("m")).select(
         F.lit("~all").alias("event_type"), "j", "m"
@@ -2327,23 +2315,7 @@ def time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "time_weighted_avg_salted",
-    oracle="""
-    WITH d AS (
-      SELECT user_id, value,
-             (lead(epoch_us(ts)) OVER (PARTITION BY user_id
-                                       ORDER BY ts, event_id)
-              - epoch_us(ts)) / 1000000.0 AS dt
-      FROM events
-    )
-    SELECT user_id,
-           round(SUM(value * dt) / NULLIF(SUM(dt), 0), 6) AS twap,
-           CAST(COUNT(*) AS BIGINT) AS n_weighted
-    FROM d WHERE dt IS NOT NULL
-    GROUP BY user_id ORDER BY user_id
-    """,
-)
+@query("time_weighted_avg_salted", oracle=oracle_for("time_weighted_avg"))
 def time_weighted_avg_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``time_weighted_avg`` with the whale-key escape — same declared
     semantics, SAME oracle, but the event-scale LEAD window is keyed by
@@ -2554,32 +2526,7 @@ def _day_bucketed(ev: DataFrame, n_back: int = 0, fwd: bool = False) -> DataFram
     return out
 
 
-@query(
-    "session_paths_topk_salted",
-    oracle="""
-    WITH s AS (
-      SELECT user_id, ts, event_id, event_type,
-             CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                       OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-                  THEN 1 ELSE 0 END AS new_s
-      FROM events WHERE ts IS NOT NULL
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), sess AS (
-      SELECT user_id, ts, event_id, event_type,
-             SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS UNBOUNDED PRECEDING) AS sid
-      FROM s
-    ), paths AS (
-      SELECT event_type || '>' || lead(event_type, 1) OVER p
-                        || '>' || lead(event_type, 2) OVER p AS path
-      FROM sess
-      WINDOW p AS (PARTITION BY user_id, sid ORDER BY ts, event_id)
-    )
-    SELECT path, CAST(COUNT(*) AS BIGINT) AS cnt
-    FROM paths WHERE path IS NOT NULL
-    GROUP BY path ORDER BY cnt DESC, path LIMIT 10
-    """,
-)
+@query("session_paths_topk_salted", oracle=oracle_for("session_paths_topk"))
 def session_paths_topk_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``session_paths_topk`` with the WHALE-KEY escape productized
     (VERDICT r5 "Next round" #6; SCALING.md whale table rule 2): same
@@ -2645,32 +2592,7 @@ def session_paths_topk_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "bounce_rate_daily_salted",
-    oracle="""
-    WITH s AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                       OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-                  THEN 1 ELSE 0 END AS new_s
-      FROM events WHERE ts IS NOT NULL
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), sess AS (
-      SELECT user_id, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                       ROWS UNBOUNDED PRECEDING) AS sid, ts
-      FROM s
-    ), per AS (
-      SELECT user_id, sid, date_trunc('day', MIN(ts)) AS day,
-             COUNT(*) AS n_events
-      FROM sess GROUP BY user_id, sid
-    )
-    SELECT day, CAST(COUNT(*) AS BIGINT) AS sessions,
-           CAST(COUNT(*) FILTER (WHERE n_events = 1) AS BIGINT) AS bounces,
-           round(COUNT(*) FILTER (WHERE n_events = 1) * 1.0 / COUNT(*), 6)
-             AS bounce_rate
-    FROM per GROUP BY day ORDER BY day
-    """,
-)
+@query("bounce_rate_daily_salted", oracle=oracle_for("bounce_rate_daily"))
 def bounce_rate_daily_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``bounce_rate_daily`` with the whale-key escape (VERDICT r6
     "Next round" #3): same declared semantics and SAME oracle, but the
@@ -2771,22 +2693,7 @@ def bounce_rate_daily_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "event_session_salted",
-    oracle="""
-    WITH g AS (
-      SELECT user_id, event_id,
-             CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                       OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events WHERE ts IS NOT NULL
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    )
-    SELECT user_id, CAST(SUM(new_session) AS BIGINT) AS n_sessions,
-           COUNT(*) AS n_events
-    FROM g GROUP BY user_id ORDER BY user_id
-    """,
-)
+@query("event_session_salted", oracle=oracle_for("event_session"))
 def event_session_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``event_session`` with the whale-key escape (VERDICT r6 "Next
     round" #3 named it as a `_day_bucketed` consumer): same declared

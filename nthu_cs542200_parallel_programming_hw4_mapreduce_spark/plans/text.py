@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import spread, table
+from ..functions import hashing as H
 from ..functions import text as X
 from ..registry import oracle_for as _oracle_for
 from ..registry import query
@@ -247,9 +248,8 @@ def token_count_est(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "doc_fingerprint",
-    oracle=r"""
-    SELECT doc_id,
-           md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
+    oracle=f"""
+    SELECT doc_id, {H.fingerprint("text").duck} AS fp
     FROM documents ORDER BY doc_id
     """,
 )
@@ -258,7 +258,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     text. md5 agrees byte-for-byte across engines, so this doubles as the
     exact-dedup key (see plans.dedup.dedup_exact)."""
     docs = table(spark, sf_dir, "documents")
-    return docs.select("doc_id", X.fingerprint("text").alias("fp"))
+    return docs.select("doc_id", H.fingerprint("text").col.alias("fp"))
 
 
 @query(
@@ -525,7 +525,7 @@ def text_scrub_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH scored AS (
       SELECT doc_id, text,
-             md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp,
+             {H.fingerprint("text").duck} AS fp,
              {_dd_lang_case()} AS lang_pred,
              ( least(length(text) / 200.0, 1.0)
              + greatest(0.0, 1.0 - ({_DD_PUNCT} / greatest(length(text), 1)) * 5)
@@ -584,7 +584,7 @@ def pipeline_filter_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) / 3
     scored = docs.join(stats.hint("merge"), "doc_id", "left").select(
         "doc_id",
-        X.fingerprint("text").alias("fp"),
+        H.fingerprint("text").col.alias("fp"),
         X.lang_id_from_scores(scores).alias("lang_pred"),
         quality.alias("quality"),
     )
@@ -844,14 +844,11 @@ def sample_per_lang_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "train_split_hash",
-    oracle="""
-    SELECT CASE WHEN h <= 'b' THEN 'train'
-                WHEN h <= 'd' THEN 'val'
-                ELSE 'test' END AS split,
+    oracle=f"""
+    SELECT {H.split_12_2_2(H.md5_id("doc_id")).duck} AS split,
            COUNT(*) AS n_docs,
            CAST(SUM(n_chars) AS BIGINT) AS total_chars
-    FROM (SELECT substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS h, n_chars
-          FROM documents) t
+    FROM documents
     GROUP BY 1 ORDER BY split
     """,
 )
@@ -865,10 +862,7 @@ def train_split_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     until a 3-group partial-aggregated count/sum — the cheapest possible
     plan at any corpus size; no join, no window, no wide shuffle."""
     docs = table(spark, sf_dir, "documents")
-    h = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-    split = (
-        F.when(h <= "b", "train").when(h <= "d", "val").otherwise("test")
-    )
+    split = H.split_12_2_2(H.md5_id("doc_id")).col
     return (
         docs.select(split.alias("split"), "n_chars")
         .groupBy("split")
@@ -2683,6 +2677,7 @@ def snapshot_divergence_js(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _WS_TOPK = 50
+_WS_HASH = H.hex_int(H.md5_id("doc_id"), 1, 8)
 
 
 @query(
@@ -2690,9 +2685,7 @@ _WS_TOPK = 50
     oracle=f"""
     WITH w AS (
       SELECT doc_id, n_chars,
-             ln((CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                      AS UBIGINT) + 0.5) / 4294967296.0)
-               / n_chars AS key
+             ln(({_WS_HASH.duck} + 0.5) / 4294967296.0) / n_chars AS key
       FROM documents WHERE n_chars > 0
     )
     SELECT doc_id, CAST(n_chars AS BIGINT) AS weight,
@@ -2729,10 +2722,7 @@ def weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     alternative (global sort by random key) pays a corpus-wide
     exchange for the same sample."""
     docs = table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    h = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-    ).cast("long")
-    u = (h + F.lit(0.5)) / F.lit(4294967296.0)
+    u = (_WS_HASH.col + F.lit(0.5)) / F.lit(4294967296.0)
     key = F.log(u) / F.col("n_chars")
     return (
         docs.select(
@@ -3082,10 +3072,10 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "effective_token_budget",
-    oracle=r"""
+    oracle=rf"""
     WITH d AS (
       SELECT doc_id, source,
-             md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp,
+             {H.fingerprint("text").duck} AS fp,
              len(regexp_extract_all(text,
                  '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS toks
       FROM documents WHERE text IS NOT NULL
@@ -3131,7 +3121,7 @@ def effective_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = docs.select(
         "doc_id",
         "source",
-        X.fingerprint("text").alias("fp"),
+        H.fingerprint("text").col.alias("fp"),
         X.bpe_ish_token_count("text").cast("long").alias("toks"),
     )
     keep = F.when(

@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,8 +44,14 @@ def incremental_minhash_dedup(
     whole bucket retroactively), so the batch-equality invariant holds
     exactly on corpora where no bucket crosses the cap mid-stream —
     which includes every fixture, and the cap-crossing case is pinned
-    by tests/test_streaming.py::test_incremental_dedup_bucket_cap."""
-    work = tempfile.mkdtemp(prefix="incr_dedup_")
+    by tests/test_streaming.py::test_incremental_dedup_bucket_cap.
+
+    The call's directory lives under Spark's local dir, which the JVM
+    deletes at exit: the returned frame reads ``matches`` from it, so
+    it must outlive the call, but not the session."""
+    utils = spark._jvm.org.apache.spark.util.Utils
+    local = utils.getLocalDir(spark.sparkContext._jsc.sc().conf())
+    work = utils.createTempDir(local, "incr_dedup").getAbsolutePath()
     src_dir = os.path.join(work, "src")
     index_dir = os.path.join(work, "index")
     matches_dir = os.path.join(work, "matches")

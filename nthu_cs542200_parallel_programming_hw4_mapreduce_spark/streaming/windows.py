@@ -9,16 +9,15 @@ at Kafka and runs forever; watermarking (see ``run_windowed_count``'s
 
 from __future__ import annotations
 
+import glob
 import itertools
 import os
-import tempfile
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _SINKS = itertools.count()
-_stage_dirs: dict[str, str] = {}
 
 _STATE_PARTITIONS_ENV = "SPARK_GRAFT_STREAM_STATE_PARTITIONS"
 
@@ -142,10 +141,11 @@ def events_stream(
     raw nanos and convert with integer division (see catalog.table).
 
     Spark's file stream source requires a *directory*; a single-file
-    path is staged as a symlink inside a scratch directory (read-only
-    fixtures stay untouched). ``options`` pass through to the source
-    reader (e.g. ``maxFilesPerTrigger`` to bound per-micro-batch state —
-    the production knob the 100× scale probe exercises).
+    path streams its parent directory through a ``pathGlobFilter`` that
+    matches only that file's name, so nothing is staged on disk.
+    ``options`` pass through to the source reader (e.g.
+    ``maxFilesPerTrigger`` to bound per-micro-batch state — the
+    production knob the 100× scale probe exercises).
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # schema inference is a full listing + footer read (~80 ms); memoize
@@ -157,17 +157,11 @@ def events_stream(
     schema = schemas.get(path)
     if schema is None:
         schema = schemas[path] = spark.read.parquet(path).schema
-    if os.path.isfile(path):
-        # one staging dir per source file, reused across calls (repeated
-        # streaming queries in a session must not accumulate /tmp dirs)
-        if path not in _stage_dirs:
-            stage = tempfile.mkdtemp(prefix="stream_src_")
-            os.symlink(path, os.path.join(stage, os.path.basename(path)))
-            _stage_dirs[path] = stage
-        stream_path = _stage_dirs[path]
-    else:
-        stream_path = path
     reader = spark.readStream.schema(schema)
+    stream_path = path
+    if os.path.isfile(path):
+        stream_path, name = os.path.split(os.path.abspath(path))
+        reader = reader.option("pathGlobFilter", glob.escape(name))
     for k, v in (options or {}).items():
         reader = reader.option(k, v)
     src = reader.parquet(stream_path)

@@ -13,8 +13,10 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.functions import text as X
+from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.functions.hashing import (
+    minhash_slice,
+)
 from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.plans.dedup import (
-    _mh_slice,
     minhash_signatures,
 )
 
@@ -39,7 +41,7 @@ def py_shingles(text: str, k: int = 3) -> list[str]:
 
 
 def py_minhash(text: str, j: int) -> str:
-    seed, start = _mh_slice(j)
+    seed, start = minhash_slice(j)
     return min(
         hashlib.md5(f"{s}:{seed}".encode()).hexdigest()[start - 1 : start - 1 + 8]
         for s in py_shingles(text)

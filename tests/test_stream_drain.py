@@ -7,6 +7,8 @@ the one code path that starts a memory-sink drain.
 from __future__ import annotations
 
 import ast
+import os
+import tempfile
 from pathlib import Path
 from types import SimpleNamespace
 
@@ -291,3 +293,20 @@ def test_run_drained_is_the_one_drain_harness():
     assert conf == {_HARNESS}
     assert counters == {"streaming/windows.py"}
     assert params == set()
+
+
+def test_events_stream_stages_nothing_in_the_temp_dir(spark, sf_dir):
+    """A single-file source streams its parent directory through a
+    ``pathGlobFilter``: five drains leave no ``stream_src_*`` entry in
+    the system temp directory, and each drains the same rows."""
+
+    def staged():
+        return {e for e in os.listdir(tempfile.gettempdir()) if e.startswith("stream_src_")}
+
+    before = staged()
+    drains = [
+        sorted(run_windowed_count(spark, f"{sf_dir}/events.parquet").collect())
+        for _ in range(5)
+    ]
+    assert staged() == before
+    assert drains[0] and all(d == drains[0] for d in drains)

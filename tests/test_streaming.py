@@ -187,34 +187,34 @@ def test_incremental_dedup_bucket_cap(spark, monkeypatch):
     assert uncapped == 16
 
 
-def test_incremental_dedup_leaves_only_matches(spark, monkeypatch):
+def test_incremental_dedup_leaves_only_matches(spark):
     """The staged corpus and the band index are removed once the stream
     stops: after a call and a collect() its work directory holds only
-    the ``matches`` the returned frame reads."""
-    import tempfile
+    the ``matches`` the returned frame reads. The directory lives under
+    Spark's local dir, which the JVM deletes at exit, so no call leaves
+    anything in the system temp directory for the life of the host."""
+    from urllib.parse import urlparse
 
     from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.streaming.incremental import (
         incremental_minhash_dedup,
     )
 
-    made = []
-    mkdtemp = tempfile.mkdtemp
-
-    def recording_mkdtemp(*args, **kwargs):
-        path = mkdtemp(*args, **kwargs)
-        made.append(path)
-        return path
-
-    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta unique pair"),
          (2, "alpha beta gamma delta unique pair")],
         "doc_id long, text string",
     )
-    pairs = incremental_minhash_dedup(spark, docs).collect()
-    assert [(r["a_id"], r["b_id"]) for r in pairs] == [(1, 2)]
-    [work] = [p for p in made if os.path.basename(p).startswith("incr_dedup_")]
+    out = incremental_minhash_dedup(spark, docs)
+    assert [(r["a_id"], r["b_id"]) for r in out.collect()] == [(1, 2)]
+    [work] = {
+        os.path.dirname(os.path.dirname(urlparse(f).path)) for f in out.inputFiles()
+    }
     assert os.listdir(work) == ["matches"]
+    local = spark._jvm.org.apache.spark.util.Utils.getLocalDir(
+        spark.sparkContext._jsc.sc().conf()
+    )
+    assert os.path.dirname(os.path.realpath(work)) == os.path.realpath(local)
+    assert os.path.basename(work).startswith("incr_dedup")
 
 
 def test_streaming_hopping_equals_batch(spark, sf_dir):

@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.functions import hashing as H
 from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.functions import text as X
 
 
@@ -37,7 +38,7 @@ def test_lang_id(spark, docs):
 
 
 def test_fingerprint_normalizes_whitespace_and_case(spark, docs):
-    out = one(docs.select("id", X.fingerprint("text").alias("fp")), "fp")
+    out = one(docs.select("id", H.fingerprint("text").col.alias("fp")), "fp")
     assert out[1] == out[4]  # same words modulo case/whitespace
     assert out[1] != out[2]
 
