@@ -25,16 +25,9 @@ TABLES = (
     "embeddings",
 )
 
-#: Dimension tables small enough to broadcast at any realistic scale factor
-#: (TPC-H: region is 5 rows, nation 25 — constant in SF).
-BROADCAST_TABLES = ("region", "nation")
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 #: Per-SESSION memo of the lazy source DataFrames, ``session_memo(spark)
-#: ["read"]`` keyed by (sf_dir, name) (round-14, guide §6 /
-#: VERDICT r13 "Next round" #1 — "register the parquet relations once
-#: per bench session"). A DataFrame here is an UNEXECUTED logical plan:
+#: ["read"]`` keyed by (sf_dir, name): the parquet relations are
+#: registered once per session. A DataFrame here is an UNEXECUTED logical plan:
 #: no rows, no results, nothing persisted — every action still scans
 #: the parquet from disk. What the memo removes is the ~70-90 ms the
 #: driver spends PER `spark.read.parquet` CALL on file listing + footer
@@ -46,7 +39,7 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: memoized file listing adds.
 
 
-def _app_id(spark: SparkSession) -> str:
+def _application(spark: SparkSession) -> str:
     """applicationId with the py4j round trip paid once per session."""
     cached = getattr(spark, "_graft_app_id", None)
     if cached is None:
@@ -69,17 +62,17 @@ def session_memo(spark: SparkSession) -> dict:
     its session; a process has one SparkContext at a time, so one
     owner is enough."""
     global _SESSION_MEMO
-    app = _app_id(spark)
+    app = _application(spark)
     if _SESSION_MEMO[0] != app:
         _SESSION_MEMO[1].clear()
         _SESSION_MEMO = (app, {})
     return _SESSION_MEMO[1]
 
 
-def spread(df: DataFrame, parts: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Parallelize a small UNSPLITTABLE scan before CPU-heavy narrow
-    work (round 14, guide §2.5 "input skew: one huge unsplittable
-    file … repartition immediately after the read").
+    work (guide §2.5 "input skew: one huge unsplittable file …
+    repartition immediately after the read").
 
     Parquet splits cannot cross row-group boundaries, and each fixture
     table is one file with ONE row group — so every scan is a single
@@ -96,30 +89,28 @@ def spread(df: DataFrame, parts: int | None = None) -> DataFrame:
     Non-file sources (or remote storage, where the source provides
     splits) pass through untouched.
 
-    Decisions are memoized in ``session_memo(spark)["spread"]`` per
-    (id(df), parts), for the frames ``table()`` returned only: no other
-    frame is passed twice (the incremental dedup path passes a new one
-    per micro-batch), so memoizing those would only grow the memo. The
-    value keeps a STRONG reference to the key DataFrame so its id() is
-    never recycled while the entry lives."""
+    Decisions are memoized in ``session_memo(spark)["spread"]`` under
+    the (sf_dir, name) of the ``table()`` read that ``df`` is, so the
+    memo holds at most one entry per fixture table. Any other frame
+    (the incremental dedup path passes a new one per micro-batch) is
+    never passed twice and adds no entry."""
     spark = df.sparkSession
     memo = session_memo(spark)
     spreads = memo.setdefault("spread", {})
-    key = (id(df), parts)
-    hit = spreads.get(key)
-    if hit is not None and hit[0] is df:
-        return hit[1]
+    key = next((k for k, t in memo.get("read", {}).items() if t is df), None)
+    if key in spreads:
+        return spreads[key]
     out = df
     files = df.inputFiles()
     local = [f.removeprefix("file:") for f in files if f.startswith("file:")]
     if files and len(local) == len(files):
         nbytes = sum(os.path.getsize(f) for f in local if os.path.exists(f))
         cores = spark.sparkContext.defaultParallelism
-        target = parts or max(2, min(cores, (nbytes + 65_535) // 65_536))
+        target = max(2, min(cores, (nbytes + 65_535) // 65_536))
         if df.rdd.getNumPartitions() < target:
             out = df.repartition(target)
-    if any(df is t for t in memo.get("read", {}).values()):
-        spreads[key] = (df, out)
+    if key is not None:
+        spreads[key] = out
     return out
 
 

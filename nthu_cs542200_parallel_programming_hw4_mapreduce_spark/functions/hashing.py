@@ -91,6 +91,13 @@ def split_12_2_2(digest: Sql | str) -> Sql:
     )
 
 
+def first_hex_in(digest: Sql | str, keep: str) -> Sql:
+    """Whether the digest's first hex digit is one of the digits in
+    ``keep``: a deterministic ``len(keep)``/16 sample of digests."""
+    listed = ", ".join(f"'{c}'" for c in keep)
+    return Sql(*(f"{h} IN ({listed})" for h in _hex(digest, 1, 1)))
+
+
 def fingerprint(col: str) -> Sql:
     """md5 of whitespace-normalized lowercase text: the exact-dedup key.
     The class is RE2's ``\\s`` in both engines (see ``text.WS``)."""

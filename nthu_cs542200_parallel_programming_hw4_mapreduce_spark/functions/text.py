@@ -145,11 +145,14 @@ def word_shingles(col: str | Column, k: int = 3) -> Column:
 def shingle_fingerprints(col: str | Column, k: int = 3, keep_mod: int = 4) -> Column:
     """Winnowing-style selective fingerprints: md5 each k-shingle, keep
     those whose first hex nibble ≡ 0 (mod keep_mod) — a deterministic
-    1/keep_mod sample of shingle hashes usable for containment detection."""
-    shingles = word_shingles(col, k)
-    hashes = F.transform(shingles, F.md5)
-    keep = "0123456789abcdef"[::keep_mod]
-    return F.sort_array(F.filter(hashes, lambda h: F.substring(h, 1, 1).isin(*list(keep))))
+    1/keep_mod sample of shingle hashes usable for containment detection.
+    The pick is a SQL lambda so that ``hashing.first_hex_in`` renders it,
+    as it renders the oracle's."""
+    from .hashing import first_hex_in  # hashing imports this module
+
+    hashes = F.transform(word_shingles(col, k), F.md5)
+    pick = F.expr(f"h -> {first_hex_in('h', '0123456789abcdef'[::keep_mod]).spark}")
+    return F.sort_array(F.call_function("filter", hashes, pick))
 
 
 _ALNUM = "".join(chr(c) for r in (range(48, 58), range(65, 91), range(97, 123)) for c in r)

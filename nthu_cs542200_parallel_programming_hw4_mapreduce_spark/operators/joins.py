@@ -11,45 +11,31 @@ faithful mode.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
 def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    fact_key: str,
-    dim_key: str,
-    *,
-    salt: int = 8,
-    how: str = "inner",
-    fact_salt_col: Column | None = None,
+    fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str, *, salt: int = 8
 ) -> DataFrame:
-    """Equi-join with the hot-key salting pattern.
+    """Inner equi-join with the hot-key salting pattern.
 
     Fact rows scatter across ``salt`` sub-keys (deterministically, from a
-    hash of the whole row unless ``fact_salt_col`` is given); every dim
-    row replicates ``salt`` times, once per sub-key. The join key becomes
-    (key, salt), so a key that used to land on one reducer now spreads
-    over ``salt`` of them — turning a straggler task into ``salt``
-    balanced ones at the cost of a ``salt``× blow-up of the (small) dim
-    side. Semantically identical to ``fact.join(dim, key)`` for every
-    join type that doesn't need dim-side row identity (inner/left).
+    hash of the whole row); every dim row replicates ``salt`` times, once
+    per sub-key. The join key becomes (key, salt), so a key that used to
+    land on one reducer now spreads over ``salt`` of them — turning a
+    straggler task into ``salt`` balanced ones at the cost of a
+    ``salt``× blow-up of the (small) dim side. Semantically identical to
+    ``fact.join(dim, key)``; a right or full outer join would emit each
+    unmatched dim row ``salt`` times, which is why there is no ``how``.
     """
-    if how not in ("inner", "left", "left_outer", "leftouter"):
-        raise ValueError(
-            f"salted_join supports inner/left joins only, got {how!r}: the dim "
-            "side is replicated per salt, so right/full-outer would emit each "
-            "unmatched dim row salt times"
-        )
-    if fact_salt_col is None:
-        fact_salt_col = F.pmod(F.hash(*[F.col(c) for c in fact.columns]), F.lit(salt))
-    salted_fact = fact.withColumn("_salt", fact_salt_col)
+    salted_fact = fact.withColumn(
+        "_salt", F.pmod(F.hash(*[F.col(c) for c in fact.columns]), F.lit(salt))
+    )
     salted_dim = dim.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
     joined = salted_fact.join(
         salted_dim,
         (salted_fact[fact_key] == salted_dim[dim_key])
         & (salted_fact["_salt"] == salted_dim["_salt"]),
-        how,
     )
     return joined.drop("_salt")

@@ -79,8 +79,6 @@ class JobConfig:
     fuse_chunk_lines: bool = False
     partition_fn: str = "hash"  # 'hash' | 'first_char'
     sort_ascending: bool = True
-    # pluggable reduce: name of a builtin ('sum', 'count', 'max', 'min')
-    reduce_fn: str = "sum"
     # fully-custom hooks, generalizing the hard-coded slots of hw4.cc:32-40
     # (the reference's variants only exist as commented-out code,
     # hw4.cc:385-397, 477-478). When set, the map/reduce stages run as
@@ -127,17 +125,11 @@ def partition_id(cfg: JobConfig) -> F.Column:
     return F.pmod(F.hash("word"), F.lit(r))
 
 
-def reduce_agg(cfg: JobConfig) -> F.Column:
-    """O9+O10 group/reduce generalized (hw4.cc:359-382 is SUM over 1s —
-    quirk Q5 means only 'sum'/'count' are faithful; the general hooks use
-    the record's real value, per SURVEY.md §7.4)."""
-    fns = {
-        "sum": F.sum("one"),
-        "count": F.count("*"),
-        "max": F.max("one"),
-        "min": F.min("one"),
-    }
-    return fns[cfg.reduce_fn].cast("long").alias("cnt")
+def reduce_agg() -> F.Column:
+    """O9+O10 group/reduce (hw4.cc:359-382): SUM over the 1s. Other
+    reductions go through the ``custom_reduce`` hook, which sees the
+    record's real values (SURVEY.md §7.4)."""
+    return F.sum("one").cast("long").alias("cnt")
 
 
 def wordcount_df(spark: SparkSession, cfg: JobConfig) -> DataFrame:
@@ -153,7 +145,7 @@ def wordcount_df(spark: SparkSession, cfg: JobConfig) -> DataFrame:
     chunks = chunked_lines(spark, cfg.input_path, cfg.chunk_size, cfg.fuse_chunk_lines)
     words = tokenize(chunks, cfg)
     if cfg.map_fn is None and cfg.custom_reduce is None:
-        counted = map_pairs(words).groupBy("word").agg(reduce_agg(cfg))
+        counted = map_pairs(words).groupBy("word").agg(reduce_agg())
     else:
         mf = cfg.map_fn or (lambda w: (w, 1))
         rf = cfg.custom_reduce or (lambda vs: sum(vs))
@@ -221,8 +213,7 @@ def run_job(spark: SparkSession, cfg: JobConfig) -> dict[str, object]:
     task times, attributed to chunk ids by index — exact chunk↔task
     attribution is undefined under Spark's own input coalescing, so the
     *values* are real per-task measurements while the *pairing* is
-    positional (documented deviation, down from round 2's
-    all-rows-share-one-aggregate). If the status store yields nothing
+    positional (documented deviation). If the status store yields nothing
     the rows fall back to the aggregate stage elapsed. Vocabulary,
     field shapes, and event ordering match the reference exactly
     (pinned by tests/test_mapreduce.py)."""

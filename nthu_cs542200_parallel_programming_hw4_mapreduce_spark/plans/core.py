@@ -2116,8 +2116,8 @@ def delta_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delta Lake round trip through the jar-free connector
     (sources/delta.py): documents materializes ONCE per sf_dir as an
     on-disk Delta table (data parquet + commit-0 transaction log,
-    partitioned by lang), then reads back through ``read_delta`` — log
-    replay → active-file snapshot → native parquet scan with per-branch
+    partitioned by lang), then reads back through ``read_delta_via_log`` —
+    log replay → active-file snapshot → native parquet scan with per-branch
     partition literals — and aggregates. The oracle runs on the
     original parquet, so a green row proves the Delta path loses,
     duplicates, and mistypes nothing (including the partition column,
@@ -2129,8 +2129,7 @@ def delta_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters on partition columns constant-fold per branch — real
     partition pruning (pinned by tests/test_delta.py)."""
     from ..sources.cache import materialize_once
-    from ..sources.delta import write_delta_commit0
-    from ..sources.readers import read_delta
+    from ..sources.delta import read_delta_via_log, write_delta_commit0
 
     base = materialize_once(
         "delta", sf_dir, "documents",
@@ -2139,7 +2138,7 @@ def delta_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     return (
-        read_delta(spark, base)
+        read_delta_via_log(spark, base)
         .groupBy("lang", "source")
         .agg(
             F.count("*").alias("n"),

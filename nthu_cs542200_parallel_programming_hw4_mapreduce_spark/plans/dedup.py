@@ -488,8 +488,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     as MinHash-LSH — the collected structs carry the signature so the
     Hamming filter needs no join back.
 
-    ORACLE-BACKED since round 8 (was rows-only r1-r7 as "pair search
-    over hamming distance"): every stage is integer-deterministic on
+    ORACLE-BACKED: every stage is integer-deterministic on
     top of the already-oracle-verified signature — the oracle replays
     banding as 16-char substrings of the shared ``sig`` CTE, mirrors
     the (>1, ≤``_MAX_BUCKET``) bucket gate, and counts differing bit
@@ -895,8 +894,7 @@ def dedup_embedding_cosine_bucketed(spark: SparkSession, sf_dir: str) -> DataFra
     recall ≥ 0.9 on synthetic planted near-identical pairs — the regime
     a production near-dup threshold (≥0.9) actually operates in.
 
-    ORACLE-BACKED since round 8 (was rows-only r2-r7 as "the oracle
-    cannot see the banding"): the ``dedup_embedding_band_keys``
+    ORACLE-BACKED: the ``dedup_embedding_band_keys``
     foothold proved the banding REPLAYS exactly in DuckDB, so the full
     pipeline is now checked end-to-end — band-key CTEs, the
     (>1, ≤``_MAX_BUCKET``) bucket-size gate, same-bucket a<b candidates,
@@ -1036,7 +1034,7 @@ def connected_components(
 
 @query(
     "dedup_clusters",
-    # sized CTE added round 11 (code-review find): the engine's
+    # sized CTE: the engine's
     # lsh_candidate_pairs applies the (>1, ≤_MAX_BUCKET) degenerate-
     # bucket gate, but this oracle's pairs CTE was ungated — latent
     # divergence on any corpus with a >10k-member band bucket (no
@@ -1092,7 +1090,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_minhash_mllib",
-    # GRADUATED from rows-only in round 12 (VERDICT r11 #4): MLlib's
+    # Oracle-backed: MLlib's
     # hash family still has no DuckDB twin, but the OUTPUT CONTRACT
     # does — approxSimilarityJoin filters its candidates by the EXACT
     # Jaccard distance (keyDistance on the feature sets), so the
@@ -1132,7 +1130,7 @@ def dedup_minhash_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance threshold 0.5 ≈ the banding s-curve midpoint of the
     custom variant.
 
-    Oracle-backed since round 12 (see the decorator note): the oracle
+    Oracle-backed (see the decorator note): the oracle
     is the exact-Jaccard truth at the same strict threshold, which the
     MLlib pipeline's output equals because (a) approxSimilarityJoin
     post-filters candidates by EXACT set distance — soundness by
@@ -1165,10 +1163,9 @@ def dedup_minhash_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.collect_list("s").alias("toks"))
     )
-    # 2^30 buckets (round 12, was 2^18): the oracle graduation made
-    # HashingTF collisions visible — at sf0.1, 2^18 skewed two pairs'
-    # jaccard_dist by ~1e-4, and even 2^24 left one in-DOC collision
-    # (doc 3447: 94 shingles → 93 buckets, union off by one; expected
+    # 2^30 buckets: the oracle sees HashingTF collisions — at sf0.1,
+    # 2^18 skewed two pairs' jaccard_dist by ~1e-4, and even 2^24 left
+    # one in-DOC collision (doc 3447: 94 shingles → 93 buckets, union off by one; expected
     # colliding docs ≈ n_docs·C(~90,2)/N, which is ~1 at 2^24 with
     # 5k docs). 2^30 puts that expectation at ~0.002 over the docs
     # that reach an emitted pair; murmur3 is fixed-seed so the result
@@ -1193,8 +1190,7 @@ def dedup_minhash_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_lsh_jaccard_verified",
-    # sized CTE added round 11 (code-review find, the dedup_clusters
-    # gate audit): the engine candidates come from the capped
+    # sized CTE: the engine candidates come from the capped
     # lsh_candidate_pairs, so the oracle mirrors the (>1, ≤_MAX_BUCKET)
     # degenerate-bucket gate
     oracle=f"""
@@ -1378,7 +1374,7 @@ def dedup_cross_snapshot_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     only (doc_id, band_id, band_key) rows of the old corpus
     participate, never its text.
 
-    Scale shape (rewritten round 11 — VERDICT r10 #4): the original
+    Scale shape: the original
     count-gate semi-join + new⋈old sort-merge join computed the
     signature chain TWICE and sorted two corpus-sized band frames,
     which is where the 1000× probe's 5.5×-per-10× spill superlinearity
@@ -1901,7 +1897,7 @@ _DD_REPDOCS = f"""
 
 @query(
     "dedup_fuzzy_production",
-    # sized CTE added round 11 — same gate mirror as
+    # sized CTE — same gate mirror as
     # dedup_lsh_jaccard_verified (the engine path is
     # lsh_jaccard_verified_over → capped lsh_candidate_pairs)
     oracle=f"""
@@ -2310,11 +2306,9 @@ def lsh_quality_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented on ``dedup_ngram_jaccard``); the set algebra is ONE
     full-outer join on (a_id, b_id) with presence flags folded into a
     single aggregate, so each underlying pipeline executes exactly once
-    in one Spark job (r3 shipped three separate ``.count()`` actions
-    that re-ran both uncached pipelines 3× — VERDICT r3 "What's wrong"
-    #1).
+    in one Spark job.
 
-    Round-13 optimization: both sides consume the SAME shingle set —
+    Both sides consume the SAME shingle set —
     the LSH side signs it (MIN is duplicate-insensitive, so distinct
     shingles give identical signatures — the lsh_jaccard_verified
     identity), the truth side counts intersections over it — so the
@@ -2322,7 +2316,7 @@ def lsh_quality_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     repo-wide multi-consumer rule) instead of each side re-running the
     corpus tokenize → gram → distinct pipeline from its own scan: one
     parquet scan of documents in the whole audit instead of two, and
-    two fewer gram-explode stages (plans/r13/lsh_quality_eval_*.txt).
+    two fewer gram-explode stages in the plan.
     Composing the shared cores directly (``lsh_candidate_pairs``,
     ``_ngram_jaccard_pairs``) also drops the two composed queries'
     presentation-only terminal sorts, which fed straight into a join

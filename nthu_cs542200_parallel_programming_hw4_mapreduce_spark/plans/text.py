@@ -263,7 +263,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "shingle_fingerprints",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
       SELECT doc_id, list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS l
       FROM documents
@@ -276,7 +276,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, UNNEST(list_transform(shingles, s -> md5(s))) AS fp FROM sh
     )
     SELECT doc_id, fp FROM fps
-    WHERE substr(fp, 1, 1) IN ('0', '4', '8', 'c')
+    WHERE {H.first_hex_in("fp", "048c").duck}
     ORDER BY doc_id, fp
     """,
 )
@@ -442,8 +442,7 @@ def pandas_udaf_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     series → scalar): per-event-type mean value. The UDAF extension
     point; the exact-arithmetic path is event_window's DECIMAL mean.
 
-    ORACLE-BACKED since round 8 (was rows-only r1-r7 over summation-
-    order caution): numpy's reduction differs from SQL AVG by ~1e-15,
+    ORACLE-BACKED: numpy's reduction differs from SQL AVG by ~1e-15,
     11 orders below the 4-dp display rounding — the same
     margin-vs-rounding argument every cosine oracle already rests on.
     Knife edge: a group mean sitting within 1e-15 of a x.xxxx5

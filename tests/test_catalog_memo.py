@@ -59,18 +59,6 @@ def test_spread_parallelizes_unsplittable_scan(spark, sf_dir):
     assert a == b
 
 
-def test_spread_memo_honours_parts(spark, sf_dir):
-    """A memo hit must not answer a call with a different ``parts``:
-    the explicit size is part of the memo key."""
-    docs = table(spark, sf_dir, "documents")
-    default = spread(docs)
-    three = spread(docs, parts=3)
-    assert three.rdd.getNumPartitions() == 3
-    # each size keeps its own memo entry
-    assert spread(docs) is default
-    assert spread(docs, parts=3) is three
-
-
 def test_spread_noops_on_wide_frames(spark, sf_dir):
     """A frame that already has enough partitions passes through
     untouched (the production no-op guard: splittable scans arrive
@@ -80,15 +68,20 @@ def test_spread_noops_on_wide_frames(spark, sf_dir):
 
 
 def test_spread_memo_skips_derived_frames(spark, sf_dir):
-    """Only the frames ``table()`` returns are memoized: a fresh derived
-    frame per call (one per micro-batch on the incremental dedup path)
-    adds no entry, so the memo stays bounded."""
+    """Only the frames ``table()`` returns are memoized, one entry per
+    (sf_dir, name): a fresh derived frame per call (one per micro-batch
+    on the incremental dedup path) adds no entry, and repeated reads of
+    one table share one."""
     docs = table(spark, sf_dir, "documents")
     spread(docs)
-    before = len(session_memo(spark)["spread"])
+    before = dict(session_memo(spark)["spread"])
     for i in range(50):
         spread(docs.filter(docs.doc_id != i))
-    assert len(session_memo(spark)["spread"]) == before
+    for _ in range(50):
+        spread(table(spark, sf_dir, "documents"))
+    spreads = session_memo(spark)["spread"]
+    assert spreads == before
+    assert (sf_dir, "documents") in spreads
 
 
 def test_memo_is_lazy_only(spark, sf_dir):

@@ -16,9 +16,6 @@ from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.sources.delta import
     read_delta_via_log,
     write_delta_commit0,
 )
-from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.sources.readers import (
-    read_delta,
-)
 
 SCHEMA_JSON = json.dumps(
     {
@@ -74,7 +71,7 @@ def test_multi_commit_add_remove(spark, tmp_path):
         {"remove": {"path": "a.parquet", "dataChange": True}},
         add_c,
     ])
-    got = sorted((r["id"], r["v"]) for r in read_delta(spark, table).collect())
+    got = sorted((r["id"], r["v"]) for r in read_delta_via_log(spark, table).collect())
     assert got == [(3, "b"), (4, "c")]  # a.parquet's rows are gone
 
 
@@ -99,12 +96,12 @@ def test_duplicate_add_counts_file_once(spark, tmp_path):
         add_b,
     ])
     _commit(log, 1, [add_a])  # re-add of the same path in a later commit
-    got = sorted((r["id"], r["v"]) for r in read_delta(spark, table).collect())
+    got = sorted((r["id"], r["v"]) for r in read_delta_via_log(spark, table).collect())
     assert got == [(1, "a"), (2, "a"), (3, "b")]  # a.parquet counted once
     # remove then RE-ADD: the file is active again at the final version
     _commit(log, 2, [{"remove": {"path": "a.parquet", "dataChange": True}}])
     _commit(log, 3, [add_a])
-    got3 = sorted((r["id"], r["v"]) for r in read_delta(spark, table).collect())
+    got3 = sorted((r["id"], r["v"]) for r in read_delta_via_log(spark, table).collect())
     assert got3 == [(1, "a"), (2, "a"), (3, "b")]
     # and the intermediate snapshot (version 2) really had it removed
     got2 = sorted(
@@ -159,7 +156,7 @@ def test_checkpoint_replay(spark, tmp_path):
 
 
 def test_partitioned_roundtrip_and_pruning(spark, tmp_path):
-    """write_delta_commit0 → read_delta round-trips a partitioned table
+    """write_delta_commit0 → read_delta_via_log round-trips a partitioned table
     (partition values come from the log, typed per the schema), and a
     filter on the partition column prunes to that partition's files."""
     table = str(tmp_path / "part")
@@ -168,7 +165,7 @@ def test_partitioned_roundtrip_and_pruning(spark, tmp_path):
         "doc_id long, lang string, score double",
     )
     write_delta_commit0(spark, df, table, partition_by=["lang"])
-    back = read_delta(spark, table)
+    back = read_delta_via_log(spark, table)
     assert sorted(back.columns) == ["doc_id", "lang", "score"]
     assert sorted((r["doc_id"], r["lang"], r["score"]) for r in back.collect()) == \
         sorted((i, "en" if i % 2 else "de", float(i)) for i in range(20))
@@ -185,7 +182,7 @@ def test_unpartitioned_roundtrip(spark, tmp_path):
     table = str(tmp_path / "flat")
     df = spark.createDataFrame([(1, "x"), (2, "y")], "id long, v string")
     write_delta_commit0(spark, df, table)
-    got = sorted((r["id"], r["v"]) for r in read_delta(spark, table).collect())
+    got = sorted((r["id"], r["v"]) for r in read_delta_via_log(spark, table).collect())
     assert got == [(1, "x"), (2, "y")]
 
 
@@ -207,7 +204,7 @@ def test_reader_version_guard(spark, tmp_path):
 
 
 def test_not_a_delta_table(spark, tmp_path):
-    with pytest.raises(FileNotFoundError):
+    with pytest.raises(FileNotFoundError, match="_delta_log"):
         read_delta_via_log(spark, str(tmp_path / "nope"))
 
 

@@ -141,17 +141,6 @@ def test_turkish_i_is_the_known_casefold_gap(spark):
         assert got[s] == duck[s], s
 
 
-def test_salted_join_rejects_outer(spark, sf_dir):
-    from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.operators.joins import (
-        salted_join,
-    )
-
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer")
-    with pytest.raises(ValueError, match="inner/left"):
-        salted_join(o, c, "o_custkey", "c_custkey", how="full")
-
-
 def test_mapreduce_recovers_from_stale_staging(spark, sf_dir, tmp_path):
     """A leftover staging dir from an interrupted run must not break the
     next run (saveAsTextFile refuses existing paths)."""

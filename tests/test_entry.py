@@ -46,14 +46,6 @@ def test_registry_alignment():
     }
 
 
-def test_all_queries_return_dataframes(spark, sf_dir):
-    from pyspark.sql import DataFrame
-
-    for name, fn in E.queries().items():
-        df = fn(spark, sf_dir)
-        assert isinstance(df, DataFrame), name
-
-
 def test_window_queries_run_in_vanilla_session():
     """The driver uses a PLAIN SparkSession, not session.get_spark() —
     run entry() plus a cross-family sample of the correctness window in

@@ -6,6 +6,7 @@ md5 slice, nibble or hex-integer cast by hand.
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 import duckdb
@@ -26,6 +27,7 @@ def _string_rules() -> dict[str, H.Sql]:
         for s, w in [(1, 1), (1, 3), (1, 8), (4, 13), (1, 15), (18, 15), (25, 8)]
     }
     rules["split"] = H.split_12_2_2(d)
+    rules["first_hex"] = H.first_hex_in(d, "048c")
     rules["fingerprint"] = H.fingerprint("x")
     rules["hll_j"] = H.hll_register(d, 1024)
     rules["hll_rho"] = H.hll_rank(d, 52)
@@ -44,6 +46,7 @@ def _id_rules() -> dict[str, H.Sql]:
         "hex_1_8": H.hex_int(d, 1, 8),
         "hex_1_15": H.hex_int(d, 1, 15),
         "split": H.split_12_2_2(d),
+        "first_hex": H.first_hex_in(d, "048c"),
         "hll_j": H.hll_register(d, 1024),
         "hll_rho": H.hll_rank(d, 52),
     }
@@ -100,6 +103,9 @@ def test_hex_slice_wider_than_a_signed_long_is_rejected():
 
 
 _RENDERINGS = ("substr(md5(", "substring(md5(", "'0x' ||")
+#: SQL names bound to an md5 digest: ``md5(x) AS fp``, and the lambda
+#: variable ``h`` of ``filter(transform(xs, s -> md5(s)), h -> ...)``
+_SQL_DIGEST = re.compile(r"md5\([^()]*\)\)*\s*(?:AS\s+(\w+)|,\s*(\w+)\s*->)", re.I)
 
 
 def _squash(s: str) -> str:
@@ -110,26 +116,71 @@ def test_md5_family_is_rendered_only_in_the_hash_module():
     """Outside ``functions/hashing.py``, no string constant in ``plans/``
     or ``functions/`` slices an md5 digest or casts hex to an integer,
     no ``conv`` call reads base 16, and no ``substring`` call slices an
-    ``md5`` call."""
+    ``md5`` call. A digest held by a name is caught too: a SQL column
+    or lambda variable bound to ``md5(...)`` in the same string, and a
+    Python variable or lambda parameter bound to an md5 column."""
     root = Path(pkg.__file__).parent
     found = []
     for path in sorted([*root.glob("plans/*.py"), *root.glob("functions/*.py")]):
         if path.name == "hashing.py":
             continue
         rel = path.relative_to(root).as_posix()
-        for node in ast.walk(ast.parse(path.read_text())):
+        tree = ast.parse(path.read_text())
+        for node in ast.walk(tree):
             if isinstance(node, ast.Constant) and isinstance(node.value, str):
                 text = _squash(node.value)
                 found += [
                     (rel, node.lineno, p) for p in _RENDERINGS if _squash(p) in text
                 ]
+                for m in _SQL_DIGEST.finditer(node.value):
+                    name = m.group(1) or m.group(2)
+                    if re.search(rf"\bsubstr(?:ing)?\(\s*{name}\s*,", node.value):
+                        found.append((rel, node.lineno, f"substr({name}, ...)"))
             elif isinstance(node, ast.Call) and len(node.args) > 1:
                 name, first, second = _callee(node), node.args[0], node.args[1]
                 if name == "conv" and getattr(second, "value", None) == 16:
                     found.append((rel, node.lineno, "conv(..., 16, ...)"))
                 if name == "substring" and _callee(first) == "md5":
                     found.append((rel, node.lineno, "substring(md5(...), ...)"))
+        for fn in ast.walk(tree):
+            if isinstance(fn, ast.FunctionDef):
+                digests = _digest_names(fn)
+                found += [
+                    (rel, node.lineno, f"substring({node.args[0].id}, ...)")
+                    for node in ast.walk(fn)
+                    if isinstance(node, ast.Call)
+                    and _callee(node) in ("substring", "substr")
+                    and node.args
+                    and getattr(node.args[0], "id", None) in digests
+                ]
     assert found == []
+
+
+def _mentions_md5(node: ast.AST, digests: set[str]) -> bool:
+    return any(
+        getattr(n, "attr", None) == "md5"
+        or getattr(n, "id", None) == "md5"
+        or getattr(n, "id", None) in digests
+        for n in ast.walk(node)
+    )
+
+
+def _digest_names(fn: ast.AST) -> set[str]:
+    """Names inside ``fn`` bound to an md5 digest column: assignment
+    targets whose value mentions md5, and the parameters of a lambda
+    passed to a call over such a value (``F.filter(hashes, lambda h:
+    ...)``)."""
+    digests: set[str] = set()
+    for node in ast.walk(fn):
+        if isinstance(node, ast.Assign) and _mentions_md5(node.value, digests):
+            digests |= {t.id for t in node.targets if isinstance(t, ast.Name)}
+    for node in ast.walk(fn):
+        if isinstance(node, ast.Call) and any(
+            _mentions_md5(a, digests) for a in node.args if not isinstance(a, ast.Lambda)
+        ):
+            for lam in (a for a in node.args if isinstance(a, ast.Lambda)):
+                digests |= {a.arg for a in lam.args.args}
+    return digests
 
 
 def _callee(node: ast.AST) -> str | None:

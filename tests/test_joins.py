@@ -23,18 +23,3 @@ def test_salted_join_equals_plain_join(spark, sf_dir):
         .agg(F.count("*").alias("n"))
     )
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_salted_left_join_keeps_unmatched(spark, sf_dir):
-    customer = table(spark, sf_dir, "customer")
-    orders = table(spark, sf_dir, "orders")
-    salted = salted_join(
-        customer, orders.select("o_custkey").distinct(), "c_custkey", "o_custkey",
-        salt=4, how="left",
-    ).count()
-    plain_dedup = customer.join(
-        orders.select("o_custkey").distinct(),
-        customer.c_custkey == F.col("o_custkey"),
-        "left",
-    ).count()
-    assert salted == plain_dedup

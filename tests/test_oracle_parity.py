@@ -2,8 +2,12 @@
 every oracle-declared query must match DuckDB exactly (row count,
 columns, values)."""
 
+import io
+from contextlib import redirect_stdout
+
 import duckdb
 import pytest
+from pyspark.sql import DataFrame
 
 import __spark_entry__ as E
 from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.catalog import TABLES
@@ -20,17 +24,49 @@ def duck(sf_dir):
     return con
 
 
+#: Oracle-checked queries whose plans evaluate Python by design; every
+#: other one must plan without BatchEvalPython/ArrowEvalPython, so UDFs
+#: stay quarantined to the explicitly rows-only multimodal/stateful
+#: operators.
+DELIBERATE_PYTHON = {
+    "streaming_window",  # streaming plans print differently; covered elsewhere
+    "dedup_embedding_cosine",  # vectorized numpy block-matmul kernel —
+    # the documented case where mapInPandas IS the fast path
+    "udtf_tokenize",  # Python UDTF BY DESIGN — the extension-point demo,
+    # scoped to 50 docs; JVM tokenization is what real queries use
+    "arrow_udf_reverse",  # Arrow scalar UDF BY DESIGN — same rule,
+    # completes the UDF-surface matrix, scoped to 50 docs
+    "heavy_hitters",  # the Misra-Gries candidate pass is the sketch
+    # (mapInPandas by design); the exact verify phase stays JVM-side
+    "udtf_analyze_split",  # polymorphic UDTF BY DESIGN (analyze API
+    # demo, scoped to 50 docs)
+    "arrow_map_batches",  # mapInArrow BY DESIGN — the batch-fidelity
+    # contract for the zero-copy Arrow path
+    "python_datasource_scan",  # Python Data Source BY DESIGN — the
+    # connector itself is the Python under test
+    "python_stream_source",  # Python streaming source BY DESIGN
+}
+
+
 @pytest.mark.parametrize("name", sorted(E.oracle_sql()))
 def test_oracle_parity(spark, sf_dir, duck, name):
-    sdf = E.queries()[name](spark, sf_dir).toPandas()
+    df = E.queries()[name](spark, sf_dir)
+    assert isinstance(df, DataFrame)
+    if name not in DELIBERATE_PYTHON:
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain()
+        assert "EvalPython" not in buf.getvalue()
     ddf = duck.execute(E.oracle_sql()[name]).df()
-    problems = compare(name, sdf, ddf)
+    problems = compare(name, df.toPandas(), ddf)
     assert not problems, problems
 
 
 @pytest.mark.parametrize("name", sorted(set(E.queries()) - set(E.oracle_sql())))
 def test_rows_only_queries_run(spark, sf_dir, name):
-    assert E.queries()[name](spark, sf_dir).count() >= 0
+    df = E.queries()[name](spark, sf_dir)
+    assert isinstance(df, DataFrame)
+    assert df.count() >= 0
 
 
 _UNICODE_TEXTS = [

@@ -25,8 +25,9 @@ def plan_of(spark, sf_dir, name, mode="formatted"):
     return buf.getvalue()
 
 
-def test_filter_pushdown_reaches_scan(spark, sf_dir):
-    plan = plan_of(spark, sf_dir, "filter_pred")
+@pytest.mark.parametrize("name", ["filter_pred", "orc_scan"])
+def test_filter_pushdown_reaches_scan(spark, sf_dir, name):
+    plan = plan_of(spark, sf_dir, name)
     assert "PushedFilters" in plan
     assert "l_quantity" in plan.split("PushedFilters")[1].splitlines()[0]
 
@@ -61,36 +62,7 @@ def test_aggregation_is_partial(spark, sf_dir):
     # two HashAggregates (partial + final) around the exchange
     assert plan.count("HashAggregate") >= 2
     # (WholeStageCodegen spans only appear in post-execution AQE plans;
-    # JVM-only evaluation is asserted by test_no_python_udfs_*)
-
-
-def test_no_python_udfs_on_relational_paths(spark, sf_dir):
-    """Every oracle-checked query must plan without Python evaluation
-    (BatchEvalPython/ArrowEvalPython) — UDFs are quarantined to the
-    explicitly rows-only multimodal/stateful operators."""
-    deliberate_python = {
-        "streaming_window",  # streaming plans print differently; covered elsewhere
-        "dedup_embedding_cosine",  # vectorized numpy block-matmul kernel —
-        # the documented case where mapInPandas IS the fast path
-        "udtf_tokenize",  # Python UDTF BY DESIGN — the extension-point demo,
-        # scoped to 50 docs; JVM tokenization is what real queries use
-        "arrow_udf_reverse",  # Arrow scalar UDF BY DESIGN — same rule,
-        # completes the UDF-surface matrix, scoped to 50 docs
-        "heavy_hitters",  # the Misra-Gries candidate pass is the sketch
-        # (mapInPandas by design); the exact verify phase stays JVM-side
-        "udtf_analyze_split",  # polymorphic UDTF BY DESIGN (analyze API
-        # demo, scoped to 50 docs)
-        "arrow_map_batches",  # mapInArrow BY DESIGN — the batch-fidelity
-        # contract for the zero-copy Arrow path
-        "python_datasource_scan",  # Python Data Source BY DESIGN — the
-        # connector itself is the Python under test
-        "python_stream_source",  # Python streaming source BY DESIGN
-    }
-    for name in sorted(E.oracle_sql()):
-        if name in deliberate_python:
-            continue
-        plan = plan_of(spark, sf_dir, name, mode="simple")
-        assert "EvalPython" not in plan, name
+    # JVM-only evaluation is asserted by test_oracle_parity)
 
 
 def test_verified_dedup_never_broadcasts_corpus_sides(spark, sf_dir):

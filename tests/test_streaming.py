@@ -737,8 +737,7 @@ def test_transform_with_state_is_protobuf_gated():
     r8 "Next round" #6, 2026-08-15): still ModuleNotFoundError.
     Round-10 re-probe (VERDICT r9 "Next round" #7, 2026-08-15): still
     ModuleNotFoundError, and the pyspark jars dir still carries no
-    iceberg/JDBC connector jars (the readers.py probe posture stands
-    too). Gate stands."""
+    iceberg/JDBC connector jars. Gate stands."""
     import importlib.util
 
     # the public API surface exists...
