@@ -8,11 +8,23 @@ Two tiers, chosen by data volume:
   finding that restructured the minhash signatures, see plans/dedup.py
   header). Reserved for O(1)-row contexts and oracle-fragment parity;
   NEVER on a corpus-sized hot path.
-* ``score_pairs`` / ``with_lsh_buckets`` — Arrow-batched numpy kernels
-  (``mapInPandas``): one BLAS matmul / einsum per batch instead of a
-  d-step interpreted fold per row. These are the hot-path primitives;
-  round-1's VERDICT flagged the HOF forms on `cosine_knn_exact` /
-  `lsh_bucket` and this module is the fix.
+* ``score_pairs`` / ``with_lsh_buckets`` / ``nearest_centroid`` —
+  Arrow-batched numpy kernels (``mapInPandas``): a few array ops per
+  batch instead of a d-step interpreted fold per row. These are the
+  hot-path primitives.
+
+``nearest_centroid`` is the one nearest-centroid rule of the package
+(k-means assignment, SemDeDup clustering, PQ encoding): a sequential
+left fold of Σ(x−c)², which equals ``dd_sqdist``'s DuckDB ``list_sum``
+bit for bit, and an argmin that breaks ties to the lowest index.
+``lowest_id_matrix`` is its one centroid init (the k lowest vec_ids).
+
+Small constants (centroids, query vectors, hyperplanes) are closed
+over by the kernel, never put in a broadcast variable: they ship in
+the serialized task, and PySpark itself broadcasts a task command past
+1 MB. Closures stay package-free (locals only), because a module-global
+reference pickles the package by reference and fails on executors
+whose PYTHONPATH lacks the repo.
 
 All arithmetic is forced to DOUBLE; user-facing similarity values are
 rounded to a tolerance (1e-5) far above both double-summation-order
@@ -27,7 +39,7 @@ from collections.abc import Iterable, Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
 
 def _c(col: str | Column) -> Column:
@@ -73,6 +85,16 @@ def dd_norm(a: str) -> str:
     )
 
 
+def dd_sqdist(a: str, b: str, width: int | None = None, block: str | None = None) -> str:
+    """Σ(a[i]−b[i])² — ``nearest_centroid``'s distance as a DuckDB
+    left-fold ``list_sum``: over the whole list, or over the
+    ``width``-long block number ``block`` (a 0-based SQL expression)."""
+    n = width or f"len({a})"
+    at = f"{n} * {block} + i" if block else "i"
+    diff = f"(CAST({a}[{at}] AS DOUBLE) - CAST({b}[{at}] AS DOUBLE))"
+    return f"list_sum(list_transform(range(1, {n} + 1), i -> {diff} * {diff}))"
+
+
 def dd_cosine(a: str, b: str) -> str:
     # GREATEST floor mirrors score_pairs/cosine: a zero-norm vector
     # scores 0.0 (ranking above negative cosines, below positives) in
@@ -93,8 +115,7 @@ _EPS = 1e-12  # zero-vector guard: cosine against ~0 ranks last, never NaN
 def np_planes(dim: int, n_planes: int = 8):
     """Deterministic pseudo-random hyperplanes from md5 — no RNG, so
     every run (and every executor) derives identical planes. Returns an
-    (n_planes, dim) float64 matrix; tiny, safe to close over (ships in
-    the serialized task, the broadcast-variable pattern for constants)."""
+    (n_planes, dim) float64 matrix; tiny, so kernels close over it."""
     import numpy as np
 
     rows = []
@@ -202,5 +223,65 @@ def score_pairs(
             den = np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1)
             cos = num / np.maximum(den, eps)
             yield pdf[keep_names].assign(**{out_col: cos})
+
+    return df.mapInPandas(kern, schema=schema)
+
+
+def lowest_id_matrix(emb: DataFrame, k: int):
+    """The embeddings of the ``k`` lowest vec_ids stacked into a
+    (≤k × d) float64 matrix — the fixed centroid init of the k-means,
+    SemDeDup and PQ queries. A bounded collect (k rows); None when
+    ``emb`` is empty, so callers return their own empty frame."""
+    import numpy as np
+
+    rows = emb.orderBy("vec_id").limit(k).select("embedding").collect()
+    if not rows:
+        return None
+    return np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
+
+
+def nearest_centroid(df: DataFrame, cmat, keep: list[str], blocks: int = 1) -> DataFrame:
+    """Tag every row with its nearest row of ``cmat`` — one narrow
+    ``mapInPandas``, no shuffle.
+
+    The ``embedding`` column and ``cmat`` split into ``blocks`` equal
+    blocks of dims. For each block the kernel folds Σ(x−c)² left to
+    right over the block's dims against every centroid, then emits the
+    argmin as ``cluster`` and the minimum as ``dist2`` (``cluster_m`` /
+    ``dist2_m`` for block m when ``blocks`` > 1). numpy's argmin takes
+    the first index, so a tie goes to the lowest centroid, as the
+    oracles' ``ORDER BY d2, <index>`` does. The fold is ``dd_sqdist``'s
+    order, so the distances equal DuckDB's bit for bit, not only their
+    argmin.
+
+    ``keep`` names the output columns in order, drawn from ``df``'s
+    columns and the kernel's; the Python stage returns only those, typed
+    by ``df``'s schema."""
+    import numpy as np
+
+    w = cmat.shape[1] // blocks
+    sfx = [""] if blocks == 1 else [f"_{m}" for m in range(blocks)]
+    fields = {f.name: f for f in df.schema.fields}
+    for s in sfx:
+        fields[f"cluster{s}"] = StructField(f"cluster{s}", LongType())
+        fields[f"dist2{s}"] = StructField(f"dist2{s}", DoubleType())
+    schema = StructType([fields[c] for c in keep])
+
+    def kern(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            x = np.stack([np.asarray(e, dtype=np.float64) for e in pdf["embedding"]])
+            rows = np.arange(len(x))
+            out = {}
+            for m, s in enumerate(sfx):
+                acc = np.zeros((len(x), len(cmat)))
+                for i in range(m * w, (m + 1) * w):
+                    diff = x[:, None, i] - cmat[None, :, i]
+                    acc = acc + diff * diff
+                best = np.argmin(acc, axis=1)
+                out[f"cluster{s}"] = best.astype("int64")
+                out[f"dist2{s}"] = acc[rows, best]
+            yield pdf.assign(**out)[keep]
 
     return df.mapInPandas(kern, schema=schema)

@@ -35,7 +35,7 @@ from ..functions import hashing as H
 from ..functions import text as X
 from ..functions import vectors as V
 from ..registry import query
-from .similarity import vec_table
+from .similarity import _VEC_OK, vec_table
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -644,8 +644,8 @@ def _ngram_jaccard_pairs(docs: DataFrame, exn: DataFrame | None = None) -> DataF
     "dedup_embedding_cosine",
     oracle=f"""
     SELECT a.vec_id AS a_id, b.vec_id AS b_id
-    FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) > 0 AND NOT (isnan(CAST(list_max(embedding) AS DOUBLE)) OR CAST(list_max(embedding) AS DOUBLE) = 'inf'::DOUBLE OR CAST(list_min(embedding) AS DOUBLE) = '-inf'::DOUBLE) AND len(list_filter(embedding, x -> x IS NULL)) = 0) a
-    JOIN (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) > 0 AND NOT (isnan(CAST(list_max(embedding) AS DOUBLE)) OR CAST(list_max(embedding) AS DOUBLE) = 'inf'::DOUBLE OR CAST(list_min(embedding) AS DOUBLE) = '-inf'::DOUBLE) AND len(list_filter(embedding, x -> x IS NULL)) = 0) b
+    FROM (SELECT * FROM embeddings WHERE {_VEC_OK}) a
+    JOIN (SELECT * FROM embeddings WHERE {_VEC_OK}) b
       ON a.vec_id < b.vec_id
     WHERE {V.dd_cosine('a.embedding', 'b.embedding')} >= 0.4
     ORDER BY a_id, b_id
@@ -833,7 +833,7 @@ _BAND_KEYS_CTES = f"""
                     j -> CAST(e.embedding[j] AS DOUBLE) * pl.pl[j])) >= 0
                   THEN 1 ELSE 0 END AS bit
       FROM (SELECT vec_id, embedding FROM embeddings
-            WHERE embedding IS NOT NULL AND len(embedding) > 0 AND NOT (isnan(CAST(list_max(embedding) AS DOUBLE)) OR CAST(list_max(embedding) AS DOUBLE) = 'inf'::DOUBLE OR CAST(list_min(embedding) AS DOUBLE) = '-inf'::DOUBLE) AND len(list_filter(embedding, x -> x IS NULL)) = 0) e
+            WHERE {_VEC_OK}) e
       CROSS JOIN planes pl
     ),
     keys AS (
@@ -2033,15 +2033,12 @@ def substring_dup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cluster,
              embedding AS ce
       FROM (SELECT vec_id, embedding FROM embeddings
-            WHERE embedding IS NOT NULL AND len(embedding) > 0 AND NOT (isnan(CAST(list_max(embedding) AS DOUBLE)) OR CAST(list_max(embedding) AS DOUBLE) = 'inf'::DOUBLE OR CAST(list_min(embedding) AS DOUBLE) = '-inf'::DOUBLE) AND len(list_filter(embedding, x -> x IS NULL)) = 0 ORDER BY vec_id LIMIT 8) s
+            WHERE {_VEC_OK} ORDER BY vec_id LIMIT 8) s
     ),
     d AS (
       SELECT e.vec_id, e.embedding, c.cluster,
-             list_sum(list_transform(range(1, len(e.embedding) + 1),
-               i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                  * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-             )) AS d2
-      FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) > 0 AND NOT (isnan(CAST(list_max(embedding) AS DOUBLE)) OR CAST(list_max(embedding) AS DOUBLE) = 'inf'::DOUBLE OR CAST(list_min(embedding) AS DOUBLE) = '-inf'::DOUBLE) AND len(list_filter(embedding, x -> x IS NULL)) = 0) e
+             {V.dd_sqdist('e.embedding', 'c.ce')} AS d2
+      FROM (SELECT * FROM embeddings WHERE {_VEC_OK}) e
       CROSS JOIN cents c
     ),
     a AS (
@@ -2066,11 +2063,13 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ clusterᵢ² instead of n²; the paper's production recipe sizes k so
     clusters stay ~n/k small (50k clusters for 100M docs).
 
-    Assignment reuses ``kmeans_assign``'s proven kernel verbatim (fixed
-    init = the k lowest vec_ids, one Lloyd round, Σ(x−c)² term-for-term
-    with the oracle, argmin first-index tie-break ≡ ORDER BY d2,
-    cluster) but passes the embedding through the Arrow batch so the
-    per-cluster stage needs NO join back to the corpus. The per-cluster
+    Assignment is ``kmeans_assign``'s own init and kernel
+    (``V.lowest_id_matrix`` + ``V.nearest_centroid``: the k lowest
+    vec_ids, one Lloyd round, left-fold Σ(x−c)² bit-equal to the
+    oracle's ``dd_sqdist``, lowest-index tie-break ≡ ORDER BY d2,
+    cluster), so that foothold pins this assignment too. The kernel
+    passes the embedding through the Arrow batch so the per-cluster
+    stage needs NO join back to the corpus. The per-cluster
     pairwise stage is ``groupBy(cluster).applyInPandas`` — one shuffle
     on cluster, then a normalized-matmul BLAS kernel per cluster (same
     float-margin argument as dedup_embedding_cosine: the 0.4 threshold
@@ -2082,27 +2081,11 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k, threshold = 8, 0.4
     emb = vec_table(spark, sf_dir).select("vec_id", "embedding")
-    init = emb.orderBy("vec_id").limit(k).select("embedding").collect()
+    cmat = V.lowest_id_matrix(emb, k)
     # empty-after-null-filter guard (all-null sweep, round 4)
-    if not init:
+    if cmat is None:
         return spark.createDataFrame([], "removed_id long")
-    cmat = np.stack([np.asarray(r[0], dtype=np.float64) for r in init])
-    bc = spark.sparkContext.broadcast(cmat)
-
-    def assign(batches):
-        mat = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = np.stack(
-                [np.asarray(e, dtype=np.float64) for e in pdf["embedding"]]
-            )
-            d2 = ((x[:, None, :] - mat[None, :, :]) ** 2).sum(axis=2)
-            yield pdf.assign(cluster=np.argmin(d2, axis=1).astype("int64"))
-
-    assigned = emb.mapInPandas(
-        assign, schema="vec_id long, embedding array<float>, cluster long"
-    )
+    assigned = V.nearest_centroid(emb, cmat, ["vec_id", "embedding", "cluster"])
 
     eps = V._EPS  # local bind — closures ship by value (see _unpack)
 

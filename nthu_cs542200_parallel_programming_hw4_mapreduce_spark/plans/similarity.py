@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..catalog import table
 from ..functions import vectors as V
@@ -33,40 +34,37 @@ _DIM = 64
 
 
 def vec_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embeddings with NULL vectors dropped at the scan — ingest
-    hygiene for every query that feeds the vector to a numpy kernel
-    or arithmetic that assumes a real array. A 100 TB embedding store
-    always carries failed-encode rows; without this filter a NULL
-    array reaches ``np.stack``/``einsum`` and kills the task (caught
-    by the all-null robustness sweep, round 4). Round 8 widened the
-    gate to the full failed-encode class: EMPTY arrays (np.stack over
-    mixed shapes raises), and NaN/Inf elements (numpy compares NaN
-    False while DuckDB sorts NaN greater-than-everything, so a single
-    NaN row silently flips `>= threshold` oracles the other way).
+    """Embeddings with failed-encode rows dropped at the scan — ingest
+    hygiene for every query that feeds the vector to a numpy kernel or
+    arithmetic that assumes a real array. A 100 TB embedding store
+    always carries such rows, and each class breaks a kernel or an
+    oracle differently:
+
+    * a NULL array reaches ``np.stack``/``einsum`` and kills the task;
+    * an EMPTY array makes np.stack raise over mixed shapes;
+    * a NaN/Inf element: numpy compares NaN False while DuckDB sorts NaN
+      greater-than-everything, so a single NaN row silently flips
+      `>= threshold` oracles the other way;
+    * a NULL element ([1.0, NULL, ...]) passes array_max (null-skipping
+      in both engines), but numpy coerces the hole to NaN while
+      DuckDB's list_sum skips the NULL term and yields a finite cosine.
+
     The NaN/Inf clause rides array_min/array_max — NaN sorts GREATER
     than everything in both engines, so isnan(max) catches any NaN and
     the min/max extremes catch ±Inf — deliberately NOT an exists()
     higher-order lambda, which would put an interpreted per-element
     fold on every corpus scan (the hot-path discipline
     tests/test_plans.py::test_vector_hot_paths_not_interpreted pins).
-    Round 9 (ADVICE r8) closed the last failed-encode class the
-    min/max clauses skip over: an array CONTAINING a NULL element
-    ([1.0, NULL, ...]) passes array_max (null-skipping in both
-    engines) but numpy coerces the hole to NaN (silently dropping the
-    row from >= threshold pairs) while DuckDB's list_sum skips the
-    NULL term and yields a finite cosine. The clause stays lambda-free
-    on the Spark side via sort_array: ascending sort places NULL
-    elements FIRST, so a null first element ⇔ some element is null
-    (F.get is the non-ANSI element access — returns NULL, never
-    INVALID_ARRAY_INDEX, on the empty arrays the size clause already
-    drops). The SQL mirror is the direct form,
-    len(list_filter(embedding, x -> x IS NULL)) = 0.
-    Oracle SQL of vector-consuming oracle-backed queries mirrors the
-    exact same three-clause predicate so both engines see the same
-    rows. Label-only consumers (``gini_label_balance``) intentionally
-    do NOT use this loader — a null vector still carries a valid
-    label; metadata-only consumers (``scalar_array``) keep the raw
-    table too."""
+    The NULL-element clause stays lambda-free via sort_array: ascending
+    sort places NULL elements FIRST, so a null first element ⇔ some
+    element is null (F.get is the non-ANSI element access — returns
+    NULL, never INVALID_ARRAY_INDEX, on the empty arrays the size
+    clause already drops). ``_VEC_OK`` is the SQL mirror, and spells
+    that clause directly with list_filter; every vector-consuming
+    oracle composes it so both engines see the same rows. Label-only
+    consumers (``gini_label_balance``) intentionally do NOT use this
+    loader — a null vector still carries a valid label; metadata-only
+    consumers (``scalar_array``) keep the raw table too."""
     return table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
         & (F.size("embedding") > 0)
@@ -88,8 +86,7 @@ def _dd_planes_cte() -> str:
 
 
 #: the failed-encode gate as oracle SQL — the WHERE mirror of
-#: ``vec_table`` (see its docstring); the older oracles inline the
-#: same text verbatim, new ones compose this constant.
+#: ``vec_table`` (see its docstring); every vector oracle composes it.
 _VEC_OK = (
     "embedding IS NOT NULL AND len(embedding) > 0 AND NOT "
     "(isnan(CAST(list_max(embedding) AS DOUBLE)) OR "
@@ -126,7 +123,7 @@ def _topk(scored: DataFrame, k: int = _K) -> DataFrame:
 @query(
     "cosine_knn_exact",
     oracle=f"""
-    WITH q AS (SELECT vec_id AS q_id, embedding AS qe FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) > 0 AND NOT (isnan(CAST(list_max(embedding) AS DOUBLE)) OR CAST(list_max(embedding) AS DOUBLE) = 'inf'::DOUBLE OR CAST(list_min(embedding) AS DOUBLE) = '-inf'::DOUBLE) AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND vec_id < {_N_QUERIES}),
+    WITH q AS (SELECT vec_id AS q_id, embedding AS qe FROM embeddings WHERE {_VEC_OK} AND vec_id < {_N_QUERIES}),
     scored AS (
       SELECT q.q_id, c.vec_id AS n_id,
              round({V.dd_cosine('q.qe', 'c.embedding')}, 5) AS cos,
@@ -134,17 +131,17 @@ def _topk(scored: DataFrame, k: int = _K) -> DataFrame:
                PARTITION BY q.q_id
                ORDER BY {V.dd_cosine('q.qe', 'c.embedding')} DESC, c.vec_id
              ) AS rn
-      FROM q JOIN (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) > 0 AND NOT (isnan(CAST(list_max(embedding) AS DOUBLE)) OR CAST(list_max(embedding) AS DOUBLE) = 'inf'::DOUBLE OR CAST(list_min(embedding) AS DOUBLE) = '-inf'::DOUBLE) AND len(list_filter(embedding, x -> x IS NULL)) = 0) c
+      FROM q JOIN (SELECT * FROM embeddings WHERE {_VEC_OK}) c
         ON c.vec_id <> q.q_id
     )
     SELECT q_id, n_id, cos FROM scored WHERE rn <= {_K} ORDER BY q_id, n_id
     """,
 )
 def cosine_knn_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k, restructured round-2 from a per-pair
-    interpreted HOF fold to a broadcast-matmul kernel: the (tiny,
-    bounded-by-construction) query set collects into one (|q| × d)
-    numpy matrix shipped to executors; the corpus streams through a
+    """Brute-force cosine top-k as one matmul kernel, not a per-pair
+    interpreted HOF fold: the (tiny, bounded-by-construction) query
+    set collects into one (|q| × d) numpy matrix that the kernel closes
+    over; the corpus streams through a
     narrow ``mapInPandas`` ONCE, each Arrow batch scoring against every
     query in a single BLAS matmul and emitting only its LOCAL top-k per
     query. At 100 TB that is n·|q|·d FLOPs in BLAS with no join, no
@@ -163,14 +160,12 @@ def cosine_knn_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # empty-after-null-filter guard (all-null sweep, round 4)
     if not q_rows:
         return spark.createDataFrame([], "q_id long, n_id long, cos double")
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    qm = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in q_rows])
-    qm /= np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), V._EPS)
-    bc = spark.sparkContext.broadcast((q_ids, qm))
+    ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
+    mat = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in q_rows])
+    mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), V._EPS)
     k, eps = _K, V._EPS  # locals: keep the closure package-free
 
     def score(batches):
-        ids, mat = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -206,7 +201,7 @@ _ANN_LSH_TOPK_ORACLE = f"""
              CASE WHEN {V.dd_dot('e.embedding', 'pl.pl')} >= 0
                   THEN '1' ELSE '0' END AS bit
       FROM (SELECT vec_id, embedding FROM embeddings
-            WHERE embedding IS NOT NULL AND len(embedding) > 0 AND NOT (isnan(CAST(list_max(embedding) AS DOUBLE)) OR CAST(list_max(embedding) AS DOUBLE) = 'inf'::DOUBLE OR CAST(list_min(embedding) AS DOUBLE) = '-inf'::DOUBLE) AND len(list_filter(embedding, x -> x IS NULL)) = 0) e
+            WHERE {_VEC_OK}) e
       CROSS JOIN planes pl
     ),
     bk AS (
@@ -216,7 +211,7 @@ _ANN_LSH_TOPK_ORACLE = f"""
     e AS (
       SELECT bk.vec_id, emb.embedding, bk.bucket
       FROM bk JOIN (SELECT vec_id, embedding FROM embeddings
-                    WHERE embedding IS NOT NULL AND len(embedding) > 0 AND NOT (isnan(CAST(list_max(embedding) AS DOUBLE)) OR CAST(list_max(embedding) AS DOUBLE) = 'inf'::DOUBLE OR CAST(list_min(embedding) AS DOUBLE) = '-inf'::DOUBLE) AND len(list_filter(embedding, x -> x IS NULL)) = 0) emb USING (vec_id)
+                    WHERE {_VEC_OK}) emb USING (vec_id)
     ),
     q AS (SELECT vec_id AS q_id, embedding AS qe, bucket
           FROM e WHERE vec_id < {_N_QUERIES}),
@@ -321,21 +316,47 @@ def _ivf_coarse_centroids(emb: DataFrame):
     return stride, cent_ids, cmat
 
 
+def _ivf_cells(emb: DataFrame, cent_ids, cmat, keep: list[str]) -> DataFrame:
+    """The one coarse-cell kernel of ``ann_ivf_topk`` and its foothold
+    ``ann_ivf_cell_assign``: one narrow ``mapInPandas`` that appends
+    ``cell`` = the cent_id with the largest RAW dot x·c over the
+    normalized centroids of ``_ivf_coarse_centroids``. Scaling a row of
+    ``x @ cmat.T`` by 1/‖x‖ cannot change its argmax, so the query side
+    is never normalized (and has no zero-vector NaN hazard). It ranks by
+    dot product, not distance, because that is what the oracles replay;
+    numpy's first-index argmax is their ``ORDER BY s DESC, cent_id``.
+    ``keep`` names the columns of ``emb`` passed through before it."""
+    import numpy as np
+
+    fields = {f.name: f for f in emb.schema.fields}
+    schema = StructType([fields[c] for c in keep] + [StructField("cell", LongType())])
+
+    def assign(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            x = np.stack([np.asarray(e, dtype=np.float64) for e in pdf["embedding"]])
+            best = np.argmax(x @ cmat.T, axis=1)
+            yield pdf[keep].assign(cell=cent_ids[best])
+
+    return emb.mapInPandas(assign, schema=schema)
+
+
 _ANN_IVF_TOPK_ORACLE = f"""
     WITH par AS (
       SELECT GREATEST(1, n // LEAST(4096, GREATEST(16,
                CAST(FLOOR(SQRT(n)) AS BIGINT)))) AS stride
       FROM (SELECT COUNT(*) AS n FROM embeddings
-            WHERE embedding IS NOT NULL AND len(embedding) > 0 AND NOT (isnan(CAST(list_max(embedding) AS DOUBLE)) OR CAST(list_max(embedding) AS DOUBLE) = 'inf'::DOUBLE OR CAST(list_min(embedding) AS DOUBLE) = '-inf'::DOUBLE) AND len(list_filter(embedding, x -> x IS NULL)) = 0)
+            WHERE {_VEC_OK})
     ),
     cents AS (
       SELECT vec_id AS cent_id, embedding AS ce,
              GREATEST({V.dd_norm('embedding')}, 1e-12) AS cn
       FROM embeddings, par
-      WHERE embedding IS NOT NULL AND len(embedding) > 0 AND NOT (isnan(CAST(list_max(embedding) AS DOUBLE)) OR CAST(list_max(embedding) AS DOUBLE) = 'inf'::DOUBLE OR CAST(list_min(embedding) AS DOUBLE) = '-inf'::DOUBLE) AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND vec_id % par.stride = 0
+      WHERE {_VEC_OK} AND vec_id % par.stride = 0
     ),
     e AS (SELECT vec_id, embedding FROM embeddings
-          WHERE embedding IS NOT NULL AND len(embedding) > 0 AND NOT (isnan(CAST(list_max(embedding) AS DOUBLE)) OR CAST(list_max(embedding) AS DOUBLE) = 'inf'::DOUBLE OR CAST(list_min(embedding) AS DOUBLE) = '-inf'::DOUBLE) AND len(list_filter(embedding, x -> x IS NULL)) = 0),
+          WHERE {_VEC_OK}),
     d AS (
       SELECT e.vec_id, c.cent_id,
              list_sum(list_transform(range(1, len(e.embedding) + 1),
@@ -384,38 +405,33 @@ _ANN_IVF_TOPK_ORACLE = f"""
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-flat ANN with the classic √n balance: ~√n cells (clamped to
     [16, 4096]), so assignment is n·√n BLAS FLOPs and each probe scans
-    ~√n candidates — both sublinear in compare volume per vector. (The
-    first cut used every-50th-vector centroids: cell COUNT grew linearly
-    with the corpus, making assignment quadratic — cell count must be
-    sublinear in n or IVF degenerates below brute force.)
+    ~√n candidates — both sublinear in compare volume per vector. The
+    cell count must be sublinear in n or IVF degenerates below brute
+    force: a fixed every-50th-vector sample grows the cell count
+    linearly with the corpus and makes assignment quadratic.
 
     Centroids are a deterministic stride sample over ``vec_id % stride``
     (k-means-free for reproducibility; assumes the fixture's dense
     0..n-1 vec_ids — a sparse id space would need a row_number-based
     sample instead, noted here because the cell-count math silently
     degrades otherwise). The centroid matrix is ≤4096×d floats — bounded
-    by construction, so collecting it into a broadcast variable is O(1)
-    in corpus size. Assignment runs as a narrow ``mapInPandas`` (one
-    numpy argmax per Arrow batch) on RAW dot products — centroids are
-    pre-normalized, and scaling every row of ``x @ mat.T`` by 1/‖x‖
-    cannot change that row's argmax, so query-side normalization (and
-    its zero-vector NaN hazard, round-1 ADVICE) is simply dropped. The
-    only corpus-sized shuffle left is the per-cell candidate join,
-    volume |probes|·√n; candidate scoring is the ``score_pairs`` einsum
-    kernel. Centroid math is shared with ``ann_ivf_cell_assign`` via
-    ``_ivf_coarse_centroids`` (ADVICE r7).
+    by construction, so collecting it and closing the kernel over it is
+    O(1) in corpus size. Assignment is ``_ivf_cells``, the raw-dot argmax
+    kernel one narrow ``mapInPandas`` runs per Arrow batch. The only
+    corpus-sized shuffle left is the per-cell candidate join, volume
+    |probes|·√n; candidate scoring is the ``score_pairs`` einsum kernel.
+    Centroids and cells come from the same two helpers as
+    ``ann_ivf_cell_assign``, so that foothold pins this query's actual
+    cell assignment.
 
-    ORACLE-BACKED since round 8 (was rows-only r1-r7): the round-7
-    ``ann_ivf_cell_assign`` foothold proved the coarse-cell argmax
-    replays exactly in DuckDB; the full oracle extends that CTE with
-    the probe ranking (top-2 cells per query by cosine DESC, cent_id —
-    the same window the plan runs), the cell-candidate join, and the
-    ``cosine_knn_exact`` top-k discipline (``dd_cosine``'s zero-norm
-    floor included — see ``ann_lsh_topk``). Knife-edge caveats as in
-    the foothold: an argmax/rank flip needs engine sums within ~1e-13,
-    off every fixture vector."""
-    import numpy as np
-
+    Oracle-backed: the ``ann_ivf_cell_assign`` foothold proves the
+    coarse-cell argmax replays exactly in DuckDB; the full oracle
+    extends that CTE with the probe ranking (top-2 cells per query by
+    cosine DESC, cent_id — the same window the plan runs), the
+    cell-candidate join, and the ``cosine_knn_exact`` top-k discipline
+    (``dd_cosine``'s zero-norm floor included — see ``ann_lsh_topk``).
+    Knife-edge caveats as in the foothold: an argmax/rank flip needs
+    engine sums within ~1e-13, off every fixture vector."""
     emb = vec_table(spark, sf_dir)
     stride, cent_ids, cmat = _ivf_coarse_centroids(emb)
     # empty-after-null-filter guard (all-null sweep, round 4)
@@ -424,20 +440,8 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = emb.filter(F.col("vec_id") % stride == 0).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce")
     )
-    bc = spark.sparkContext.broadcast((cent_ids, cmat))
-
-    def assign(batches):
-        ids, mat = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = np.stack([np.asarray(e, dtype=np.float64) for e in pdf["embedding"]])
-            best = np.argmax(x @ mat.T, axis=1)  # row scale ⊥ argmax; no /‖x‖
-            pdf = pdf.assign(cell=ids[best])
-            yield pdf[["vec_id", "embedding", "cell"]]
-
-    assigned = emb.select("vec_id", "embedding").mapInPandas(
-        assign, schema="vec_id long, embedding array<double>, cell long"
+    assigned = _ivf_cells(
+        emb.select("vec_id", "embedding"), cent_ids, cmat, ["vec_id", "embedding"]
     )
     # queries probe their 2 best cells (tiny: |q| × k_cells rows)
     q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
@@ -463,7 +467,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _topk(V.score_pairs(cand, "ce", "qe"))
 
 
-_ANN_LSH_BANDS_ORACLE = """
+_ANN_LSH_BANDS_ORACLE = f"""
     WITH planes AS (__PLANES__),
     b AS (
       SELECT e.vec_id, pl.p,
@@ -471,7 +475,7 @@ _ANN_LSH_BANDS_ORACLE = """
                     i -> CAST(e.embedding[i] AS DOUBLE) * pl.pl[i])) >= 0
                   THEN '1' ELSE '0' END AS bit
       FROM (SELECT vec_id, embedding FROM embeddings
-            WHERE embedding IS NOT NULL AND len(embedding) > 0 AND NOT (isnan(CAST(list_max(embedding) AS DOUBLE)) OR CAST(list_max(embedding) AS DOUBLE) = 'inf'::DOUBLE OR CAST(list_min(embedding) AS DOUBLE) = '-inf'::DOUBLE) AND len(list_filter(embedding, x -> x IS NULL)) = 0) e
+            WHERE {_VEC_OK}) e
       CROSS JOIN planes pl
     )
     SELECT vec_id, string_agg(bit, '' ORDER BY p) AS bucket
@@ -505,19 +509,19 @@ def ann_lsh_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_ivf_cell_assign",
-    oracle="""
+    oracle=f"""
     WITH par AS (
       SELECT GREATEST(1, n // LEAST(4096, GREATEST(16,
                CAST(FLOOR(SQRT(n)) AS BIGINT)))) AS stride
       FROM (SELECT COUNT(*) AS n FROM embeddings
-            WHERE embedding IS NOT NULL AND len(embedding) > 0 AND NOT (isnan(CAST(list_max(embedding) AS DOUBLE)) OR CAST(list_max(embedding) AS DOUBLE) = 'inf'::DOUBLE OR CAST(list_min(embedding) AS DOUBLE) = '-inf'::DOUBLE) AND len(list_filter(embedding, x -> x IS NULL)) = 0)
+            WHERE {_VEC_OK})
     ),
     cents AS (
       SELECT vec_id AS cent_id, embedding AS ce,
              GREATEST(sqrt(list_sum(list_transform(embedding,
                v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))), 1e-12) AS cn
       FROM embeddings, par
-      WHERE embedding IS NOT NULL AND len(embedding) > 0 AND NOT (isnan(CAST(list_max(embedding) AS DOUBLE)) OR CAST(list_max(embedding) AS DOUBLE) = 'inf'::DOUBLE OR CAST(list_min(embedding) AS DOUBLE) = '-inf'::DOUBLE) AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND vec_id % par.stride = 0
+      WHERE {_VEC_OK} AND vec_id % par.stride = 0
     ),
     d AS (
       SELECT e.vec_id, c.cent_id,
@@ -525,7 +529,7 @@ def ann_lsh_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
                i -> CAST(e.embedding[i] AS DOUBLE)
                   * (CAST(c.ce[i] AS DOUBLE) / c.cn))) AS s
       FROM (SELECT vec_id, embedding FROM embeddings
-            WHERE embedding IS NOT NULL AND len(embedding) > 0 AND NOT (isnan(CAST(list_max(embedding) AS DOUBLE)) OR CAST(list_max(embedding) AS DOUBLE) = 'inf'::DOUBLE OR CAST(list_min(embedding) AS DOUBLE) = '-inf'::DOUBLE) AND len(list_filter(embedding, x -> x IS NULL)) = 0) e
+            WHERE {_VEC_OK}) e
       CROSS JOIN cents c
     ),
     r AS (
@@ -538,8 +542,8 @@ def ann_lsh_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_ivf_cell_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-backed foothold for ``ann_ivf_topk`` (VERDICT r6 "Next
-    round" #4, the ``kmeans_assign`` pattern): the coarse-cell
+    """Oracle-backed foothold for ``ann_ivf_topk`` (the
+    ``kmeans_assign`` pattern): the coarse-cell
     assignment — argmax of dot(x, c/‖c‖) over the √n stride-sampled
     centroids — is plain argmax-over-k, which DuckDB expresses as a
     cross join + window rank; only the probe-and-rank half of the
@@ -552,33 +556,18 @@ def ann_ivf_cell_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent_id so numpy's first-index argmax tie-break equals the
     oracle's ``ORDER BY s DESC, cent_id``.
 
-    Scale shape is the parent's: bounded ≤4096×d centroid collect +
-    broadcast, corpus streams through ONE narrow mapInPandas (a
-    (batch × cells) BLAS matmul each), no corpus shuffle — the
-    orderBy is presentation-only. Centroid math is shared with the
-    parent via ``_ivf_coarse_centroids`` (ADVICE r7: one formula, so
-    this foothold pins the parent's ACTUAL cell assignment)."""
-    import numpy as np
-
+    Scale shape is the parent's: bounded ≤4096×d centroid collect,
+    corpus streams through ONE narrow mapInPandas (a (batch × cells)
+    BLAS matmul each), no corpus shuffle — the orderBy is
+    presentation-only. Centroids come from ``_ivf_coarse_centroids``
+    and cells from ``_ivf_cells``, the parent's own two helpers, so
+    this foothold pins the parent's actual cell assignment."""
     emb = vec_table(spark, sf_dir).select("vec_id", "embedding")
     _, cent_ids, cmat = _ivf_coarse_centroids(emb)
     # empty-after-null-filter guard (all-null sweep, round 4)
     if cent_ids is None:
         return spark.createDataFrame([], "vec_id long, cell long")
-    bc = spark.sparkContext.broadcast((cent_ids, cmat))
-
-    def assign(batches):
-        ids, mat = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = np.stack([np.asarray(e, dtype=np.float64) for e in pdf["embedding"]])
-            best = np.argmax(x @ mat.T, axis=1)  # first-index tie = lowest cent_id
-            yield pdf[["vec_id"]].assign(cell=ids[best])
-
-    return (
-        emb.mapInPandas(assign, schema="vec_id long, cell long")
-    )
+    return _ivf_cells(emb, cent_ids, cmat, ["vec_id"])
 
 
 @query(
@@ -618,12 +607,12 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_stats",
-    oracle="""
+    oracle=f"""
     SELECT label, COUNT(*) AS n,
            round(AVG(sqrt(list_sum(list_transform(embedding, x -> x * x)))), 4)
              AS avg_norm
     FROM embeddings
-    WHERE embedding IS NOT NULL AND len(embedding) > 0 AND NOT (isnan(CAST(list_max(embedding) AS DOUBLE)) OR CAST(list_max(embedding) AS DOUBLE) = 'inf'::DOUBLE OR CAST(list_min(embedding) AS DOUBLE) = '-inf'::DOUBLE) AND len(list_filter(embedding, x -> x IS NULL)) = 0
+    WHERE {_VEC_OK}
     GROUP BY label ORDER BY label
     """,
 )
@@ -671,15 +660,12 @@ _KM_K = 8
       SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cluster,
              embedding AS ce
       FROM (SELECT vec_id, embedding FROM embeddings
-            WHERE embedding IS NOT NULL AND len(embedding) > 0 AND NOT (isnan(CAST(list_max(embedding) AS DOUBLE)) OR CAST(list_max(embedding) AS DOUBLE) = 'inf'::DOUBLE OR CAST(list_min(embedding) AS DOUBLE) = '-inf'::DOUBLE) AND len(list_filter(embedding, x -> x IS NULL)) = 0 ORDER BY vec_id LIMIT {_KM_K}) s
+            WHERE {_VEC_OK} ORDER BY vec_id LIMIT {_KM_K}) s
     ),
     d AS (
       SELECT e.vec_id, c.cluster,
-             list_sum(list_transform(range(1, len(e.embedding) + 1),
-               i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                  * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-             )) AS d2
-      FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) > 0 AND NOT (isnan(CAST(list_max(embedding) AS DOUBLE)) OR CAST(list_max(embedding) AS DOUBLE) = 'inf'::DOUBLE OR CAST(list_min(embedding) AS DOUBLE) = '-inf'::DOUBLE) AND len(list_filter(embedding, x -> x IS NULL)) = 0) e
+             {V.dd_sqdist('e.embedding', 'c.ce')} AS d2
+      FROM (SELECT * FROM embeddings WHERE {_VEC_OK}) e
       CROSS JOIN cents c
     ),
     r AS (
@@ -692,45 +678,58 @@ _KM_K = 8
 )
 def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE Lloyd assignment round against fixed initial centroids (the
-    k=8 lowest vec_ids) — the oracle-backed companion that gives
-    the iterative ``kmeans_lloyd`` loop a SQL-checkable foothold
-    (VERDICT r2 item #5): a single round is plain argmin-over-k-
+    k=8 lowest vec_ids) — the oracle-backed foothold of the iterative
+    ``kmeans_lloyd`` loop: a single round is plain argmin-over-k
     distances, which DuckDB expresses as a cross join + window rank.
 
-    Scale shape is identical to one ``lloyd_rounds`` iteration: the k×d
-    centroid matrix is a bounded collect + broadcast; the corpus streams
-    through ONE narrow mapInPandas scan, each Arrow batch computing its
-    (batch × k) distance matrix in numpy and emitting only (vec_id,
-    cluster) — no corpus shuffle at all (the final orderBy is
-    presentation-only). The kernel sums explicit squared differences
-    (matching the oracle's Σ(xᵢ−cᵢ)² term-for-term rather than the
-    ‖x‖²−2x·c+‖c‖² rearrangement) so argmin can only diverge on exact
-    float ties, which the shared cluster-index tie-break resolves
-    identically in both engines."""
-    import numpy as np
-
+    It is ``lloyd_rounds``' first assignment: the ``V.lowest_id_matrix``
+    init and the ``V.nearest_centroid`` kernel, whose left-fold
+    Σ(x−c)² equals the oracle's ``dd_sqdist`` bit for bit and whose
+    lowest-index tie-break is the oracle's ``ORDER BY d2, cluster``.
+    The corpus streams through ONE narrow mapInPandas scan that emits
+    only (vec_id, cluster) — no corpus shuffle at all."""
     emb = vec_table(spark, sf_dir).select("vec_id", "embedding")
-    init = emb.orderBy("vec_id").limit(_KM_K).select("embedding").collect()
+    cmat = V.lowest_id_matrix(emb, _KM_K)
     # empty-after-null-filter guard (all-null sweep, round 4)
-    if not init:
+    if cmat is None:
         return spark.createDataFrame([], "vec_id long, cluster long")
-    cmat = np.stack([np.asarray(r[0], dtype=np.float64) for r in init])
-    bc = spark.sparkContext.broadcast(cmat)
+    return V.nearest_centroid(emb, cmat, ["vec_id", "cluster"])
 
-    def assign(batches):
-        mat = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = np.stack([np.asarray(e, dtype=np.float64) for e in pdf["embedding"]])
-            # (batch, k, d) diffs — explicit Σ(x−c)², term-parity with the oracle
-            d2 = ((x[:, None, :] - mat[None, :, :]) ** 2).sum(axis=2)
-            best = np.argmin(d2, axis=1)  # first-index tie-break = lowest cluster
-            yield pdf[["vec_id"]].assign(cluster=best.astype("int64"))
 
-    return (
-        emb.mapInPandas(assign, schema="vec_id long, cluster long")
+def _lloyd_step(emb: DataFrame, cmat):
+    """One Lloyd round as one map and one reduce: tag every vector with
+    its nearest centroid (``V.nearest_centroid``), then move each
+    centroid to its cluster's mean. Returns (assigned, new centroids,
+    inertia).
+
+    The mean is exact-decimal — Σ DECIMAL(18,6) over the count of the
+    cast column — so it is order-free and both engines derive
+    bit-identical centroids (``kmeans_two_rounds``' oracle replays it).
+    A cluster with no in-domain member keeps its old centroid, the
+    oracle's COALESCE; duplicate init vectors make this happen, because
+    they tie to the lower cluster id and leave the higher one empty.
+    The inertia Σ dist2 rides the same (cluster, dim) aggregate and is
+    counted once per cluster, at dim 0. The collect is bounded: k×d
+    rows."""
+    assigned = V.nearest_centroid(emb, cmat, ["vec_id", "embedding", "cluster", "dist2"])
+    dec = F.col("x").cast("double").try_cast("decimal(18,6)")
+    upd = (
+        assigned.select("cluster", "dist2", F.posexplode("embedding").alias("i", "x"))
+        .groupBy("cluster", "i")
+        .agg(
+            (F.sum(dec).cast("double") / F.count(dec)).alias("cx"),
+            F.sum("dist2").alias("_in"),
+        )
+        .collect()
     )
+    new = cmat.copy()
+    inertia = 0.0
+    for r in upd:
+        if r["cx"] is not None:
+            new[r["cluster"], r["i"]] = r["cx"]
+        if r["i"] == 0:
+            inertia += r["_in"]
+    return assigned, new, inertia
 
 
 def lloyd_rounds(
@@ -744,75 +743,31 @@ def lloyd_rounds(
     per-round inertia history). Iterative-on-Spark shape rules, same as
     dedup_clusters' label propagation:
 
+    * each round is ``_lloyd_step``: one narrow mapInPandas scan + one
+      partial-agg'd groupBy — no corpus-sized join, no lineage growth
+      (each round replans from the parquet scan, its kernel closed over
+      that round's centroids);
     * per-round state that crosses rounds is BOUNDED: the k×d centroid
-      matrix (collected + broadcast — the sanctioned O(1) collect, like
-      ann_ivf_topk's centroid matrix);
-    * the corpus-sized work per round is one narrow mapInPandas scan
-      (numpy distance argmin per Arrow batch) + one partial-agg'd
-      groupBy — no corpus-sized join, no lineage growth (each round
-      replans from the parquet scan with a fresh broadcast);
-    * deterministic: init = the k lowest vec_ids, numpy argmin breaks
-      ties by first index, convergence on centroid shift < tol.
+      matrix (the sanctioned O(1) collect, like ann_ivf_topk's);
+    * deterministic: init = the k lowest vec_ids, ties go to the lowest
+      cluster, convergence on centroid shift < tol.
 
     At 100 TB the per-round cost is a scan + a |k·d|-partial shuffle —
     the same shape GraphX/MLlib's own k-means uses; rounds are O(10).
     """
     import numpy as np
 
-    head = emb.select("embedding").first()
+    emb = emb.select("vec_id", "embedding")
+    cmat = V.lowest_id_matrix(emb, k)
     # empty-after-null-filter guard (all-null sweep, round 4)
-    if head is None:
+    if cmat is None:
         empty = spark.createDataFrame(
             [], "vec_id long, embedding array<double>, cluster long, dist2 double"
         )
         return empty, []
-    d = len(head[0])
-    init = emb.orderBy("vec_id").limit(k).select("embedding").collect()
-    cmat = np.stack([np.asarray(r[0], dtype=np.float64) for r in init])
     history: list[float] = []
-
-    assigned = None
     for _ in range(max_rounds):
-        bc = spark.sparkContext.broadcast(cmat)
-
-        def assign(batches):
-            mat = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                x = np.stack(
-                    [np.asarray(e, dtype=np.float64) for e in pdf["embedding"]]
-                )
-                # ‖x−c‖² = ‖x‖² − 2x·c + ‖c‖²; ‖x‖² is row-constant
-                d2 = -2.0 * (x @ mat.T) + (mat * mat).sum(axis=1)
-                best = np.argmin(d2, axis=1)
-                dist2 = (
-                    (x * x).sum(axis=1)
-                    + d2[np.arange(len(best)), best]
-                )
-                yield pdf.assign(cluster=best.astype("int64"),
-                                 dist2=np.maximum(dist2, 0.0))
-
-        assigned = emb.select("vec_id", "embedding").mapInPandas(
-            assign,
-            schema="vec_id long, embedding array<double>, cluster long, dist2 double",
-        )
-        # bounded collect: k×d averages + k inertia partials
-        upd = (
-            assigned.select(
-                "cluster", "dist2", F.posexplode("embedding").alias("i", "x")
-            )
-            .groupBy("cluster", "i")
-            .agg(F.avg("x").alias("cx"), F.sum("dist2").alias("_in"))
-            .collect()
-        )
-        new = cmat.copy()
-        inertia = 0.0
-        for r in upd:
-            new[r["cluster"], r["i"]] = r["cx"]
-            if r["i"] == 0:
-                # dist2 rides every (cluster, i) group; count it once via i==0
-                inertia += r["_in"]
+        assigned, new, inertia = _lloyd_step(emb, cmat)
         history.append(inertia)
         shift = float(np.abs(new - cmat).max())
         cmat = new
@@ -828,12 +783,13 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster-balanced sampling / diversity analysis over corpus
     embeddings; the oracle-exempt status is the same as dedup_clusters'
     would be without its recursive-CTE twin — DuckDB has no iterative
-    re-assignment. The loop's ARITHMETIC is fully oracle-proven by its
-    footholds: ``kmeans_assign`` (one round, r8) and
-    ``kmeans_two_rounds`` (assignment + exact-decimal centroid update +
-    re-assignment, round 10), leaving only convergence control
-    unreplayed. tests/test_similarity.py pins monotone inertia and
-    cluster-count invariants instead."""
+    re-assignment. Every round is ``_lloyd_step``, and its footholds
+    replay that arithmetic: ``kmeans_assign`` is the loop's first
+    assignment and ``kmeans_two_rounds`` its first two (assignment,
+    exact-decimal centroid update, re-assignment), which leaves only
+    convergence control unreplayed. tests/test_similarity.py pins
+    monotone inertia, cluster-count invariants, and that
+    ``kmeans_two_rounds`` equals the loop's second assignment."""
     emb = vec_table(spark, sf_dir)
     assigned, _ = lloyd_rounds(spark, emb)
     return (
@@ -848,9 +804,9 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "kmeans_two_rounds",
-    # two fully-replayed Lloyd rounds: assign-1 (the proven
-    # kmeans_assign CTE shape) -> exact-decimal centroid means
-    # (COALESCE keeps an empty cluster's old centroid) -> assign-2
+    # two fully-replayed Lloyd rounds: assign-1 (the kmeans_assign CTE
+    # shape) -> exact-decimal centroid means (COALESCE keeps an empty
+    # cluster's old centroid) -> assign-2
     oracle=f"""
     WITH corpus AS (
       SELECT vec_id, embedding FROM embeddings WHERE {{vec_ok}}
@@ -861,11 +817,7 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM (SELECT vec_id, embedding FROM corpus ORDER BY vec_id LIMIT {{k}}) s
     ),
     d1 AS (
-      SELECT e.vec_id, c.cluster,
-             list_sum(list_transform(range(1, len(e.embedding) + 1),
-               i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                  * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-             )) AS d2
+      SELECT e.vec_id, c.cluster, {{sqdist}} AS d2
       FROM corpus e CROSS JOIN c1 c
     ),
     a1 AS (
@@ -893,11 +845,7 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
       GROUP BY c.cluster
     ),
     d2t AS (
-      SELECT e.vec_id, c.cluster,
-             list_sum(list_transform(range(1, len(e.embedding) + 1),
-               i -> (CAST(e.embedding[i] AS DOUBLE) - c.ce[i])
-                  * (CAST(e.embedding[i] AS DOUBLE) - c.ce[i])
-             )) AS d2
+      SELECT e.vec_id, c.cluster, {{sqdist}} AS d2
       FROM corpus e CROSS JOIN c2 c
     )
     SELECT vec_id, cluster FROM (
@@ -909,75 +857,37 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         vec_ok=_VEC_OK,
         k=_KM_K,
         dim=_DIM,
+        sqdist=V.dd_sqdist("e.embedding", "c.ce"),
         dec_xi=_dd_dec("CAST(e.embedding[i.range + 1] AS DOUBLE)"),
     ),
 )
 def kmeans_two_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TWO fully-replayed Lloyd rounds — the oracle-backed bridge
-    between ``kmeans_assign`` (one round, proven r8) and the iterative
-    ``kmeans_lloyd`` (rows-only; VERDICT r9 #5): assignment, the
-    centroid UPDATE step, and re-assignment are all driver-hash-checked,
-    so the only unproven part of the Lloyd loop is its convergence
-    control, not its arithmetic.
+    between ``kmeans_assign`` (one round) and the iterative
+    ``kmeans_lloyd`` (rows-only). It is exactly ``lloyd_rounds``' first
+    two assignments: one ``_lloyd_step`` (assignment + centroid UPDATE),
+    then one more ``V.nearest_centroid`` pass. So assignment, update and
+    re-assignment are all oracle-checked, and the only unreplayed
+    part of the Lloyd loop is its convergence control.
 
-    Replay discipline: assignments reuse ``kmeans_assign``'s proven
-    explicit-Σ(x−c)² + shared (d2, cluster) tie-break; the round-2
-    centroids are EXACT-DECIMAL means (Σ decimal / count of the cast
-    column — order-free, so both engines derive bit-identical
-    centroids; the denominator counts the cast column per the ADVICE
-    r9 rule), and an empty or all-out-of-domain cluster keeps its old
-    centroid via COALESCE, mirroring ``lloyd_rounds``' cmat.copy()
-    convention (possible here: duplicate init vectors tie-break to the
-    lower cluster id, leaving the higher empty).
+    Replay discipline: both assignments use the kernel's left-fold
+    Σ(x−c)², which is the oracle's ``dd_sqdist`` bit for bit, and the
+    shared (d2, cluster) tie-break; the round-2 centroids are
+    ``_lloyd_step``'s exact-decimal means. Its denominator counts the
+    cast column, so an element outside DECIMAL(18,6) drops out of both
+    sides, and an empty cluster keeps its old centroid via the
+    oracle's COALESCE.
 
     Scale shape: identical to two ``lloyd_rounds`` iterations — two
-    narrow mapInPandas assignment scans (broadcast k×d centroids, no
+    narrow mapInPandas assignment scans (k×d centroids closed over, no
     corpus shuffle) + one k·d-key partial-agg'd update shuffle +
     bounded k×d collects."""
-    import numpy as np
-
     emb = vec_table(spark, sf_dir).select("vec_id", "embedding")
-    init = emb.orderBy("vec_id").limit(_KM_K).select("embedding").collect()
-    if not init:  # empty-after-null-filter guard (round-4 sweep)
+    cmat = V.lowest_id_matrix(emb, _KM_K)
+    if cmat is None:  # empty-after-null-filter guard
         return spark.createDataFrame([], "vec_id long, cluster long")
-    cmat = np.stack([np.asarray(r[0], dtype=np.float64) for r in init])
-
-    def assign_scan(centroids: "np.ndarray") -> DataFrame:
-        bc = spark.sparkContext.broadcast(centroids)
-
-        def assign(batches):
-            mat = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                x = np.stack(
-                    [np.asarray(e, dtype=np.float64) for e in pdf["embedding"]]
-                )
-                # explicit Σ(x−c)², term-parity with the oracle
-                d2 = ((x[:, None, :] - mat[None, :, :]) ** 2).sum(axis=2)
-                best = np.argmin(d2, axis=1)  # first index = lowest cluster
-                yield pdf.assign(cluster=best.astype("int64"))
-
-        return emb.mapInPandas(
-            assign, schema="vec_id long, embedding array<double>, cluster long"
-        )
-
-    a1 = assign_scan(cmat)
-    dec = F.col("x").cast("double").try_cast("decimal(18,6)")
-    upd = (
-        a1.select("cluster", F.posexplode("embedding").alias("i", "x"))
-        .groupBy("cluster", "i")
-        .agg((F.sum(dec).cast("double") / F.count(dec)).alias("cx"))
-        .collect()
-    )  # bounded: k×d rows
-    c2 = cmat.copy()  # empty clusters keep their old centroid
-    for r in upd:
-        if r["cx"] is not None:
-            c2[r["cluster"], r["i"]] = r["cx"]
-    return (
-        assign_scan(c2)
-        .select("vec_id", "cluster")
-    )
+    _, c2, _ = _lloyd_step(emb, cmat)
+    return V.nearest_centroid(emb, c2, ["vec_id", "cluster"])
 
 
 _PQ_M = 8               # subspaces
@@ -991,17 +901,12 @@ _PQ_SUBDIM = _DIM // _PQ_M
     WITH cb AS (
       SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code, embedding AS ce
       FROM (SELECT vec_id, embedding FROM embeddings
-            WHERE embedding IS NOT NULL AND len(embedding) > 0 AND NOT (isnan(CAST(list_max(embedding) AS DOUBLE)) OR CAST(list_max(embedding) AS DOUBLE) = 'inf'::DOUBLE OR CAST(list_min(embedding) AS DOUBLE) = '-inf'::DOUBLE) AND len(list_filter(embedding, x -> x IS NULL)) = 0 ORDER BY vec_id LIMIT {_PQ_K}) s
+            WHERE {_VEC_OK} ORDER BY vec_id LIMIT {_PQ_K}) s
     ),
     d AS (
       SELECT e.vec_id, m.m, cb.code,
-             list_sum(list_transform(range(1, {_PQ_SUBDIM} + 1),
-               i -> (CAST(e.embedding[{_PQ_SUBDIM} * m.m + i] AS DOUBLE)
-                     - CAST(cb.ce[{_PQ_SUBDIM} * m.m + i] AS DOUBLE))
-                  * (CAST(e.embedding[{_PQ_SUBDIM} * m.m + i] AS DOUBLE)
-                     - CAST(cb.ce[{_PQ_SUBDIM} * m.m + i] AS DOUBLE))
-             )) AS d2
-      FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) > 0 AND NOT (isnan(CAST(list_max(embedding) AS DOUBLE)) OR CAST(list_max(embedding) AS DOUBLE) = 'inf'::DOUBLE OR CAST(list_min(embedding) AS DOUBLE) = '-inf'::DOUBLE) AND len(list_filter(embedding, x -> x IS NULL)) = 0) e
+             {V.dd_sqdist('e.embedding', 'cb.ce', _PQ_SUBDIM, 'm.m')} AS d2
+      FROM (SELECT * FROM embeddings WHERE {_VEC_OK}) e
       CROSS JOIN (SELECT UNNEST(range(0, {_PQ_M})) AS m) m
       CROSS JOIN cb
     ),
@@ -1031,40 +936,23 @@ def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``slice(embedding)`` columns — and swaps in without changing this
     plan.
 
-    Scale shape (same as ``kmeans_assign``): the k x d codebook is a
-    bounded collect + broadcast; the corpus streams through ONE narrow
-    mapInPandas scan whose Arrow batches compute per-subspace
-    (batch x k) distance matrices in numpy and emit only (vec_id,
-    8 codes) — no corpus shuffle (the orderBy is presentation-
-    only). Explicit sum-of-squared-diffs keeps term-parity with the
-    oracle; argmin ties break to the lowest code on both engines."""
-    import numpy as np
-
+    Encoding is ``V.nearest_centroid`` with 8 blocks — the
+    ``kmeans_assign`` kernel per subspace, whose left-fold distances
+    equal the oracle's ``dd_sqdist`` and whose argmin ties break to
+    the lowest code. Scale shape: a bounded codebook collect, then ONE
+    narrow mapInPandas scan emitting only (vec_id, 8 codes) — no
+    corpus shuffle."""
     emb = vec_table(spark, sf_dir).select("vec_id", "embedding")
-    init = emb.orderBy("vec_id").limit(_PQ_K).select("embedding").collect()
+    cmat = V.lowest_id_matrix(emb, _PQ_K)
     # empty-after-null-filter guard (all-null sweep, round 4)
-    if not init:
+    if cmat is None:
         return spark.createDataFrame(
             [], "vec_id long, " + ", ".join(f"code_{m} long" for m in range(_PQ_M))
         )
-    cmat = np.stack([np.asarray(r[0], dtype=np.float64) for r in init])
-    bc = spark.sparkContext.broadcast(cmat)
-
-    def encode(batches):
-        mat = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = np.stack([np.asarray(e, dtype=np.float64) for e in pdf["embedding"]])
-            codes = {}
-            for m in range(_PQ_M):
-                sl = slice(m * _PQ_SUBDIM, (m + 1) * _PQ_SUBDIM)
-                d2 = ((x[:, None, sl] - mat[None, :, sl]) ** 2).sum(axis=2)
-                codes[f"code_{m}"] = np.argmin(d2, axis=1).astype("int64")
-            yield pdf[["vec_id"]].assign(**codes)
-
-    schema = "vec_id long, " + ", ".join(f"code_{m} long" for m in range(_PQ_M))
-    return emb.mapInPandas(encode, schema=schema)
+    codes = [f"cluster_{m}" for m in range(_PQ_M)]
+    return V.nearest_centroid(emb, cmat, ["vec_id", *codes], blocks=_PQ_M).select(
+        "vec_id", *[F.col(c).alias(f"code_{m}") for m, c in enumerate(codes)]
+    )
 
 
 @query("pca_project")  # rows-only: eigendecomposition is not SQL-expressible
@@ -1085,15 +973,16 @@ def pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
       — bounded by construction, the sanctioned collect of the
       kmeans/ivf family — where the d×d eigendecomposition costs
       microseconds (numpy ``eigh`` on a symmetric 64×64).
-    * **Pass 2** broadcasts the 2×d component matrix and projects in a
-      second narrow scan. Two corpus scans, zero shuffles.
+    * **Pass 2** closes the projection kernel over the 2×d component
+      matrix and projects in a second narrow scan. Two corpus scans,
+      zero shuffles.
 
     Determinism: eigenvectors are sign-free, so each component is
     canonicalized (its largest-|coefficient| entry made positive,
     lowest index on ties) and projections round to 6 dp. No SQL oracle
     — numpy's ITERATIVE ``eigh`` for d>2 isn't expressible in DuckDB
     SQL — so this is a declared rows-only query, but the rows-only
-    surface is now minimal: ``pca_project_2d`` (round 10) replays the
+    surface is minimal: ``pca_project_2d`` replays the
     ENTIRE pipeline — decimal moments, closed-form eigendecomposition,
     sign canonicalization, projection scan — under a full DuckDB
     oracle at d=2, and ``embedding_covariance`` proves the d>2 moment
@@ -1136,16 +1025,14 @@ def pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
         j = int(np.argmax(np.abs(comp[i])))
         if comp[i, j] < 0:
             comp[i] = -comp[i]
-    bc = spark.sparkContext.broadcast((mean, comp))
 
     def project(batches):
         import numpy as np
         import pandas as pd
 
-        mu, c = bc.value
         for pdf in batches:
-            m = np.stack(pdf["embedding"].map(np.asarray)) - mu
-            p = m @ c.T
+            m = np.stack(pdf["embedding"].map(np.asarray)) - mean
+            p = m @ comp.T
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"],
@@ -1232,9 +1119,9 @@ def pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pca_project_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PCA projection with a FULLY ORACLE-CHECKED eigendecomposition —
-    the end-to-end foothold for ``pca_project`` (VERDICT r9 #4): same
+    the end-to-end foothold for ``pca_project``: same
     two-pass distributed pipeline (decomposable moment aggregation →
-    driver-side spectral step → broadcast projection scan), with the
+    driver-side spectral step → projection scan), with the
     d×d ``eigh`` swapped for the CLOSED-FORM 2×2 eigendecomposition of
     the leading two embedding dimensions, which IS SQL-expressible.
 
@@ -1326,7 +1213,7 @@ _COV_DIMS = 8  # leading block of the covariance matrix (full d=64 in pca_projec
     "embedding_covariance",
     oracle=f"""
     WITH e AS (
-      SELECT embedding FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) > 0 AND NOT (isnan(CAST(list_max(embedding) AS DOUBLE)) OR CAST(list_max(embedding) AS DOUBLE) = 'inf'::DOUBLE OR CAST(list_min(embedding) AS DOUBLE) = '-inf'::DOUBLE) AND len(list_filter(embedding, x -> x IS NULL)) = 0
+      SELECT embedding FROM embeddings WHERE {_VEC_OK}
     ), n_t AS (SELECT COUNT(*) AS n FROM e),
     cells AS (
       SELECT i.range AS i, j.range AS j,
@@ -1721,12 +1608,7 @@ def embedding_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFram
     ),
     d AS (
       SELECT e.vec_id, m.m, cb.code,
-             list_sum(list_transform(range(1, {_PQ_SUBDIM} + 1),
-               i -> (CAST(e.embedding[{_PQ_SUBDIM} * m.m + i] AS DOUBLE)
-                     - CAST(cb.ce[{_PQ_SUBDIM} * m.m + i] AS DOUBLE))
-                  * (CAST(e.embedding[{_PQ_SUBDIM} * m.m + i] AS DOUBLE)
-                     - CAST(cb.ce[{_PQ_SUBDIM} * m.m + i] AS DOUBLE))
-             )) AS d2
+             {V.dd_sqdist('e.embedding', 'cb.ce', _PQ_SUBDIM, 'm.m')} AS d2
       FROM e
       CROSS JOIN (SELECT UNNEST(range(0, {_PQ_M})) AS m) m
       CROSS JOIN cb
@@ -1753,28 +1635,23 @@ def pq_reconstruction_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``pq_encode`` produces the codes; this measures what they cost).
     A subspace whose MSE is an outlier needs more codes or a rotation.
 
-    Same fixed codebook and argmin discipline as ``pq_encode`` (16
-    lowest gated vec_ids; ties to the lowest code), but here the min
-    DISTANCE VALUE is the output, not just the argmin rank, so the
+    It runs ``pq_encode``'s kernel (``V.nearest_centroid`` with 8
+    blocks over the 16 lowest vec_ids of its own gated set, ties to the
+    lowest code) but keeps each subspace's minimum DISTANCE instead of
+    its index. That distance is the kernel's sequential left fold,
+    bit-equal to the oracle's ``dd_sqdist`` ``list_sum``, so the
     arithmetic follows the drift/mahalanobis replay rules end-to-end:
-    the per-subspace d2 accumulates by an explicit SEQUENTIAL loop
-    over the 8 sub-dims in the Arrow kernel (numpy's blocked
-    ``.sum()`` associates differently in the last ulp than the
-    oracle's left-fold ``list_sum`` — the one-line trap this plan
-    dodges), giving bit-identical doubles in both engines; corpus
-    aggregation then rides order-free DECIMAL(18,6) sums (domain gate
-    |x| < 1e4 keeps every d2 ≤ 8·(2e4)² = 3.2e9 in the EXACT
-    double→DECIMAL band — d2·1e6 < 2⁵³, so both engines convert
-    identically; the earlier 1e5 gate allowed d2 up to 3.2e11, the
-    documented ulp-drift class (ADVICE r10) — mirrored as array
-    min/max range checks), divided ONCE, rounded once.
+    corpus aggregation rides order-free DECIMAL(18,6) sums, divided
+    ONCE, rounded once. The domain gate |x| < 1e4 (array min/max range
+    checks) keeps every d2 ≤ 8·(2e4)² = 3.2e9 in the EXACT
+    double→DECIMAL band (d2·1e6 < 2⁵³), so both engines convert
+    identically; a wider gate lets d2 reach the band where the two
+    engines' decimal casts drift by an ulp.
 
-    Scale shape: identical to ``pq_encode`` — bounded codebook collect
-    + broadcast, ONE narrow mapInPandas corpus scan emitting
-    (vec_id, {_PQ_M} errors), then a {_PQ_M}-key partial-agg'd
-    reduction; no corpus shuffle."""
-    import numpy as np
-
+    Scale shape: identical to ``pq_encode`` — bounded codebook
+    collect, ONE narrow mapInPandas corpus scan emitting (vec_id, 8
+    errors), then an 8-key partial-agg'd reduction; no corpus
+    shuffle."""
     emb = (
         vec_table(spark, sf_dir)
         .filter(
@@ -1784,43 +1661,19 @@ def pq_reconstruction_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("vec_id", "embedding")
     )
-    init = emb.orderBy("vec_id").limit(_PQ_K).select("embedding").collect()
-    if not init:  # empty-after-gate guard (round-4 sweep convention)
+    cmat = V.lowest_id_matrix(emb, _PQ_K)
+    if cmat is None:  # empty-after-gate guard
         return spark.createDataFrame([], "subspace long, n long, mse double")
-    cmat = np.stack([np.asarray(r[0], dtype=np.float64) for r in init])
-    bc = spark.sparkContext.broadcast(cmat)
-
-    def errors(batches):
-        mat = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = np.stack(
-                [np.asarray(e, dtype=np.float64) for e in pdf["embedding"]]
-            )
-            cols = {}
-            for m in range(_PQ_M):
-                lo = m * _PQ_SUBDIM
-                # SEQUENTIAL left-fold over sub-dims — term-parity with
-                # the oracle's list_sum (see docstring)
-                acc = np.zeros((x.shape[0], mat.shape[0]))
-                for i in range(_PQ_SUBDIM):
-                    diff = x[:, None, lo + i] - mat[None, :, lo + i]
-                    acc = acc + diff * diff
-                cols[f"e_{m}"] = acc[np.arange(x.shape[0]), np.argmin(acc, axis=1)]
-            yield pdf[["vec_id"]].assign(**cols)
-
-    schema = "vec_id long, " + ", ".join(
-        f"e_{m} double" for m in range(_PQ_M)
+    per_vec = V.nearest_centroid(
+        emb, cmat, ["vec_id"] + [f"dist2_{m}" for m in range(_PQ_M)], blocks=_PQ_M
     )
-    per_vec = emb.mapInPandas(errors, schema=schema)
     stacked = per_vec.select(
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(m).cast("long").alias("subspace"),
-                        F.col(f"e_{m}").alias("d2"),
+                        F.col(f"dist2_{m}").alias("d2"),
                     )
                     for m in range(_PQ_M)
                 ]
@@ -1929,7 +1782,7 @@ def ann_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     The greedy loop is inherently sequential, but over a BOUNDED
     shortlist — so the plan splits exactly like kmeans_two_rounds:
     the corpus-scale part (shortlist scoring) is one narrow
-    broadcast-matmul scan with batch-local pruning (the
+    matmul scan with batch-local pruning (the
     ``cosine_knn_exact`` kernel, rank by ROUNDED cos + vec_id so the
     shortlist is engine-stable), and the {_MMR_PICKS} selection steps
     run on the collected ≤{_MMR_POOL}-row frame — a sanctioned bounded
@@ -1961,13 +1814,11 @@ def ann_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     qv = np.asarray(q_rows[0]["embedding"], dtype=np.float64)
     qv /= max(np.linalg.norm(qv), V._EPS)
-    bc = spark.sparkContext.broadcast(qv)
     pool, eps = _MMR_POOL, V._EPS
 
     def score(batches):
         import pandas as pd
 
-        qm = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -1979,7 +1830,7 @@ def ann_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 [np.asarray(e, dtype=np.float64) for e in pdf["embedding"][mask]]
             )
             x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), eps)
-            s = x @ qm
+            s = x @ qv
             r5 = np.copysign(np.floor(np.abs(s) * 1e5 + 0.5), s) / 1e5
             top = np.lexsort((cids[mask], -r5))[:pool]  # local prune
             yield pd.DataFrame(

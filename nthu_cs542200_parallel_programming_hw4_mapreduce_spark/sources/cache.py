@@ -1,15 +1,13 @@
 """Crash-safe materialize-once cache for fixture-derived test tables.
 
-Four queries (delta_scan, delta_time_travel, xml_ingest,
-schema_evolution_scan) convert the parquet fixtures into another
-storage layout once per scale factor and read it back on every
-subsequent run. Before round 8 each carried its own copy of the
-tempdir + md5 + existence-guard boilerplate with three mutually
-inconsistent completeness checks (a commit-log file, a _SUCCESS
-marker, a bare directory) — the bare-directory variant was genuinely
-crash-unsafe: killing the process mid-write left a half-materialized
-cache that every later run trusted forever. This module is the one
-implementation all four share.
+Five queries (delta_scan, delta_time_travel, xml_ingest,
+schema_evolution_scan, orc_scan) convert the parquet fixtures into
+another storage layout once per scale factor and read it back on every
+subsequent run. This module is the one implementation all five share,
+so none keeps its own completeness check: a guard that only tests that
+the directory exists is crash-unsafe, because killing the process
+mid-write leaves a half-materialized cache that every later run trusts
+forever.
 
 Correctness properties:
 

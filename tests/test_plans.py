@@ -1202,18 +1202,67 @@ def test_lsh_plane_literals_roundtrip_duckdb_bit_exact():
 
 
 def test_ivf_centroid_formula_shared_between_parent_and_foothold():
-    """ADVICE r7: ann_ivf_topk and ann_ivf_cell_assign must derive
-    centroids from ONE helper so the foothold pins the parent's actual
-    cell assignment. Pin by source inspection: both bodies call
-    _ivf_coarse_centroids and neither re-implements the clamp."""
+    """Each vector-family rule exists once, pinned on the package's
+    syntax trees:
+
+    * no ``sparkContext.broadcast`` call anywhere — kernels close over
+      their small constants;
+    * ``np.argmin`` and the collect of ``orderBy("vec_id").limit(k)``
+      only in functions/vectors.py (``nearest_centroid``,
+      ``lowest_id_matrix``);
+    * no string constant under plans/ but ``_VEC_OK`` spells the
+      failed-encode gate;
+    * ann_ivf_topk and its foothold ann_ivf_cell_assign both take
+      centroids from ``_ivf_coarse_centroids`` and cells from
+      ``_ivf_cells``, and neither re-implements the stride clamp or the
+      argmax, so the foothold pins the parent's actual cell assignment."""
+    import ast
     import inspect
+    import pathlib
 
     from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.plans import similarity as S
+
+    def attr(node, name, owner):
+        return (isinstance(node, ast.Attribute) and node.attr == name
+                and (getattr(node.value, "id", None) == owner
+                     or getattr(node.value, "attr", None) == owner))
+
+    pkg = pathlib.Path(S.__file__).parents[1]
+    gate = "len(list_filter(embedding, x -> x IS NULL)) = 0"
+    broadcasts, argmins, inits, gates = [], set(), set(), []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        tree = ast.parse(path.read_text())
+        vec_ok = {id(n.value) for n in ast.walk(tree) if isinstance(n, ast.Assign)
+                  and [getattr(t, "id", None) for t in n.targets] == ["_VEC_OK"]}
+        for node in ast.walk(tree):
+            if attr(node, "broadcast", "sparkContext"):
+                broadcasts.append((rel, node.lineno))
+            if attr(node, "argmin", "np"):
+                argmins.add(rel)
+            if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "collect":
+                calls, call = [], node  # the chain the collect ends, outermost first
+                while isinstance(call, ast.Call) and isinstance(call.func, ast.Attribute):
+                    calls.append((call.func.attr, [getattr(a, "value", None) for a in call.args]))
+                    call = call.func.value
+                if any(a[0] == "limit" and b == ("orderBy", ["vec_id"])
+                       for a, b in zip(calls, calls[1:])):
+                    inits.add(rel)
+            if (rel.startswith("plans/") and isinstance(node, ast.Constant)
+                    and isinstance(node.value, str) and gate in node.value
+                    and id(node) not in vec_ok):
+                gates.append((rel, node.lineno))
+    assert broadcasts == []
+    assert argmins == {"functions/vectors.py"}
+    assert inits == {"functions/vectors.py"}
+    assert gates == []
 
     for fn in (S.ann_ivf_topk, S.ann_ivf_cell_assign):
         src = inspect.getsource(fn)
         assert "_ivf_coarse_centroids(" in src, fn.__name__
+        assert "_ivf_cells(" in src, fn.__name__
         assert "isqrt" not in src, f"{fn.__name__} re-implements the stride clamp"
+        assert "np.argmax" not in src, f"{fn.__name__} re-implements the cell kernel"
 
 
 def test_drift_ks_binned_shuffle_is_dimension_sized(spark, sf_dir):

@@ -44,10 +44,13 @@ def test_embedding_cosine_pairs_symmetric_ids(spark, sf_dir):
 def test_kmeans_lloyd_inertia_monotone(spark, sf_dir):
     """Lloyd's invariants: inertia never increases across rounds, every
     vector lands in exactly one of the k clusters, and the summary is
-    deterministic for a fixed fixture."""
+    deterministic for a fixed fixture. The oracle-backed
+    ``kmeans_two_rounds`` replays the loop: its rows are the
+    (vec_id, cluster) rows of the loop's second assignment."""
     from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.catalog import table
     from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.plans.similarity import (
         lloyd_rounds,
+        vec_table,
     )
 
     emb = table(spark, sf_dir, "embeddings")
@@ -59,6 +62,54 @@ def test_kmeans_lloyd_inertia_monotone(spark, sf_dir):
     summary = E.queries()["kmeans_lloyd"](spark, sf_dir).collect()
     assert 1 <= len(summary) <= 8
     assert sum(r["n"] for r in summary) == n
+
+    second, _ = lloyd_rounds(spark, vec_table(spark, sf_dir), max_rounds=2)
+    loop = sorted(map(tuple, second.select("vec_id", "cluster").collect()))
+    two = sorted(map(tuple, E.queries()["kmeans_two_rounds"](spark, sf_dir).collect()))
+    assert len(two) == n and two == loop
+
+
+@pytest.mark.parametrize("blocks", [1, 8])
+def test_nearest_centroid_distances_equal_dd_sqdist(spark, sf_dir, blocks):
+    """The one distance rule, written once per engine: over the same
+    vectors and centroids, ``nearest_centroid``'s minimum distance per
+    block is bit-equal to the minimum of ``dd_sqdist`` in DuckDB, and
+    its argmin is the lowest index at that minimum — whole vectors
+    (k-means) and 8 subspaces (PQ)."""
+    import duckdb
+
+    from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.functions import vectors as V
+    from nthu_cs542200_parallel_programming_hw4_mapreduce_spark.plans.similarity import (
+        _DIM,
+        _VEC_OK,
+        vec_table,
+    )
+
+    k = 16
+    emb = vec_table(spark, sf_dir).select("vec_id", "embedding")
+    cmat = V.lowest_id_matrix(emb, k)
+    sfx = [""] if blocks == 1 else [f"_{m}" for m in range(blocks)]
+    cols = [c for s in sfx for c in (f"cluster{s}", f"dist2{s}")]
+    got = {
+        (r["vec_id"], m): (r[f"cluster{s}"], r[f"dist2{s}"])
+        for r in V.nearest_centroid(emb, cmat, ["vec_id", *cols], blocks).collect()
+        for m, s in enumerate(sfx)
+    }
+    dist = (V.dd_sqdist("e.embedding", "c.ce") if blocks == 1
+            else V.dd_sqdist("e.embedding", "c.ce", _DIM // blocks, "b.m"))
+    want = duckdb.sql(f"""
+        WITH e AS (SELECT vec_id, embedding
+                   FROM read_parquet('{sf_dir}/embeddings.parquet') WHERE {_VEC_OK}),
+        c AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS idx, embedding AS ce
+              FROM (SELECT * FROM e ORDER BY vec_id LIMIT {k}) s),
+        d AS (SELECT e.vec_id, b.m, c.idx, {dist} AS d2
+              FROM e CROSS JOIN (SELECT UNNEST(range({blocks})) AS m) b CROSS JOIN c)
+        SELECT vec_id, m, idx, d2 FROM (
+          SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d2, idx) AS rn
+          FROM d) WHERE rn = 1
+    """).fetchall()
+    assert len(got) == len(want) > 0
+    assert got == {(v, m): (i, d2) for v, m, i, d2 in want}
 
 
 def test_pq_encode_codebook_vectors_encode_to_themselves(spark, sf_dir):
